@@ -51,8 +51,16 @@ def main(sf_dir, out_dir):
             continue
         if len(want) != len(got):
             bad.append((name, f"rows {len(got)} != oracle {len(want)}"))
-        elif sorted(want) != sorted(got):
-            diffs = [(a, b) for a, b in zip(sorted(want), sorted(got)) if a != b]
+            continue
+        try:
+            want, got = sorted(want), sorted(got)
+        except TypeError as e:
+            # a column whose values canon() maps to different Python types
+            # (e.g. DECIMAL on one side, DOUBLE on the other) cannot be ordered
+            bad.append((name, f"rows not comparable (mixed column types): {e}"))
+            continue
+        if want != got:
+            diffs = [(a, b) for a, b in zip(want, got) if a != b]
             bad.append((name, f"{len(diffs)} differing rows, first: {diffs[0]}"))
         else:
             print(f"ok   {name} ({len(want)} rows)")

@@ -3,44 +3,18 @@ package graft.cdc
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.Serialization
 
 import graft.cdc.lake._
 
-/** The replay side of the engine: per-key max-LSN dedup, skew handling, the
-  * epoch loop, checkpoint ledger, and lineage/metrics emission.
+/** The replay side of the engine: the epoch loop, checkpoint ledger, and
+  * lineage/metrics emission. Per-key max-LSN dedup is fused into the lake
+  * merge itself (see `LakeTable.merge`).
   */
 object ingest {
-
-  object Dedup {
-    /** Per-key max-LSN dedup window (north rule; SURVEY.md §2.4 A5).
-      *
-      * Implemented as `groupBy(keys).agg(max_by(struct(*), lsn))` rather than a
-      * row_number window: a declarative aggregate gets map-side partial
-      * aggregation, so duplicate storms on a hot key are collapsed BEFORE the
-      * shuffle — this is the primary skew defense for the dedup stage and it
-      * scales with mappers, not with the hottest key's row count.
-      */
-    def latestPerKey(batch: DataFrame, keys: Seq[String], lsnCol: String = "lsn"): DataFrame = {
-      batch
-        .groupBy(keys.map(col): _*)
-        .agg(max_by(struct(batch.columns.map(col).toIndexedSeq: _*), col(lsnCol)).as("_e"))
-        .select("_e.*")
-    }
-  }
-
-  object Salting {
-    /** Explicit salted repartition for hot-key skew (north rule): spreads each
-      * `keys`-group across `salt` sub-partitions. Use before per-key heavy ops
-      * that can't use partial aggregation. */
-    def saltedRepartition(df: DataFrame, numPartitions: Int, keys: Seq[String], salt: Int): DataFrame = {
-      val saltCol: Column = pmod(xxhash64(keys.map(col) :+ monotonically_increasing_id(): _*), lit(salt))
-      df.repartition(numPartitions, (keys.map(col) :+ saltCol): _*)
-    }
-  }
 
   /** Checkpointed offset/watermark ledger (north rule): tiny JSON state file
     * advanced by atomic rename after each committed epoch; replay resumes from

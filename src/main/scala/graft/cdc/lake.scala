@@ -467,61 +467,18 @@ object lake {
       "fs.file.impl" -> "org.apache.hadoop.fs.RawLocalFileSystem",
       "fs.file.impl.disable.cache" -> "true")
 
-    /** Run one engine ACTION (merge/compact/delta job) with a scan-split
-      * floor of the cluster's parallelism: a merge's map side reads the
-      * touched buckets' base files, and the default split packing
-      * (`maxPartitionBytes` + `openCostInBytes`) happily folds MANY bucket
-      * files into ONE task when they are small — serializing per-file reader
-      * setup on a single core while the rest idle. `minPartitionNum` is
-      * Spark's own floor for exactly this; deriving it from
-      * `defaultParallelism` keeps it scale-adaptive (at production file
-      * sizes the floor is already met and the conf is inert). Session-conf
-      * scoped to the action and restored — engine actions are
-      * single-threaded per table (commit is synchronized). */
-    private def withScanParallelism[T](numBuckets: Int)(f: => T): T = {
-      // AQE is also disabled for the engine's own jobs: the merge/compact
-      // plan shape is statically known (ONE hash shuffle on the key columns,
-      // reduce side = the bucketed write) — adaptive re-planning only adds a
-      // per-shuffle materialization round and its coalescing would fold the
-      // bucket-aligned reduce partitions (the CDC bench harness pins the
-      // same thing for the same reason). The shuffle width is likewise
-      // pinned to the BUCKET COUNT — the engine's reduce side writes one
-      // bucket-aligned group per partition, so bucket count IS the job's
-      // natural width (the harness pins its replay sessions identically,
-      // and at production bucket counts the pin RAISES width to the
-      // layout's parallelism rather than lowering it). All confs restored
-      // after the job.
-      val confs =
-        (if (System.getProperty("graft.engine.minPartitionNum", "1") == "1")
-          Seq("spark.sql.files.minPartitionNum" ->
-            spark.sparkContext.defaultParallelism.toString)
-        else Nil) ++
-        (if (System.getProperty("graft.engine.noAqe", "1") == "1")
-          Seq("spark.sql.adaptive.enabled" -> "false")
-        else Nil) ++
-        (if (System.getProperty("graft.engine.bucketShuffle", "1") == "1")
-          Seq("spark.sql.shuffle.partitions" -> math.max(1, numBuckets).toString)
-        else Nil)
-      if (confs.isEmpty) return f
-      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try f
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
     // ---- read path ---------------------------------------------------------
 
     /** Bucket assignment: hash of the full merge key, so a hot repo spreads
       * across every bucket (skew) while each key still lives in exactly one.
       *
-      * Deliberately `pmod(hash(keys), NB)` — Spark's own Murmur3 shuffle hash —
-      * so that after a join/aggregate that shuffled on the key columns, every
-      * bucket lands wholly inside one task whenever NB and the shuffle
-      * partition count divide each other. The merge write then needs NO extra
-      * repartition: one shuffle saved per epoch, ~NB output files. */
+      * Deliberately `pmod(hash(keys), NB)` — Spark's own Murmur3 shuffle hash.
+      * A hash repartition on the key columns into `n` tasks sends a row to
+      * task `pmod(hash(keys), n)`, and when `n | NB` that equals
+      * `pmod(bucket, n)`: every bucket lands whole in one task. The engine's
+      * write-side aggregates read through such a repartition ([[byKey]],
+      * `n` from [[writeWidth]]), so their bucketed write needs no second
+      * shuffle and writes one file per touched bucket. */
     def bucketExpr(snap: Snapshot): org.apache.spark.sql.Column =
       if (snap.keyColumns.isEmpty)
         // keyless table (append/scan-only — e.g. CTAS without a primary_key
@@ -529,6 +486,23 @@ object lake {
         // write-parallelism spread that preserves the incoming partitioning
         pmod(spark_partition_id(), lit(snap.numBuckets)).cast(IntegerType)
       else pmod(hash(snap.keyColumns.map(col): _*), lit(snap.numBuckets)).cast(IntegerType)
+
+    /** Task count of an engine write touching `touched` buckets: the largest
+      * divisor of the bucket count not above min(defaultParallelism,
+      * touched). Dividing the bucket count keeps each bucket whole in one
+      * task (see [[bucketExpr]]); the cap keeps a 3-row write to 4096 buckets
+      * at a handful of tasks. The count is explicit in the plan, so the
+      * session's shuffle width and AQE coalescing never change it. */
+    private def writeWidth(numBuckets: Int, touched: Int): Int = {
+      val cap = math.max(1, math.min(spark.sparkContext.defaultParallelism, touched))
+      (cap to 1 by -1).find(numBuckets % _ == 0).get
+    }
+
+    /** `df` hash-repartitioned on the key columns into [[writeWidth]] tasks:
+      * the input of a write-side aggregate, whose key distribution it
+      * satisfies, so the aggregate adds no exchange of its own. */
+    private def byKey(df: DataFrame, snap: Snapshot, touched: Int): DataFrame =
+      df.repartition(writeWidth(snap.numBuckets, touched), snap.keyColumns.map(col): _*)
 
     /** Expose the current table state to Spark SQL as a temp view
       * (`spark.sql("SELECT ... FROM <viewName>")`). Re-call after commits to
@@ -594,15 +568,18 @@ object lake {
       readFilesWithLsn(snap, kept).drop("_lsn")
     }
 
-    private def readFilesWithLsn(snap: Snapshot, wanted: Seq[DataFile]): DataFrame = {
-      val base = readBase(snap, wanted.filter(_.kind == "base"))
-      val deltaFiles = wanted.filter(_.kind == "delta")
-      if (deltaFiles.isEmpty) base
-      else mergeExpr(base.select(
-          (Seq(col("_lsn").as("lsn"), lit(null).cast(StringType).as("op")) ++
-            snap.schema.fieldNames.map(col)): _*)
-          .unionByName(readDeltas(snap, deltaFiles)), snap)
-    }
+    private def readFilesWithLsn(snap: Snapshot, wanted: Seq[DataFile]): DataFrame =
+      if (wanted.forall(_.kind == "base")) readBase(snap, wanted)
+      else mergeExpr(storedChanges(snap, wanted), snap)
+
+    /** The rows stored in `files` as change rows (lsn, op, payload...), the
+      * input shape of [[mergeExpr]]: base rows at their stored row LSN,
+      * delta rows at their own. */
+    private def storedChanges(snap: Snapshot, files: Seq[DataFile]): DataFrame =
+      readBase(snap, files.filter(_.kind == "base"))
+        .select((Seq(col("_lsn").as("lsn"), lit(null).cast(StringType).as("op")) ++
+          snap.schema.fieldNames.map(col)): _*)
+        .unionByName(readDeltas(snap, files.filter(_.kind == "delta")))
 
     /** The read-side half of schema conformance, shared by the base and
       * delta readers: cast columns the file carries, null-fill columns
@@ -696,15 +673,15 @@ object lake {
       val cols = metaCols ++ snap.schema.fieldNames.map(col)
       val bucketed = df.withColumn("_b", bucketExpr(snap))
         .select((cols :+ col("_b")).toSeq: _*)
-      // merge output is already hash-partitioned on the key columns, which
-      // determines the bucket — skip the extra shuffle in that case.
-      // When we DO repartition, pin the partition count to numBuckets: there
-      // are only numBuckets distinct _b values, so session-default shuffle
-      // partitions beyond that are guaranteed-empty tasks (pure scheduling
-      // overhead on small appends; at scale the bucket count IS the write's
-      // natural parallelism ceiling either way).
+      // merge-path output arrives laid out by [[byKey]], whose width n
+      // divides numBuckets, so every bucket is already whole in one task.
+      // Everything else is repartitioned on _b into the same writeWidth —
+      // one task per bucket group, never more tasks than the cluster runs at
+      // once, whatever the bucket count.
       val laidOut0 =
-        if (repartitionByBucket) bucketed.repartition(snap.numBuckets, col("_b")) else bucketed
+        if (repartitionByBucket)
+          bucketed.repartition(writeWidth(snap.numBuckets, snap.numBuckets), col("_b"))
+        else bucketed
       // cluster-on-write: explicit args (the cluster() op) win; otherwise
       // BASE writes honor the table's `graft.cluster.by` policy so the
       // layout persists across merges/compactions instead of decaying.
@@ -717,19 +694,14 @@ object lake {
       val effCap = maxRowsPerFile.orElse(polCap)
       // clustering (see [[cluster]]): rows arrive at the dynamic-partition
       // writer sorted by (_b, sortCols), so each maxRecordsPerFile split is
-      // a contiguous SORTED run — per-file bounds come out tight and
-      // pairwise disjoint when a bucket lives in one task partition
-      // (repartitionByBucket / cluster / compact / rebucket); merge-path
-      // writes (already key-partitioned, no re-shuffle) may split a bucket
-      // across tasks, where per-file bounds stay tight but can overlap
-      // between tasks' files — skipping is may-match, so still sound
+      // a contiguous SORTED run — and since every write path keeps a bucket
+      // in one task, per-file bounds come out tight and pairwise disjoint
       val laidOut =
         if (effSort.isEmpty) laidOut0
         else laidOut0.sortWithinPartitions((col("_b") +: effSort.map(col)).toSeq: _*)
       val writer = effCap.foldLeft(laidOut.write.options(rawLocalFsOptions))(
         (w, n) => w.option("maxRecordsPerFile", n.toString))
-      timed("write:parquet")(withScanParallelism(snap.numBuckets)(
-        writer.partitionBy("_b").parquet(outDir.toString)))
+      timed("write:parquet")(writer.partitionBy("_b").parquet(outDir.toString))
       val paths = timed("write:list")(listParquet(outDir))
       // footer reads are driver-side; parallelize so commit latency stays
       // O(files / threads), not O(files)
@@ -1004,10 +976,10 @@ object lake {
       * graft.functions.MaxByRow — the built-in max_by(struct, lsn) degrades
       * to SortAggregate for wide payloads) -> drop keys whose winner is a
       * delete -> bucketed write. Dedup, matched-update, not-matched-insert
-      * and delete collapse into one partial-aggregatable shuffle: a duplicate
-      * storm on a hot key combines map-side, and the aggregate's hash
-      * partitioning on the key columns is already bucket-aligned for the
-      * write (no extra repartition). Per-bucket lineage stats ride along via
+      * and delete collapse into one aggregate over ONE explicit hash
+      * repartition on the key columns ([[byKey]]); its width divides the
+      * bucket count, so every bucket is whole in one task and the write needs
+      * no extra repartition. Per-bucket lineage stats ride along via
       * Dataset.observe — no separate pass.
       *
       * Sparse epochs (`assumeFullTouch = false` and no density hint): a
@@ -1075,16 +1047,14 @@ object lake {
       // chunked mode: only the touched buckets' manifests are read — the
       // sparse epoch never materializes the full file list driver-side
       val wanted = filesOfBuckets(cur, Some(touched))
-      // base rows re-enter the race at their STORED row LSN (see mergeExpr)
-      val base = readBase(cur, wanted.filter(_.kind == "base"))
-        .select((Seq(col("_lsn").as("lsn"), lit(null).cast(StringType).as("op")) ++ payload.map(col)): _*)
-      val deltas = readDeltas(cur, wanted.filter(_.kind == "delta"))
-      val merged = mergeExpr(base.unionByName(deltas).unionByName(batch.select(ordered: _*)), cur)
+      val merged = mergeExpr(
+        byKey(storedChanges(cur, wanted).unionByName(batch.select(ordered: _*)), cur, touched.size),
+        cur)
 
       val nextVersion = cur.version + 1
       timed("merge:plan")(merged.queryExecution.executedPlan)
-      // the aggregate hash-partitioned on the key columns, which determines
-      // the bucket — no repartition before the bucketed write
+      // byKey laid the aggregate out bucket-whole — no repartition before
+      // the bucketed write
       val rawFiles = timed("merge:agg+write")(writeBucketed(merged, cur, nextVersion,
         repartitionByBucket = false, withRowLsn = true))
       val newFiles = rawFiles.map(f =>
@@ -1140,10 +1110,7 @@ object lake {
         .observe(obs, aggs.head, aggs.tail: _*)
         .drop("_ob")
       val curFiles = filesOf(cur) // dense = full touch: resolving all is the job
-      val base = readBase(cur, curFiles.filter(_.kind == "base"))
-        .select((Seq(col("_lsn").as("lsn"), lit(null).cast(StringType).as("op")) ++ payload.map(col)): _*)
-      val deltas = readDeltas(cur, curFiles.filter(_.kind == "delta"))
-      val merged = mergeExpr(base.unionByName(deltas).unionByName(batchObs), cur)
+      val merged = mergeExpr(byKey(storedChanges(cur, curFiles).unionByName(batchObs), cur, nb), cur)
 
       val nextVersion = cur.version + 1
       val rawFiles = timed("merge:agg+write")(writeBucketed(merged, cur, nextVersion,
@@ -1258,7 +1225,7 @@ object lake {
         }
 
       // per-key winners incl. delete tombstones, keeping (lsn, op)
-      val winners = source
+      val winners = byKey(source, cur, if (fuseStats) cur.numBuckets else statsRows.length)
         .groupBy(keys.map(col): _*)
         .agg(graft.functions.MaxByRow.maxByRow(
           struct((Seq(col("lsn"), col("op")) ++ nonKey.map(col)): _*), col("lsn")).as("_e"))
@@ -1345,8 +1312,9 @@ object lake {
         only.map(b.intersect).getOrElse(b)
       }
       if (deltaBuckets.isEmpty) return 0
-      val data = readBucketsWithLsn(cur, Some(deltaBuckets)) // fused apply, row LSNs kept
       val olds = filesOfBuckets(cur, Some(deltaBuckets))
+      // fused apply, row LSNs kept, laid out bucket-whole for the write
+      val data = mergeExpr(byKey(storedChanges(cur, olds), cur, deltaBuckets.size), cur)
       val newFiles = writeBucketed(data, cur, cur.version + 1, repartitionByBucket = false,
         withRowLsn = true)
         .map { f =>

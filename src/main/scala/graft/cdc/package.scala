@@ -18,7 +18,7 @@ package graft
   *  - observability: per-bucket lineage and per-epoch metrics tables,
   *    optional per-epoch sha256 content checksums (verified replay)
   *
-  * Scale shape: one partial-aggregatable wide shuffle per epoch (see
+  * Scale shape: one wide shuffle per epoch, its width set in the plan (see
   * [[cdc.lake.LakeTable.merge]]), bucket-pruned target reads for sparse
   * epochs, O(manifest) driver-side commits, no driver data path. Two apply
   * modes: copy-on-write (read-optimal) and merge-on-read delta appends

@@ -91,9 +91,9 @@ object streaming {
 
   /** Cross-epoch stateful dedup: per-key last-applied-LSN state via
     * `flatMapGroupsWithState`, emitting only events STRICTLY newer than the
-    * key's high-watermark. The in-batch max-LSN window (Dedup.latestPerKey /
-    * the fused merge aggregation) is order-insensitive WITHIN an epoch; this
-    * operator extends that guarantee ACROSS micro-batches for tails that can
+    * key's high-watermark. The in-batch max-LSN window (the fused merge
+    * aggregation) is order-insensitive WITHIN an epoch; this operator
+    * extends that guarantee ACROSS micro-batches for tails that can
     * redeliver or interleave old LSNs between epochs (at-least-once sources).
     *
     * State is O(1) per key (one long) and lives in the Structured Streaming
@@ -186,8 +186,7 @@ object streaming {
     // the sidecars only double the per-batch metadata ops (each one a
     // create+chmod+rename on stores with no native Hadoop lib). Scoped to
     // THIS query: the session value is captured by the query at start() and
-    // restored right after (set -Dgraft.stream.checkpointChecksum=1 to keep
-    // Spark's sidecars).
+    // restored right after.
     // Same layer one level down: the checkpoint managers write through
     // Hadoop's FileContext, whose local binding (`LocalFs`) is a ChecksumFs
     // — every state delta / offset / commit file gets a `.crc` sidecar and
@@ -199,8 +198,6 @@ object streaming {
     val confs = Seq(
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       "fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.RawLocalFs")
-    if (System.getProperty("graft.stream.checkpointChecksum", "0") == "1")
-      return startReplayStream(events, engine, checkpointDir, trigger, watermarkFile)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try startReplayStream(events, engine, checkpointDir, trigger, watermarkFile)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -68,11 +68,16 @@ object cdcq {
     * dense-merge path (per-bucket stats ride the merge job as observed
     * metrics) AND skips the per-epoch metrics count() scan — one Spark job
     * per epoch instead of three (guide §1.2: remove unnecessary passes).
-    * Exact by construction: floor(lsn / per) == e iff e*per <= lsn <
+    * Exact by construction: lsn div per == e iff e*per <= lsn <
     * (e+1)*per, the identical range the epoch loop filters on. */
   private def epochCounts(changes: DataFrame, per: Long): Map[Int, Long] =
-    changes.groupBy(floor(col("lsn") / per).cast("int").as("_e"))
+    changes.groupBy(epochOf(col("lsn"), per).cast("int").as("_e"))
       .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  /** Epoch of a (non-negative) LSN at `per` LSNs per epoch: exact long
+    * division — a double `lsn / per` rounds once LSNs pass 2^53. */
+  private[graft] def epochOf(lsn: Column, per: Long): Column =
+    call_function("div", lsn, lit(per))
 
 
   /** Map the events table to change events with the north-rule key shape. */
@@ -369,15 +374,16 @@ object cdcq {
     // the epoch-aligned repartition), then moved into the tail dir. The
     // previous shape ran one coalesce(1) job per epoch.
     val stage = root.resolve("stage")
-    val tagged = changes.withColumn("_ep", floor(col("lsn") / per))
+    val tagged = changes.withColumn("_ep", epochOf(col("lsn"), per))
       .filter(col("_ep") < epochs)
     val redelivered = tagged.filter(pmod(col("lsn"), lit(7)) === 0 && col("_ep") < epochs - 1)
       .withColumn("_ep", col("_ep") + 1)
     tagged.unionByName(redelivered)
       .repartition(epochs, col("_ep"))
       .write.partitionBy("_ep").parquet(stage.toString)
-    (0 until epochs).foreach { e =>
-      val dir = stage.resolve(s"_ep=$e")
+    // an epoch with no events stages no directory and gets no tail file
+    for (e <- 0 until epochs; dir = stage.resolve(s"_ep=$e")
+        if java.nio.file.Files.isDirectory(dir)) {
       val s = java.nio.file.Files.list(dir)
       val parts =
         try s.filter(p => p.toString.endsWith(".parquet"))
@@ -591,8 +597,7 @@ object cdcq {
     // per-epoch counts (one aggregate over the cached batch) let the engine
     // take the dense path, where the gate aggregates ride the merge job as
     // observed metrics — a gated epoch costs ONE scan, not two
-    val perEpochCounts = changes.groupBy(floor(col("lsn") / per).cast("int").as("_e"))
-      .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val perEpochCounts = epochCounts(changes, per)
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
         changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,

@@ -1,0 +1,126 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+import graft.cdc._
+import graft.cdc.lake._
+import graft.cdc.model._
+
+/** Engine write jobs carry their shape in their own plans: they leave the
+  * session's confs alone, and they keep one file per touched bucket under
+  * whatever AQE and shuffle width the session runs with. */
+class EngineJobShapeSpec extends SparkSuite {
+
+  private val aqeKey = "spark.sql.adaptive.enabled"
+  private val widthKey = "spark.sql.shuffle.partitions"
+
+  /** Run `f` with session confs set, restoring the previous values after. */
+  private def withConfs[T](confs: (String, String)*)(f: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Upsert events for paths `ids`, LSNs from `lsn0`, in the RepoRow shape. */
+  private def events(ids: Seq[Long], lsn0: Long): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (lsn0 + i, "U", s"r${i % 7}", s"p$i", s"c$lsn0-$i", "scala", s"x$lsn0-$i"))
+      .toDF("lsn", "op", "repo", "path", "commit", "lang", "content")
+  }
+
+  private def bucketsOf(t: LakeTable, df: DataFrame): Set[Int] =
+    df.select(t.bucketExpr(t.snapshot)).distinct().collect().map(_.getInt(0)).toSet
+
+  test("a merge leaves the session alone: a concurrent user query keeps its AQE and shuffle width") {
+    withConfs(aqeKey -> "true", widthKey -> "6") {
+      // 4096 buckets and ~1.5k touched keys: a merge long enough for the
+      // user thread to plan many queries while the engine's jobs run
+      val table = LakeTable.createIfNotExists(spark, tmpDir("iso"), "t",
+        RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 4096)
+      val batch = gen.changeEvents(spark, gen.GenConfig(n = 3000, nKeys = 2000, numPartitions = 4))
+      @volatile var result: Either[Throwable, CommitResult] = null
+      val merger = new Thread(() =>
+        result = try Right(table.merge(batch, epochId = 0)) catch { case e: Throwable => Left(e) })
+      merger.start()
+      def exchangeWidth(p: SparkPlan): Option[Int] =
+        p.collectFirst { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+      val seen = Seq.newBuilder[(String, String, Boolean, Option[Int])]
+      while (merger.isAlive) {
+        val plan = spark.range(1000).groupBy(col("id") % 10).count().queryExecution.executedPlan
+        val width = plan match {
+          case a: AdaptiveSparkPlanExec => exchangeWidth(a.executedPlan) // the initial plan
+          case p => exchangeWidth(p)
+        }
+        seen += ((spark.conf.get(aqeKey), spark.conf.get(widthKey),
+          plan.isInstanceOf[AdaptiveSparkPlanExec], width))
+      }
+      merger.join()
+      result.left.foreach(e => throw e)
+      assert(result.toOption.get.committed)
+      val samples = seen.result()
+      assert(samples.nonEmpty, "the user thread must plan at least once while the merge runs")
+      info(s"${samples.size} user-query plans during the merge")
+      val off = samples.filterNot(_ == (("true", "6", true, Some(6))))
+      assert(off.size == 0, s"of ${samples.size} user-query samples, these saw engine confs: " +
+        off.distinct.take(3).mkString(", "))
+    }
+  }
+
+  for (nb <- Seq(32, 256)) {
+    test(s"$nb buckets under AQE and shuffle width 200: every write leaves one new file per touched bucket") {
+      withConfs(aqeKey -> "true", widthKey -> "200") {
+        val t = LakeTable.createIfNotExists(spark, tmpDir(s"layout$nb"), "t",
+          RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = nb)
+        /** Run `write`, then assert its new files are one per bucket of `expected`. */
+        def oneFilePerBucket(what: String, expected: => Set[Int])(write: => Unit): Unit = {
+          val before = t.filesOf(t.snapshot).map(_.path).toSet
+          write
+          val added = t.filesOf(t.snapshot).filterNot(f => before(f.path))
+          val perBucket = added.groupBy(_.bucket).map { case (b, fs) => b -> fs.size }
+          assert(perBucket.values.forall(_ == 1),
+            s"$what: buckets with several new files: ${perBucket.filter(_._2 > 1)}")
+          assert(perBucket.keySet == expected,
+            s"$what: wrote buckets ${perBucket.keySet.size}, touched ${expected.size}")
+        }
+        val all = (0L until 12L * nb).toSeq
+        val appended = events(all, 0).drop("lsn", "op")
+        val everyBucket = bucketsOf(t, appended)
+        assert(everyBucket.size == nb, "the seed rows must cover every bucket")
+        oneFilePerBucket("append", everyBucket)(assert(t.append(appended).committed))
+
+        val sparse = events(all.filter(_ % 19 == 0).take(20), 1000000)
+        oneFilePerBucket("sparse merge", bucketsOf(t, sparse))(
+          assert(t.merge(sparse, epochId = 1).committed))
+
+        val dense = events(all, 2000000)
+        oneFilePerBucket("dense merge", everyBucket)(
+          assert(t.merge(dense, epochId = 2, assumeFullTouch = true).committed))
+
+        val deltaIds = all.filter(_ % 13 == 5).take(30)
+        val deltas = events(deltaIds, 3000000)
+        val deltaBuckets = bucketsOf(t, deltas)
+        oneFilePerBucket("deltaAppend", deltaBuckets)(
+          assert(t.deltaAppend(deltas, epochId = 3).committed))
+        oneFilePerBucket("compactDeltas", deltaBuckets)(
+          assert(t.compactDeltas() == deltaBuckets.size))
+
+        // the layout checks say nothing if the rows are wrong
+        val rows = t.read().select("path", "content").collect()
+          .map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(rows.size == all.size, s"${rows.size} rows, want ${all.size}")
+        val wrong = all.filterNot { i =>
+          rows.get(s"p$i").contains(if (deltaIds.contains(i)) s"x3000000-$i" else s"x2000000-$i")
+        }
+        assert(wrong.isEmpty, s"${wrong.size} paths hold the wrong content, e.g. p${wrong.headOption}")
+      }
+    }
+  }
+}

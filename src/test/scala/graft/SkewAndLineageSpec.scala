@@ -45,13 +45,26 @@ class SkewAndLineageSpec extends SparkSuite {
     assert(mx <= mn * 6 + 10, s"bucket row imbalance: $byBucket")
   }
 
-  test("salted repartition spreads a hot key across partitions") {
-    val df = spark.range(0, 10000).toDF("lsn")
-      .withColumn("repo", lit("hot")).withColumn("path", lit("p"))
-    val salted = Salting.saltedRepartition(df, 8, Seq("repo", "path"), salt = 8)
-    import spark.implicits._
-    val counts = salted.mapPartitions(it => Iterator(it.size)).collect().filter(_ > 0)
-    assert(counts.length > 1, s"hot key stayed in one partition: ${counts.toSeq}")
+  test("hot repo: its paths spread across every bucket (full-key bucket hashing)") {
+    // one repo owns every key: a repo-only bucket hash would pin it to one
+    // bucket; hashing the full (repo, path) key must spread it
+    val n = 4000
+    val ev = spark.range(0, n, 1, 4).toDF("lsn")
+      .withColumn("repo", lit("hot/repo"))
+      .withColumn("path", concat(lit("p"), col("lsn")))
+      .withColumn("op", lit("I"))
+      .withColumn("commit", lower(hex(xxhash64(col("lsn")))))
+      .withColumn("lang", lit("scala"))
+      .withColumn("content", concat(lit("content-"), col("lsn")))
+    val nb = 8
+    val table = LakeTable.createIfNotExists(spark, tmpDir("hot-repo"), "t",
+      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = nb)
+    val engine = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1))
+    assert(engine.applyEpoch(ev, 0).committed)
+    val rowsByBucket = table.snapshot.files.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
+    assert(rowsByBucket.size == nb, s"hot repo landed in ${rowsByBucket.size} of $nb buckets")
+    assert(rowsByBucket.values.sum == n)
+    assert(rowsByBucket.values.max <= 2 * n / nb, s"bucket row imbalance: $rowsByBucket")
   }
 
   test("lineage + metrics lake tables accumulate per epoch") {

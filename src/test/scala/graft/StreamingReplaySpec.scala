@@ -104,6 +104,31 @@ class StreamingReplaySpec extends SparkSuite {
       s"streamed replay must equal the batch replay (${got.size} vs ${expected.size})")
   }
 
+  test("q41 path: an epoch with no events stages no tail file and the replay still converges") {
+    // event ids 1, 2, 3, 31, 32, 39 in 4 epochs of 10 LSNs: epochs 1 and 2
+    // are empty, and no id is a multiple of 7, so no redelivery refills them
+    import spark.implicits._
+    val dir = tmpDir("cdcq-gap")
+    Seq(1L, 2L, 3L, 31L, 32L, 39L).map(id => (id, new java.sql.Timestamp(id * 1000L), id % 3,
+      if (id == 32L) "error" else "click", id.toDouble, s"props-$id"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val got = ops.cdcq.streamReplay(spark, dir).collect().toSeq
+    val expected = ops.cdcq.replay(spark, dir).collect().toSeq
+    assert(got.nonEmpty && got == expected,
+      s"streamed replay must equal the batch replay (${got.size} vs ${expected.size})")
+  }
+
+  test("epoch tagging is exact long division for LSNs above 2^53") {
+    // 2^54 - 1 is not a double: a double division rounds it up to 2^54
+    // and tags the next epoch
+    val lsn = (1L << 54) - 1
+    val tag = spark.range(1).select(ops.cdcq.epochOf(lit(lsn), 2L)).head().getLong(0)
+    assert(tag == (1L << 53) - 1, s"epoch of $lsn at 2 per epoch: $tag")
+    assert(spark.range(1).select(floor(lit(lsn) / 2L)).head().getLong(0) != tag,
+      "the double division this replaces must round here, or the case tests nothing")
+  }
+
   test("stateful dedup TTL: state below the lsn watermark evicts; late events stay correct") {
     import spark.implicits._
     val srcDir = tmpDir("ttl-src")
