@@ -196,8 +196,8 @@ object ingest {
       //      gated dense epoch is ONE Spark job, no separate gate scan; an
       //      error-level failure aborts pre-commit and the written files are
       //      unreferenced, vacuum-able orphans.
-      //    - SEPARATE (sparse / >64-bucket / kill-switched, same predicate
-      //      as stats fusion via willFuseStats): one aggregate job before the
+      //    - SEPARATE (sparse or > 32 buckets, the same predicate as stats
+      //      fusion: willFuseStats): one aggregate job before the
       //      write — an upstream Observation would drag every gated column
       //      into the sparse path's narrow stats pre-pass scan, and aborting
       //      before the write is strictly cheaper there anyway.
@@ -217,8 +217,9 @@ object ingest {
       // 3.+4. copy-on-write merge with the per-key max-LSN dedup FUSED into
       //    the merge aggregation (one wide shuffle; see LakeTable.merge),
       //    then the fenced commit. Epochs known to be dense (>= 32 events per
-      //    bucket on average) skip the touched-bucket pre-pass entirely
-      //    (per-bucket stats ride the merge job as observed metrics).
+      //    bucket on average) on tables of at most 32 buckets skip the
+      //    touched-bucket pre-pass entirely (per-bucket stats ride the merge
+      //    job as observed metrics).
       //    Verified replay fuses its sha256 checksum into the SAME job the
       //    same way — verify mode costs sha CPU, not an extra batch scan.
       val csObs =

@@ -24,9 +24,10 @@ import org.json4s.jackson.Serialization
   *   meta/_CURRENT        pointer to latest version (atomic rename)
   * }}}
   *
-  * Commit protocol: a snapshot JSON is written to a temp name then moved with
-  * ATOMIC_MOVE onto `v<N>.json` (fails if a concurrent writer got there first),
-  * then `_CURRENT` is advanced. A crash between the data write and the meta
+  * Commit protocol: a snapshot JSON is written to a temp name then claimed as
+  * `v<N>.json` with a hard link, which fails if a concurrent writer got there
+  * first (a `CREATE_NEW` write where the filesystem has no hard links), then
+  * `_CURRENT` is advanced. A crash between the data write and the meta
   * commit leaves orphan files that no snapshot references — harmless, GC-able.
   *
   * Exactly-once: each snapshot embeds the `epochId` that produced it; a commit
@@ -163,6 +164,10 @@ object lake {
       files_removed: Int,
       committed_at: java.sql.Timestamp)
 
+  /** One bucket's share of an apply batch: its lsn range and its upsert and
+    * delete counts (file stamping + lineage). */
+  private final case class BucketStats(lsnMin: Long, lsnMax: Long, upserts: Long, deletes: Long)
+
   final case class CommitResult(
       committed: Boolean,
       snapshot: Snapshot,
@@ -190,15 +195,6 @@ object lake {
   object Vacuum {
     val lastMaxTaskRefs = new java.util.concurrent.atomic.AtomicInteger(-1)
   }
-
-  /** Phase timing, enabled with -Dgraft.debug.timing=1 (dev/bench only). */
-  private[cdc] def timed[T](label: String)(f: => T): T =
-    if (System.getProperty("graft.debug.timing", "0") == "1") {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[timing] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    } else f
 
   object LakeTable {
     /** Idempotent create (reference: src/delta_engine/execute/ddl.py:47-63). */
@@ -701,8 +697,8 @@ object lake {
         else laidOut0.sortWithinPartitions((col("_b") +: effSort.map(col)).toSeq: _*)
       val writer = effCap.foldLeft(laidOut.write.options(rawLocalFsOptions))(
         (w, n) => w.option("maxRecordsPerFile", n.toString))
-      timed("write:parquet")(writer.partitionBy("_b").parquet(outDir.toString))
-      val paths = timed("write:list")(listParquet(outDir))
+      writer.partitionBy("_b").parquet(outDir.toString)
+      val paths = listParquet(outDir)
       // footer reads are driver-side; parallelize so commit latency stays
       // O(files / threads), not O(files)
       import scala.jdk.CollectionConverters._
@@ -798,8 +794,7 @@ object lake {
       // per epoch measurably costs MORE than the one narrow stats pre-pass
       // it replaces (A/B on the 64-bucket rebucket replay); at <= 32 the
       // fusion still wins (one job per epoch, gate/checksum piggyback)
-      assumeFullTouch && snap.numBuckets <= 32 &&
-        System.getProperty("graft.merge.fuseStats", "1") == "1"
+      assumeFullTouch && snap.numBuckets <= 32
 
     /** Fold removed delta files' lsn range into the snapshot-level
       * high-watermark (see Snapshot.foldedLsnHigh). */
@@ -980,15 +975,17 @@ object lake {
       * repartition on the key columns ([[byKey]]); its width divides the
       * bucket count, so every bucket is whole in one task and the write needs
       * no extra repartition. Per-bucket lineage stats ride along via
-      * Dataset.observe — no separate pass.
+      * Dataset.observe — no separate pass ([[batchStats]]). A dense epoch
+      * reads and rewrites every bucket; a bucket its batch missed keeps its
+      * old lsn range and gets no lineage row.
       *
-      * Sparse epochs (`assumeFullTouch = false` and no density hint): a
-      * narrow stats pass over (repo, path, lsn, op) — content column-pruned
-      * out of the scan — first computes the touched-bucket set, so only those
-      * buckets' files are read and rewritten; untouched buckets carry over by
-      * manifest reference (zero data movement). This is the path that matters
-      * at 100 TB: epoch cost scales with the batch's key spread, not with
-      * table size.
+      * Sparse epochs (`assumeFullTouch = false`, or more than 32 buckets —
+      * see [[willFuseStats]]): a narrow stats pass over (repo, path, lsn, op)
+      * — content column-pruned out of the scan — first computes the
+      * touched-bucket set, so only those buckets' files are read and
+      * rewritten; untouched buckets carry over by manifest reference (zero
+      * data movement). This is the path that matters at 100 TB: epoch cost
+      * scales with the batch's key spread, not with table size.
       *
       * Ordering contract (binlog tail): epoch ids are fenced monotonic, and
       * within a batch order and duplication are free (max-LSN resolution).
@@ -1013,89 +1010,50 @@ object lake {
       val cur = snapshot
       requireMergeableSchema(cur)
       if (epochId >= 0 && epochId <= cur.epochId) return CommitResult(committed = false, cur, Nil)
-      // Dense epochs (most buckets touched) skip the stats pre-pass entirely:
-      // the per-bucket stats ride the merge job itself as observed metrics —
-      // ONE job per epoch, no second scan of the batch. The observed-metrics
-      // expression set is linear in numBuckets, so this fusion applies up to
-      // 64 buckets; beyond that (production: 4096+) the narrow aggregate
-      // pre-pass below stays the right shape (its cost amortizes over the
-      // proportionally larger epoch).
-      if (willFuseStats(cur, assumeFullTouch))
-        return mergeDense(batch, epochId, cur, preCommit)
-      val keys = cur.keyColumns
-      val payload = cur.schema.fieldNames.toSeq
-      val nonKey = payload.filterNot(keys.contains)
-
-      // per-bucket batch stats, one narrow aggregate job (content is
-      // column-pruned out of the scan). Dense epochs aggregate RAW events
-      // straight to <= numBuckets groups — fully map-side combinable, no
-      // per-key stage. Sparse epochs first reduce to per-key winners so the
-      // lineage counts are exact applied rows (and the touched-bucket set
-      // prunes the target read).
-      val statsRows = perBucketStats(batch, cur, assumeFullTouch)
-      if (statsRows.isEmpty) return CommitResult(committed = false, cur, Nil)
-      val touched: Set[Int] = statsRows.map(_.getAs[Int]("_b")).toSet
-      val lsnByBucket = statsRows.map(r =>
-        r.getAs[Int]("_b") -> (r.getAs[Long]("lmin"), r.getAs[Long]("lmax"))).toMap
-      val lsnHigh = lsnByBucket.values.map(_._2).max
-
+      val (leg, touched, statsOf) = batchStats(batch, cur, assumeFullTouch)
+      if (touched.exists(_.isEmpty)) return CommitResult(committed = false, cur, Nil) // empty batch
       // fused dedup+merge: base rows join the race at their stored row _lsn,
       // MoR delta rows at their own LSN, batch events at theirs — one
       // aggregation resolves everything by true log position (a CoW merge
-      // also compacts any deltas of touched buckets)
-      val ordered = (Seq(col("lsn"), col("op")) ++ payload.map(col))
-      // chunked mode: only the touched buckets' manifests are read — the
-      // sparse epoch never materializes the full file list driver-side
-      val wanted = filesOfBuckets(cur, Some(touched))
-      val merged = mergeExpr(
-        byKey(storedChanges(cur, wanted).unionByName(batch.select(ordered: _*)), cur, touched.size),
-        cur)
-
-      val nextVersion = cur.version + 1
-      timed("merge:plan")(merged.queryExecution.executedPlan)
+      // also compacts any deltas of the buckets it rewrites). Chunked mode
+      // reads only the touched buckets' manifests: a sparse epoch never
+      // materializes the full file list driver-side.
+      val olds = filesOfBuckets(cur, touched)
+      val merged = mergeExpr(byKey(storedChanges(cur, olds).unionByName(leg), cur,
+        touched.fold(cur.numBuckets)(_.size)), cur)
       // byKey laid the aggregate out bucket-whole — no repartition before
       // the bucketed write
-      val rawFiles = timed("merge:agg+write")(writeBucketed(merged, cur, nextVersion,
-        repartitionByBucket = false, withRowLsn = true))
-      val newFiles = rawFiles.map(f =>
-        f.copy(lsnMin = lsnByBucket.get(f.bucket).map(_._1).getOrElse(-1L),
-          lsnMax = lsnByBucket.get(f.bucket).map(_._2).getOrElse(-1L)))
-      val (nf, nm) = nextFileState(cur, touched, newFiles)
-      val next = cur.copy(version = nextVersion, epochId = math.max(epochId, cur.epochId),
-        lsnHigh = math.max(lsnHigh, cur.lsnHigh), files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, wanted))
-      preCommit()
-      val ok = commit(next, fence = epochId >= 0)
-      val removedByBucket = wanted.groupBy(_.bucket)
-      val lin = statsRows.map { r =>
-        val b = r.getAs[Int]("_b")
-        LineageEntry(name, nextVersion, epochId, b,
-          r.getAs[Long]("lmin"), r.getAs[Long]("lmax"),
-          r.getAs[Long]("ups"), r.getAs[Long]("dels"),
-          newFiles.count(_.bucket == b), removedByBucket.get(b).map(_.size).getOrElse(0), nowTs())
-      }.toSeq
-      CommitResult(ok, if (ok) next else cur, if (ok) lin else Nil)
+      val written = writeBucketed(merged, cur, cur.version + 1,
+        repartitionByBucket = false, withRowLsn = true)
+      preCommit() // batch Observations have resolved; abort here = zero committed state
+      commitApply(cur, epochId, statsOf(), written, olds)
     }
 
-    /** Dense-epoch merge: all buckets are read and rewritten, and the
-      * per-bucket batch stats (lsn ranges, upsert/delete counts — lineage +
-      * file stamping) are collected as OBSERVED METRICS on the batch leg of
-      * the one merge job. Untouched buckets (no batch rows) are rewritten
-      * too (they were read anyway under the full-touch assumption) and keep
-      * their previous lsn-range stamps.
+    /** The batch leg of an apply job (lsn, op, payload), the buckets the job
+      * reads and rewrites (None = every bucket), and the batch's per-bucket
+      * stats, resolvable once the write job has run.
       *
-      * Contract: `assumeFullTouch` callers assert a non-trivial batch (the
+      * Fused ([[willFuseStats]]): the stats are OBSERVED METRICS on the leg,
+      * four aggregates per bucket in one Observation, so the epoch is one
+      * job with no batch pre-pass, and the job reads and rewrites every
+      * bucket. Contract: `dense` callers assert a non-trivial batch (the
       * ReplayEngine gates it on knownInputCount >= numBuckets*32). An
-      * actually-empty batch stays CORRECT — the commit is skipped when the
-      * observed counts are zero — but the full-table rewrite has already run
-      * and its files are left as vacuum-able orphans; emptiness cannot be
-      * known earlier without a pre-pass, which is the very job this path
-      * exists to avoid. */
-    private def mergeDense(batch: DataFrame, epochId: Long, cur: Snapshot,
-        preCommit: () => Unit = () => ()): CommitResult = {
-      val payload = cur.schema.fieldNames.toSeq
+      * actually-empty batch stays CORRECT — zero observed counts skip the
+      * commit — but its already-written files are left as vacuum-able
+      * orphans; emptiness cannot be known earlier without a pre-pass, which
+      * is the very job this path exists to avoid.
+      *
+      * Otherwise the [[perBucketStats]] pre-pass runs here, and its
+      * touched-bucket set (empty for an empty batch) prunes the job. */
+    private def batchStats(batch: DataFrame, cur: Snapshot, dense: Boolean)
+        : (DataFrame, Option[Set[Int]], () => Map[Int, BucketStats]) = {
+      val ordered = Seq(col("lsn"), col("op")) ++ cur.schema.fieldNames.map(col)
+      if (!willFuseStats(cur, dense)) {
+        val stats = perBucketStats(batch, cur, dense)
+        return (batch.select(ordered: _*), Some(stats.keySet), () => stats)
+      }
       val nb = cur.numBuckets
-      val obs = org.apache.spark.sql.Observation(s"merge-stats-${UUID.randomUUID()}")
+      val obs = org.apache.spark.sql.Observation(s"batch-stats-${UUID.randomUUID()}")
       val aggs = (0 until nb).flatMap { b =>
         val isB = col("_ob") === b
         Seq(
@@ -1104,52 +1062,23 @@ object lake {
           sum(when(isB && col("op") === "D", 1L).otherwise(0L)).as(s"dels$b"),
           sum(when(isB && col("op") =!= "D", 1L).otherwise(0L)).as(s"ups$b"))
       }
-      val ordered = Seq(col("lsn"), col("op")) ++ payload.map(col)
-      val batchObs = batch
+      val leg = batch
         .select((ordered :+ bucketExpr(cur).as("_ob")): _*)
         .observe(obs, aggs.head, aggs.tail: _*)
         .drop("_ob")
-      val curFiles = filesOf(cur) // dense = full touch: resolving all is the job
-      val merged = mergeExpr(byKey(storedChanges(cur, curFiles).unionByName(batchObs), cur, nb), cur)
-
-      val nextVersion = cur.version + 1
-      val rawFiles = timed("merge:agg+write")(writeBucketed(merged, cur, nextVersion,
-        repartitionByBucket = false, withRowLsn = true))
-      preCommit() // batch Observations have resolved; abort here = zero committed state
-
-      val m = obs.get
-      def metric(n: String): Option[Long] =
-        m.get(n).collect { case x: Number => x.longValue }
-      val perBucket = (0 until nb).flatMap { b =>
-        val ups = metric(s"ups$b").getOrElse(0L)
-        val dels = metric(s"dels$b").getOrElse(0L)
-        if (ups + dels == 0) None
-        else Some(b -> (metric(s"lmin$b").getOrElse(-1L), metric(s"lmax$b").getOrElse(-1L), ups, dels))
-      }.toMap
-      if (perBucket.isEmpty) return CommitResult(committed = false, cur, Nil) // empty batch
-      val lsnHigh = perBucket.values.map(_._2).max
-
-      val oldByBucket = curFiles.filter(_.lsnMin >= 0).groupBy(_.bucket)
-      val newFiles = rawFiles.map { f =>
-        perBucket.get(f.bucket) match {
-          case Some((lmin, lmax, _, _)) => f.copy(lsnMin = lmin, lsnMax = lmax)
-          case None => // untouched bucket rewritten verbatim: keep old stamps
-            val olds = oldByBucket.getOrElse(f.bucket, Nil)
-            f.copy(lsnMin = if (olds.isEmpty) -1L else olds.map(_.lsnMin).min,
-              lsnMax = if (olds.isEmpty) -1L else olds.map(_.lsnMax).max)
-        }
+      def resolve(): Map[Int, BucketStats] = {
+        val m = obs.get
+        def metric(n: String): Option[Long] =
+          m.get(n).collect { case x: Number => x.longValue }
+        (0 until nb).flatMap { b =>
+          val ups = metric(s"ups$b").getOrElse(0L)
+          val dels = metric(s"dels$b").getOrElse(0L)
+          if (ups + dels == 0) None
+          else Some(b -> BucketStats(metric(s"lmin$b").getOrElse(-1L),
+            metric(s"lmax$b").getOrElse(-1L), ups, dels))
+        }.toMap
       }
-      val (nf, nm) = nextFileState(cur, (0 until nb).toSet, newFiles)
-      val next = cur.copy(version = nextVersion, epochId = math.max(epochId, cur.epochId),
-        lsnHigh = math.max(lsnHigh, cur.lsnHigh), files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, curFiles))
-      val ok = commit(next, fence = epochId >= 0)
-      val removedByBucket = curFiles.groupBy(_.bucket)
-      val lin = perBucket.toSeq.map { case (b, (lmin, lmax, ups, dels)) =>
-        LineageEntry(name, nextVersion, epochId, b, lmin, lmax, ups, dels,
-          newFiles.count(_.bucket == b), removedByBucket.get(b).map(_.size).getOrElse(0), nowTs())
-      }
-      CommitResult(ok, if (ok) next else cur, if (ok) lin else Nil)
+      (leg, None, () => resolve())
     }
 
     /** Per-bucket batch stats, one narrow aggregate job (content is
@@ -1162,7 +1091,7 @@ object lake {
       * is still counted — lineage/metrics report the batch's change volume,
       * an upper bound on rows actually applied under redelivery. */
     private def perBucketStats(batch: DataFrame, cur: Snapshot,
-        assumeFullTouch: Boolean): Array[org.apache.spark.sql.Row] = {
+        assumeFullTouch: Boolean): Map[Int, BucketStats] = {
       val keys = cur.keyColumns
       val narrow = batch.select((keys.map(col) :+ col("lsn") :+ col("op")): _*)
       val perBucket =
@@ -1171,11 +1100,59 @@ object lake {
           .groupBy(keys.map(col): _*)
           .agg(max_by(col("op"), col("lsn")).as("op"), max("lsn").as("lsn"))
           .groupBy(bucketExpr(cur).as("_b"))
-      timed("merge:stats")(perBucket
+      perBucket
         .agg(min("lsn").as("lmin"), max("lsn").as("lmax"),
           sum(when(col("op") === "D", 1L).otherwise(0L)).as("dels"),
           sum(when(col("op") =!= "D", 1L).otherwise(0L)).as("ups"))
-        .collect())
+        .collect()
+        .map(r => r.getAs[Int]("_b") -> BucketStats(r.getAs[Long]("lmin"),
+          r.getAs[Long]("lmax"), r.getAs[Long]("ups"), r.getAs[Long]("dels")))
+        .toMap
+    }
+
+    /** Commit an apply epoch whose `written` files replace `olds` — every
+      * file of the buckets a CoW merge rewrote, Nil for a MoR delta append.
+      * Each written file gets its bucket's batch lsn range; a rewritten
+      * bucket the batch missed keeps its old files' range. Lineage has one
+      * row per bucket in `stats`; an empty batch (no stats) commits
+      * nothing. */
+    private def commitApply(cur: Snapshot, epochId: Long, stats: Map[Int, BucketStats],
+        written: Seq[DataFile], olds: Seq[DataFile]): CommitResult = {
+      if (stats.isEmpty) return CommitResult(committed = false, cur, Nil)
+      val newFiles = stampRanges(written, olds, stats)
+      val oldByBucket = olds.groupBy(_.bucket)
+      val (nf, nm) = nextFileState(cur, oldByBucket.keySet, newFiles)
+      val next = cur.copy(version = cur.version + 1, epochId = math.max(epochId, cur.epochId),
+        lsnHigh = math.max(stats.values.map(_.lsnMax).max, cur.lsnHigh),
+        files = nf, manifests = nm, foldedLsnHigh = foldDeltas(cur, olds))
+      val ok = commit(next, fence = epochId >= 0)
+      val lin = stats.toSeq.map { case (b, s) =>
+        LineageEntry(name, next.version, epochId, b, s.lsnMin, s.lsnMax, s.upserts, s.deletes,
+          newFiles.count(_.bucket == b), oldByBucket.get(b).fold(0)(_.size), nowTs())
+      }
+      CommitResult(ok, if (ok) next else cur, if (ok) lin else Nil)
+    }
+
+    /** The lsn range `files` cover, excluding the -1 "unstamped" sentinel so
+      * one unstamped file cannot corrupt the range; (-1, -1) when no file is
+      * stamped. */
+    private def lsnEnvelope(files: Seq[DataFile]): (Long, Long) = {
+      val stamped = files.filter(_.lsnMin >= 0)
+      if (stamped.isEmpty) (-1L, -1L)
+      else (stamped.map(_.lsnMin).min, stamped.map(_.lsnMax).max)
+    }
+
+    /** `written` files stamped with their bucket's lsn range: the batch's
+      * range from `batch`, else the [[lsnEnvelope]] of the bucket's `olds`
+      * (the files the write replaced, whose rows it carried over). */
+    private def stampRanges(written: Seq[DataFile], olds: Seq[DataFile],
+        batch: Map[Int, BucketStats] = Map.empty): Seq[DataFile] = {
+      val oldByBucket = olds.groupBy(_.bucket)
+      written.map { f =>
+        val (lo, hi) = batch.get(f.bucket).map(s => (s.lsnMin, s.lsnMax))
+          .getOrElse(lsnEnvelope(oldByBucket.getOrElse(f.bucket, Nil)))
+        f.copy(lsnMin = lo, lsnMax = hi)
+      }
     }
 
     /** Merge-on-read apply: dedup the batch to per-key winners and append
@@ -1183,93 +1160,31 @@ object lake {
       * rewrite. Readers apply deltas with the same fused max-LSN aggregation;
       * [[compactDeltas]] (or any CoW merge touching the bucket) folds them
       * into base files. The MoR trade: epoch apply cost ~ batch size instead
-      * of ~ touched-bucket size; read cost grows with outstanding deltas. */
+      * of ~ touched-bucket size; read cost grows with outstanding deltas.
+      * Dense epochs fuse the per-bucket stats into the winners job exactly
+      * like [[merge]] ([[batchStats]]). */
     def deltaAppend(batch: DataFrame, epochId: Long, assumeFullTouch: Boolean = false,
         preCommit: () => Unit = () => ()): CommitResult = {
       val cur = snapshot
       requireMergeableSchema(cur)
       if (epochId >= 0 && epochId <= cur.epochId) return CommitResult(committed = false, cur, Nil)
       val keys = cur.keyColumns
-      val payload = cur.schema.fieldNames.toSeq
-      val nonKey = payload.filterNot(keys.contains)
-      // dense epochs: fuse the per-bucket stats into the winners job as
-      // observed metrics (see mergeDense) — one job, no batch pre-pass
-      // (same kill-switch as the CoW path). Same empty-batch contract as
-      // mergeDense: an actually-empty batch stays CORRECT (zero observed
-      // counts skip the commit) but its already-written delta files become
-      // vacuum-able orphans — assumeFullTouch callers assert non-trivial
-      // batches (ReplayEngine gates on knownInputCount).
-      val fuseStats = willFuseStats(cur, assumeFullTouch)
-
-      var statsRows: Array[org.apache.spark.sql.Row] = Array.empty
-      var obsOpt: Option[org.apache.spark.sql.Observation] = None
-      val source: DataFrame =
-        if (fuseStats) {
-          val obs = org.apache.spark.sql.Observation(s"delta-stats-${UUID.randomUUID()}")
-          obsOpt = Some(obs)
-          val aggs = (0 until cur.numBuckets).flatMap { b =>
-            val isB = col("_ob") === b
-            Seq(
-              min(when(isB, col("lsn"))).as(s"lmin$b"),
-              max(when(isB, col("lsn"))).as(s"lmax$b"),
-              sum(when(isB && col("op") === "D", 1L).otherwise(0L)).as(s"dels$b"),
-              sum(when(isB && col("op") =!= "D", 1L).otherwise(0L)).as(s"ups$b"))
-          }
-          batch.select((Seq(col("lsn"), col("op")) ++ payload.map(col) :+ bucketExpr(cur).as("_ob")): _*)
-            .observe(obs, aggs.head, aggs.tail: _*)
-            .drop("_ob")
-        } else {
-          statsRows = perBucketStats(batch, cur, assumeFullTouch)
-          if (statsRows.isEmpty) return CommitResult(committed = false, cur, Nil)
-          batch.select((Seq(col("lsn"), col("op")) ++ payload.map(col)): _*)
-        }
-
+      val nonKey = cur.schema.fieldNames.toSeq.filterNot(keys.contains)
+      val (leg, touched, statsOf) = batchStats(batch, cur, assumeFullTouch)
+      if (touched.exists(_.isEmpty)) return CommitResult(committed = false, cur, Nil) // empty batch
       // per-key winners incl. delete tombstones, keeping (lsn, op)
-      val winners = byKey(source, cur, if (fuseStats) cur.numBuckets else statsRows.length)
+      val winners = byKey(leg, cur, touched.fold(cur.numBuckets)(_.size))
         .groupBy(keys.map(col): _*)
         .agg(graft.functions.MaxByRow.maxByRow(
           struct((Seq(col("lsn"), col("op")) ++ nonKey.map(col)): _*), col("lsn")).as("_e"))
         .select(Seq(col("_e.lsn").as("lsn"), col("_e.op").as("op")) ++ keys.map(col) ++
           nonKey.map(c => col(s"_e.$c").as(c)): _*)
-
-      val nextVersion = cur.version + 1
-      val rawFiles = timed("merge:delta+write")(writeBucketed(winners, cur, nextVersion,
-        repartitionByBucket = false, kind = "delta"))
+      val written = writeBucketed(winners, cur, cur.version + 1,
+        repartitionByBucket = false, kind = "delta")
       preCommit() // see merge(): abort here leaves only vacuum-able orphans
-
-      // resolve stats: either from the pre-pass rows or the observed metrics
-      val perBucket: Map[Int, (Long, Long, Long, Long)] = obsOpt match {
-        case Some(obs) =>
-          val m = obs.get
-          def metric(n: String): Option[Long] =
-            m.get(n).collect { case x: Number => x.longValue }
-          (0 until cur.numBuckets).flatMap { b =>
-            val ups = metric(s"ups$b").getOrElse(0L)
-            val dels = metric(s"dels$b").getOrElse(0L)
-            if (ups + dels == 0) None
-            else Some(b -> (metric(s"lmin$b").getOrElse(-1L), metric(s"lmax$b").getOrElse(-1L), ups, dels))
-          }.toMap
-        case None =>
-          statsRows.map(r => r.getAs[Int]("_b") ->
-            (r.getAs[Long]("lmin"), r.getAs[Long]("lmax"),
-              r.getAs[Long]("ups"), r.getAs[Long]("dels"))).toMap
-      }
-      if (perBucket.isEmpty) return CommitResult(committed = false, cur, Nil) // empty batch
-      val lsnHigh = perBucket.values.map(_._2).max
-
-      val newFiles = rawFiles.map(f =>
-        f.copy(lsnMin = perBucket.get(f.bucket).map(_._1).getOrElse(-1L),
-          lsnMax = perBucket.get(f.bucket).map(_._2).getOrElse(-1L)))
-      val (nf, nm) = nextFileState(cur, Set.empty, newFiles)
-      val next = cur.copy(version = nextVersion, epochId = math.max(epochId, cur.epochId),
-        lsnHigh = math.max(lsnHigh, cur.lsnHigh), files = nf, manifests = nm)
-      val ok = commit(next, fence = epochId >= 0)
-      if (ok) maybeAutoCompact(next)
-      val lin = perBucket.toSeq.map { case (b, (lmin, lmax, ups, dels)) =>
-        LineageEntry(name, nextVersion, epochId, b, lmin, lmax, ups, dels,
-          newFiles.count(_.bucket == b), 0, nowTs())
-      }
-      CommitResult(ok, if (ok) next else cur, if (ok) lin else Nil)
+      val res = commitApply(cur, epochId, statsOf(), written, olds = Nil)
+      if (res.committed) maybeAutoCompact(res.snapshot)
+      res
     }
 
     /** MoR read-amplification guard: with table property
@@ -1315,13 +1230,8 @@ object lake {
       val olds = filesOfBuckets(cur, Some(deltaBuckets))
       // fused apply, row LSNs kept, laid out bucket-whole for the write
       val data = mergeExpr(byKey(storedChanges(cur, olds), cur, deltaBuckets.size), cur)
-      val newFiles = writeBucketed(data, cur, cur.version + 1, repartitionByBucket = false,
-        withRowLsn = true)
-        .map { f =>
-          val o = olds.filter(x => x.bucket == f.bucket && x.lsnMin >= 0)
-          f.copy(lsnMin = if (o.isEmpty) -1L else o.map(_.lsnMin).min,
-            lsnMax = if (o.isEmpty) -1L else o.map(_.lsnMax).max)
-        }
+      val newFiles = stampRanges(writeBucketed(data, cur, cur.version + 1,
+        repartitionByBucket = false, withRowLsn = true), olds)
       val (nf, nm) = nextFileState(cur, deltaBuckets, newFiles)
       val next = cur.copy(version = cur.version + 1, files = nf, manifests = nm,
         foldedLsnHigh = foldDeltas(cur, olds))
@@ -1470,18 +1380,12 @@ object lake {
       val buckets = fileCountsByBucket(cur)
         .filter { case (b, n) => n >= minFiles && n > expected(b) }.keySet
       if (buckets.isEmpty) return 0
-      val toCompact = filesOfBuckets(cur, Some(buckets)).groupBy(_.bucket)
+      val olds = filesOfBuckets(cur, Some(buckets))
       val data = readBucketsWithLsn(cur, Some(buckets))
-      val newFiles = writeBucketed(data, cur, cur.version + 1, withRowLsn = true).map { f =>
-        // exclude the -1 "unstamped" sentinel from the range fold (matches
-        // compactDeltas) so one unstamped file can't corrupt the lsn range
-        val olds = toCompact.getOrElse(f.bucket, Nil).filter(_.lsnMin >= 0)
-        f.copy(lsnMin = if (olds.isEmpty) -1L else olds.map(_.lsnMin).min,
-          lsnMax = if (olds.isEmpty) -1L else olds.map(_.lsnMax).max)
-      }
+      val newFiles = stampRanges(writeBucketed(data, cur, cur.version + 1, withRowLsn = true), olds)
       val (nf, nm) = nextFileState(cur, buckets, newFiles)
       val next = cur.copy(version = cur.version + 1, files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, toCompact.values.flatten.toSeq))
+        foldedLsnHigh = foldDeltas(cur, olds))
       require(commit(next, fence = false), "compaction commit failed")
       buckets.size
     }
@@ -1513,10 +1417,7 @@ object lake {
       // fused read (base ⊕ deltas, row lsn kept) under the OLD layout,
       // rewritten under the NEW bucket hash
       val data = readBucketsWithLsn(cur, None)
-      val stamped = olds.filter(_.lsnMin >= 0)
-      val (lo, hi) =
-        if (stamped.isEmpty) (-1L, -1L)
-        else (stamped.map(_.lsnMin).min, stamped.map(_.lsnMax).max)
+      val (lo, hi) = lsnEnvelope(olds)
       val newFiles = writeBucketed(data, reshaped, cur.version + 1, withRowLsn = true)
         .map(_.copy(lsnMin = lo, lsnMax = hi))
       // every old bucket is removed; nextFileState runs against the NEW
@@ -1555,16 +1456,9 @@ object lake {
       val oldDeltas = olds.filter(_.kind == "delta")
       val data = readBucketsWithLsn(cur, None)
       // bucket membership is unchanged (unlike rebucket's global envelope),
-      // so stamp each rewritten file with ITS bucket's old lsn range — the
-      // tight per-bucket fold compact() uses (-1 sentinel excluded)
-      val oldByBucket = olds.groupBy(_.bucket)
-      val newFiles = writeBucketed(data, cur, cur.version + 1, withRowLsn = true,
-        sortCols = resolved, maxRowsPerFile = Some(maxRowsPerFile))
-        .map { f =>
-          val stamped = oldByBucket.getOrElse(f.bucket, Nil).filter(_.lsnMin >= 0)
-          f.copy(lsnMin = if (stamped.isEmpty) -1L else stamped.map(_.lsnMin).min,
-            lsnMax = if (stamped.isEmpty) -1L else stamped.map(_.lsnMax).max)
-        }
+      // so stamp each rewritten file with ITS bucket's old lsn range
+      val newFiles = stampRanges(writeBucketed(data, cur, cur.version + 1, withRowLsn = true,
+        sortCols = resolved, maxRowsPerFile = Some(maxRowsPerFile)), olds)
       val (nf, nm) = nextFileState(cur, (0 until cur.numBuckets).toSet, newFiles)
       val next = cur.copy(version = cur.version + 1, files = nf, manifests = nm,
         foldedLsnHigh = foldDeltas(cur, oldDeltas))

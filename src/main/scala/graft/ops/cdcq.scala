@@ -501,11 +501,6 @@ object cdcq {
       // state-store failure would otherwise read as a misleading drain
       // timeout four minutes later)
       q.exception.foreach(e => throw e)
-      // dev-only per-batch breakdown (guide §1: measure before changing)
-      if (System.getProperty("graft.debug.stream", "0") == "1")
-        q.recentProgress.foreach(p => println(s"[stream] batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
-          s"state=${p.stateOperators.headOption.map(s => s.numRowsTotal + "/" + s.customMetrics)}"))
       assert(table.snapshot.lsnHigh == maxLsn,
         s"stream must drain every epoch (lsnHigh ${table.snapshot.lsnHigh} < $maxLsn)")
       assert(stateRows == 0,

@@ -229,7 +229,7 @@ class ConvergenceSpec extends SparkSuite {
     val s = a.snapshot
     assert(a.commit(s.copy(version = s.version + 1, epochId = 0)))
     // the stale writer is stopped by the version check (or, if it raced past
-    // it, by the ATOMIC_MOVE onto the existing manifest -> CommitConflict)
+    // it, by the fail-if-exists claim of the existing manifest -> CommitConflict)
     val e = intercept[Exception] { b.commit(s.copy(version = s.version + 1, epochId = 1)) }
     assert(e.isInstanceOf[CommitConflictException] || e.isInstanceOf[IllegalArgumentException],
       e.toString)
