@@ -1,7 +1,6 @@
 package graft.cdc
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.UUID
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -17,7 +16,7 @@ import graft.cdc.lake._
 object ingest {
 
   /** Checkpointed offset/watermark ledger (north rule): tiny JSON state file
-    * advanced by atomic rename after each committed epoch; replay resumes from
+    * atomically replaced after each committed epoch; replay resumes from
     * `lastEpoch + 1`. The lake table's own epoch fence makes a stale or lost
     * ledger safe — re-applying a committed epoch is a no-op. */
   final case class LedgerState(lastEpoch: Long, lsnHigh: Long)
@@ -25,17 +24,11 @@ object ingest {
   final class CheckpointLedger(dir: String) {
     private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
     private val path = Paths.get(dir, "ledger.json")
-    Files.createDirectories(Paths.get(dir))
 
     def read(): LedgerState =
-      if (Files.exists(path)) Serialization.read[LedgerState](Files.readString(path))
-      else LedgerState(-1L, -1L)
+      PosixMetaStore.read(path).fold(LedgerState(-1L, -1L))(Serialization.read[LedgerState](_))
 
-    def advance(s: LedgerState): Unit = {
-      val tmp = Paths.get(dir, s".ledger-${UUID.randomUUID()}.json")
-      Files.writeString(tmp, Serialization.write(s))
-      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    def advance(s: LedgerState): Unit = PosixMetaStore.replace(path, Serialization.write(s))
   }
 
   final case class EpochMetrics(

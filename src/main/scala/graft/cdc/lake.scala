@@ -1,8 +1,7 @@
 package graft.cdc
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths}
 import java.util.UUID
-import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,14 +20,15 @@ import org.json4s.jackson.Serialization
   * {{{
   *   data/<snapshotVersion>-<uuid>/_b=<bucket>/part-*.parquet
   *   meta/v%016d.json     immutable snapshot manifests
-  *   meta/_CURRENT        pointer to latest version (atomic rename)
+  *   meta/_CURRENT        hint: a recently committed version
   * }}}
   *
-  * Commit protocol: a snapshot JSON is written to a temp name then claimed as
-  * `v<N>.json` with a hard link, which fails if a concurrent writer got there
-  * first (a `CREATE_NEW` write where the filesystem has no hard links), then
-  * `_CURRENT` is advanced. A crash between the data write and the meta
-  * commit leaves orphan files that no snapshot references — harmless, GC-able.
+  * Commit protocol (all metadata I/O goes through one [[MetaStore]]): the
+  * fail-if-exists claim of `v<N>.json` is the commit point, as in Delta's
+  * log, so of two concurrent writers one gets a conflict. `_CURRENT` is then
+  * replaced as a hint that readers probe forward from (`v+1, v+2, …`): a
+  * pointer that lags after a crash, or moves backward in a race, is
+  * harmless. A crash before the claim leaves orphan files — GC-able.
   *
   * Exactly-once: each snapshot embeds the `epochId` that produced it; a commit
   * whose epochId is <= the current snapshot's is rejected as a replay
@@ -181,6 +181,12 @@ object lake {
 
   private implicit val jsonFormats: Formats = Serialization.formats(NoTypeHints)
 
+  /** The one reader of the per-bucket manifest format, for table handles and
+    * the executor-side `$files` table alike; `rel` is root-relative. */
+  private[graft] def readManifestFile(store: MetaStore, root: String, rel: String): Seq[DataFile] =
+    Serialization.read[ManifestData](store.read(Paths.get(root, rel))
+      .getOrElse(throw new NoSuchFileException(s"$root/$rel"))).files
+
   /** Highest snapshot format this reader understands: 1 = inline file list,
     * 2 = adds chunked per-bucket manifests (`Snapshot.manifests`). A reader
     * that ignored `manifests` would silently see a partial table, so
@@ -229,39 +235,52 @@ object lake {
       t
     }
 
+    /** Whether `root` has a committed snapshot, resolved as every handle does. */
     def exists(root: String): Boolean =
-      Files.exists(Paths.get(root, "meta", "_CURRENT"))
+      latestVersion(PosixMetaStore, Paths.get(root, "meta")).nonEmpty
+
+    private def snapPath(metaDir: Path, v: Long): Path = metaDir.resolve(f"v$v%016d.json")
+
+    /** Snapshot versions on disk under `metaDir`, oldest first. */
+    private def versions(store: MetaStore, metaDir: Path): Seq[Long] =
+      store.list(metaDir).filter(n => n.startsWith("v") && n.endsWith(".json"))
+        .map(_.stripPrefix("v").stripSuffix(".json").toLong).sorted
+
+    /** The newest committed version. The claim of `v<N>.json` is the commit
+      * point and `_CURRENT` only a hint: start from it (or from the newest
+      * listed version when it is absent) and probe `v+1, v+2, …` up to the
+      * first version that is absent or does not parse (a torn `CREATE_NEW`
+      * claim). Steady state: one failed probe. */
+    private def latestVersion(store: MetaStore, metaDir: Path): Option[Long] =
+      store.read(metaDir.resolve("_CURRENT")).map(_.trim.toLong).orElse(versions(store, metaDir).lastOption)
+        .map(Iterator.iterate(_)(_ + 1).find(v => store.read(snapPath(metaDir, v + 1))
+          .forall(s => scala.util.Try(JsonMethods.parse(s)).isFailure)).get)
   }
 
-  final class LakeTable(val spark: SparkSession, val root: String, val name: String) {
+  /** `store` is a test seam: every metadata read and publish of the handle
+    * goes through it (see [[MetaStore]]). */
+  final class LakeTable private[graft] (val spark: SparkSession, val root: String, val name: String,
+      private[graft] val store: MetaStore) {
+    def this(spark: SparkSession, root: String, name: String) = this(spark, root, name, PosixMetaStore)
+
     private val metaDir: Path = Paths.get(root, "meta")
     private val dataDir: Path = Paths.get(root, "data")
 
+    /** Referenced-file count from which [[sweepOrphans]] runs as a Spark job. */
+    private[graft] var sweepThreshold: Int = 65536
+
     // ---- snapshot / manifest IO -------------------------------------------
 
-    private def snapPath(v: Long): Path = metaDir.resolve(f"v$v%016d.json")
+    private def snapPath(v: Long): Path = LakeTable.snapPath(metaDir, v)
 
-    def currentVersionOpt: Option[Long] = {
-      val cur = metaDir.resolve("_CURRENT")
-      if (Files.exists(cur)) Some(Files.readString(cur).trim.toLong)
-      else if (Files.isDirectory(metaDir)) {
-        // fallback: recover from manifest listing (pointer write crashed)
-        val s = Files.list(metaDir)
-        val vs =
-          try s.toArray.map(_.toString).flatMap { p =>
-            val n = Paths.get(p).getFileName.toString
-            if (n.startsWith("v") && n.endsWith(".json")) Some(n.stripPrefix("v").stripSuffix(".json").toLong)
-            else None
-          } finally s.close()
-        if (vs.isEmpty) None else Some(vs.max)
-      } else None
-    }
+    def currentVersionOpt: Option[Long] = LakeTable.latestVersion(store, metaDir)
 
     def snapshot: Snapshot = snapshotAt(currentVersionOpt.getOrElse(
       throw new IllegalStateException(s"table $name at $root has no snapshot")))
 
     def snapshotAt(v: Long): Snapshot = {
-      val s = Serialization.read[Snapshot](Files.readString(snapPath(v)))
+      val s = Serialization.read[Snapshot](store.read(snapPath(v)).getOrElse(
+        throw new NoSuchFileException(snapPath(v).toString)))
       require(s.formatVersion <= SupportedFormatVersion,
         s"snapshot v$v of '$name' has formatVersion ${s.formatVersion}, but this reader " +
           s"supports <= $SupportedFormatVersion — refusing to read a partial view; " +
@@ -273,7 +292,6 @@ object lake {
       * Metadata-only commits (schema evolution) pass `fence = false`: they
       * carry the current epochId forward rather than advancing it. */
     def commit(next: Snapshot, fence: Boolean = true): Boolean = synchronized {
-      Files.createDirectories(metaDir)
       var prevCommittedAt = 0L
       currentVersionOpt.foreach { cv =>
         val cur = snapshotAt(cv)
@@ -287,7 +305,6 @@ object lake {
         require(next.version == cur.version + 1,
           s"non-monotonic commit: have v${cur.version}, got v${next.version}")
       }
-      val tmp = metaDir.resolve(s".tmp-${UUID.randomUUID()}.json")
       // stamp the commit wall-clock and normalize the format version: chunked
       // manifests are a format-2 feature, and bumping ONLY when they appear
       // keeps pure-inline tables readable by format-1 readers forever.
@@ -301,34 +318,13 @@ object lake {
       val stamped = next.copy(
         committedAt = Some(math.max(System.currentTimeMillis(), prevCommittedAt + 1)),
         formatVersion = if (next.manifests.nonEmpty) 2 else next.formatVersion)
-      Files.writeString(tmp, Serialization.write(stamped))
-      // Claim the manifest name with fail-if-exists semantics: a hard link is
-      // atomic AND refuses an existing target on POSIX, unlike ATOMIC_MOVE
-      // (which silently replaces). Losing one of two concurrent writers is the
-      // whole point of optimistic concurrency — the loser gets a conflict.
-      // Filesystems without hard links (some FUSE/NFS/SMB mounts) fall back
-      // to an O_EXCL CREATE_NEW write — same fail-if-exists claim, with a
-      // (tiny, documented) torn-manifest window on crash mid-copy that the
-      // _CURRENT pointer shields readers from.
-      try Files.createLink(snapPath(next.version), tmp)
+      // the fail-if-exists claim is the commit point: losing it to a
+      // concurrent writer is the optimistic-concurrency conflict
+      try store.putIfAbsent(snapPath(next.version), Serialization.write(stamped))
       catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          throw new CommitConflictException(name, next.version, e)
-        case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-          try Files.write(snapPath(next.version), Files.readAllBytes(tmp),
-            java.nio.file.StandardOpenOption.CREATE_NEW, java.nio.file.StandardOpenOption.WRITE)
-          catch {
-            case e2: java.nio.file.FileAlreadyExistsException =>
-              Files.deleteIfExists(tmp)
-              throw new CommitConflictException(name, next.version, e2)
-          }
-        case NonFatal(e) => Files.deleteIfExists(tmp); throw e
-      } finally Files.deleteIfExists(tmp)
-      val ptrTmp = metaDir.resolve(s".ptr-${UUID.randomUUID()}")
-      Files.writeString(ptrTmp, next.version.toString)
-      Files.move(ptrTmp, metaDir.resolve("_CURRENT"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        case e: FileAlreadyExistsException => throw new CommitConflictException(name, next.version, e)
+      }
+      store.replace(metaDir.resolve("_CURRENT"), next.version.toString)
       true
     }
 
@@ -351,14 +347,12 @@ object lake {
       manifestCache.computeIfAbsent(ref.path, p => {
         manifestReads.incrementAndGet()
         lake.manifestReadsGlobal.incrementAndGet() // cross-handle observability
-        Serialization.read[ManifestData](Files.readString(Paths.get(root, p))).files
+        readManifestFile(store, root, p)
       })
 
     private def writeManifest(bucket: Int, files: Seq[DataFile]): ManifestRef = {
-      val mDir = metaDir.resolve("m")
-      Files.createDirectories(mDir)
       val rel = s"meta/m/${UUID.randomUUID().toString.take(12)}-b$bucket.json"
-      Files.writeString(Paths.get(root, rel), Serialization.write(ManifestData(files)))
+      store.create(Paths.get(root, rel), Serialization.write(ManifestData(files)))
       manifestCache.put(rel, files)
       ManifestRef(rel, bucket, files.size, files.count(_.kind == "delta"),
         files.map(_.rows).sum, files.map(_.bytes).sum,
@@ -387,34 +381,16 @@ object lake {
       inline ++ fromManifests
     }
 
-    /** Buckets that currently hold MoR delta files — O(manifest refs) in
-      * chunked mode (no manifest reads: the refs carry delta counts). */
-    private def bucketsWithDeltas(snap: Snapshot): Set[Int] =
-      snap.files.filter(_.kind == "delta").map(_.bucket).toSet ++
-        snap.manifests.filter(_.deltaFiles > 0).map(_.bucket)
+    /** Per-bucket sums of `ofFile` over inline entries and `ofRef` over
+      * manifest refs: file, row and delta counts with no manifest reads (a
+      * pre-field ref reports 0 rows = unknown, never a lie). */
+    private def perBucket(snap: Snapshot)(ofFile: DataFile => Long, ofRef: ManifestRef => Long): Map[Int, Long] =
+      (snap.files.map(f => f.bucket -> ofFile(f)) ++ snap.manifests.map(m => m.bucket -> ofRef(m)))
+        .groupMapReduce(_._1)(_._2)(_ + _)
 
-    /** Per-bucket file counts without reading any manifest (refs carry them). */
-    private def fileCountsByBucket(snap: Snapshot): Map[Int, Int] = {
-      val pairs = snap.files.groupBy(_.bucket).view.mapValues(_.size).toSeq ++
-        snap.manifests.map(m => m.bucket -> m.numFiles)
-      pairs.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    }
-
-    /** Per-bucket ROW sums, likewise O(refs) in chunked mode (ManifestRef
-      * carries the sum; pre-field refs report 0 = unknown, never a lie). */
-    private def rowsByBucket(snap: Snapshot): Map[Int, Long] = {
-      val pairs = snap.files.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toSeq ++
-        snap.manifests.map(m => m.bucket -> m.rows)
-      pairs.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    }
-
-    /** Per-bucket DELTA-file counts, likewise O(refs) in chunked mode. */
-    private def deltaCountsByBucket(snap: Snapshot): Map[Int, Int] = {
-      val pairs = snap.files.filter(_.kind == "delta")
-        .groupBy(_.bucket).view.mapValues(_.size).toSeq ++
-        snap.manifests.filter(_.deltaFiles > 0).map(m => m.bucket -> m.deltaFiles)
-      pairs.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    }
+    /** Per-bucket MoR delta-file counts; buckets without deltas are absent. */
+    private def deltaCountsByBucket(snap: Snapshot): Map[Int, Long] =
+      perBucket(snap)(f => if (f.kind == "delta") 1L else 0L, _.deltaFiles).filter(_._2 > 0)
 
     /** Next snapshot's file state after dropping ALL files of
       * `removedBuckets` and adding `added`: inline list math in inline mode;
@@ -825,10 +801,10 @@ object lake {
       val next = next0.copy(files = nf, manifests = nm,
         foldedLsnHigh = foldDeltas(cur, removedDeltas))
       val ok = commit(next, fence = epochId >= 0)
-      val removedCounts = fileCountsByBucket(cur)
+      val removedCounts = perBucket(cur)(_ => 1L, _.numFiles)
       val lin = files.groupBy(_.bucket).map { case (b, fs) =>
         LineageEntry(name, next.version, epochId, b, lsnHigh, lsnHigh,
-          fs.map(_.rows).sum, 0L, fs.size, removedCounts.getOrElse(b, 0), nowTs())
+          fs.map(_.rows).sum, 0L, fs.size, removedCounts.getOrElse(b, 0L).toInt, nowTs())
       }.toSeq
       CommitResult(ok, if (ok) next else cur, if (ok) lin else Nil)
     }
@@ -1223,7 +1199,7 @@ object lake {
     def compactDeltas(only: Option[Set[Int]] = None): Int = synchronized {
       val cur = snapshot
       val deltaBuckets = {
-        val b = bucketsWithDeltas(cur)
+        val b = deltaCountsByBucket(cur).keySet
         only.map(b.intersect).getOrElse(b)
       }
       if (deltaBuckets.isEmpty) return 0
@@ -1352,14 +1328,7 @@ object lake {
     }
 
     /** List snapshot versions currently on disk (oldest first). */
-    def history(): Seq[Long] = {
-      if (!Files.isDirectory(metaDir)) return Nil
-      val s = Files.list(metaDir)
-      try s.toArray.map(_.asInstanceOf[Path].getFileName.toString)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(_.stripPrefix("v").stripSuffix(".json").toLong).sorted.toSeq
-      finally s.close()
-    }
+    def history(): Seq[Long] = LakeTable.versions(store, metaDir)
 
     /** Compact a bucket's small files into one file per bucket (logical no-op;
       * data rewrite only). Buckets whose file count is below `minFiles` are
@@ -1374,10 +1343,10 @@ object lake {
       val expected: Int => Long = clusterPolicy(cur)._2 match {
         case None => _ => 1L
         case Some(cap) =>
-          val rows = rowsByBucket(cur)
+          val rows = perBucket(cur)(_.rows, _.rows)
           b => math.max(1L, (rows.getOrElse(b, 0L) + cap - 1) / cap)
       }
-      val buckets = fileCountsByBucket(cur)
+      val buckets = perBucket(cur)(_ => 1L, _.numFiles)
         .filter { case (b, n) => n >= minFiles && n > expected(b) }.keySet
       if (buckets.isEmpty) return 0
       val olds = filesOfBuckets(cur, Some(buckets))
@@ -1490,41 +1459,30 @@ object lake {
       val keptSnaps = keep.toSeq.map(snapshotAt)
       val referenced: Set[String] = keptSnaps.flatMap(s => filesOf(s).map(_.path)).toSet
       var manifestsRemoved = 0
-      versions.filterNot(keep).foreach { v => Files.deleteIfExists(snapPath(v)); manifestsRemoved += 1 }
+      versions.filterNot(keep).foreach { v => store.delete(snapPath(v)); manifestsRemoved += 1 }
       // GC per-bucket manifest files no kept snapshot references
       val keptManifests: Set[String] = keptSnaps.flatMap(_.manifests.map(_.path)).toSet
-      val mDir = metaDir.resolve("m")
-      if (Files.isDirectory(mDir)) {
-        val ms = Files.list(mDir)
-        try ms.forEach { m =>
-          val rel = Paths.get(root).relativize(m).toString
-          if (!keptManifests(rel)) {
-            Files.deleteIfExists(m); manifestCache.remove(rel); manifestsRemoved += 1
-          }
-        } finally ms.close()
+      store.list(metaDir.resolve("m")).map(n => s"meta/m/$n").filterNot(keptManifests).foreach { rel =>
+        store.delete(Paths.get(root, rel)); manifestCache.remove(rel); manifestsRemoved += 1
       }
       val filesRemoved = if (Files.isDirectory(dataDir)) sweepOrphans(referenced) else 0
       (manifestsRemoved, filesRemoved)
     }
 
     /** Orphan-file sweep under `data/`. Small tables walk driver-side (a
-      * Spark job costs more than the walk); above `auto`'s threshold — the
+      * Spark job costs more than the walk); from [[sweepThreshold]] on — the
       * 100 TB envelope, where the tree holds millions of files — the listing
       * AND deletion run as ONE Spark job with a task per snapshot data dir:
       * executors list + delete against shared storage and report (removed,
       * kept) counts, the driver never materializes the file tree. Dirs left
-      * with zero files are pruned driver-side from the per-task counts.
-      * Override with -Dgraft.vacuum.distributed=always|never. */
+      * with zero files are pruned driver-side from the per-task counts. */
     private def sweepOrphans(referenced: Set[String]): Int = {
       val snapDirs: Seq[String] = {
         val s = Files.list(dataDir)
         try s.toArray.map(_.asInstanceOf[Path]).filter(Files.isDirectory(_)).map(_.toString).toSeq
         finally s.close()
       }
-      val mode = System.getProperty("graft.vacuum.distributed", "auto")
-      val useSpark = snapDirs.nonEmpty &&
-        (mode == "always" || (mode == "auto" && referenced.size >= 65536))
-      if (!useSpark) {
+      if (snapDirs.isEmpty || referenced.size < sweepThreshold) {
         var removed = 0
         listParquet(dataDir).foreach { p =>
           val rel = Paths.get(root).relativize(p).toString

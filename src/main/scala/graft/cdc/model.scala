@@ -19,12 +19,6 @@ object model {
     case object Update extends Op("U")
     case object Delete extends Op("D")
     val all: Seq[Op] = Seq(Insert, Update, Delete)
-    def fromCode(c: String): Op = c match {
-      case "I" => Insert
-      case "U" => Update
-      case "D" => Delete
-      case other => throw new IllegalArgumentException(s"unknown op code: $other")
-    }
   }
 
   /** One change event from the binlog tail (north-rule input contract).
@@ -148,7 +142,6 @@ object model {
       properties: Map[String, String] = Map.empty,
       numBuckets: Int = 32) {
     def schema: StructType = StructType(columns.map(_.structField))
-    def columnNames: Seq[String] = columns.map(_.name)
     def primaryKey: Seq[String] = columns.filter(_.isPrimaryKey).map(_.name)
     /** Resolved FK lineage edges with deterministic constraint names. */
     def foreignKeyEdges: Seq[FkEdge] = columns.flatMap { c =>

@@ -30,7 +30,7 @@ object streaming {
     * each executor would see the initial value forever and TTL eviction
     * would degrade back to unbounded state — so the watermark lives in a
     * file on storage all JVMs can reach (the same class of location as the
-    * checkpoint dir). Writes are atomic-rename; reads are cached per JVM for
+    * checkpoint dir). Writes are atomic replaces; reads are cached per JVM for
     * `refreshMs` so the state function can consult it per group without
     * hammering the store. A stale read only DELAYS eviction (the watermark
     * is monotone), never changes emitted results. */
@@ -39,12 +39,7 @@ object streaming {
     val refreshMs = 200L
 
     def write(path: String, v: Long): Unit = {
-      val p = java.nio.file.Paths.get(path)
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling(s".wm-${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.writeString(tmp, v.toString)
-      java.nio.file.Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      PosixMetaStore.replace(java.nio.file.Paths.get(path), v.toString)
       cache.put(path, (v, System.currentTimeMillis())); ()
     }
 
@@ -54,8 +49,8 @@ object streaming {
       if (cached != null && now - cached._2 < refreshMs) cached._1
       else {
         val v =
-          try java.nio.file.Files.readString(java.nio.file.Paths.get(path)).trim.toLong
-          catch { case _: Exception => -1L } // absent yet = no watermark
+          try PosixMetaStore.read(java.nio.file.Paths.get(path)).fold(-1L)(_.trim.toLong)
+          catch { case _: Exception => -1L } // unreadable = no watermark
         cache.put(path, (v, now))
         v
       }

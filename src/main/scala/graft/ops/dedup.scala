@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -236,9 +236,4 @@ object dedup {
       .filter(col("shared") >= minShared)
       .orderBy(col("d1"), col("d2"))
   }
-
-  /** Embedding-cosine near-dup pairs (see [[similarity.cosine]]) over a
-    * restricted probe set — full ANN lives in [[similarity]]. */
-  def embeddingNearDup(spark: SparkSession, dir: String, threshold: Double = 0.3): DataFrame =
-    similarity.cosinePairs(spark, dir, maxQueryId = 10, threshold = threshold)
 }

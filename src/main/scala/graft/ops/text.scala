@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline:
@@ -15,10 +15,6 @@ object text {
   // projections would otherwise run near-single-threaded (guide §2.5).
   private def docs(spark: SparkSession, dir: String): DataFrame =
     opsutil.spread(spark.read.parquet(s"$dir/documents.parquet"))
-
-  /** Whitespace token count (replace arithmetic — exact parity with SQL). */
-  def wsTokens(c: Column): Column =
-    (length(c) - length(regexp_replace(c, " ", "")) + 1).as("ws_tokens")
 
   /** Token counting: whitespace tokens + a BPE-ish regex segmentation
     * (letters / digits / single other-char), per document. */

@@ -424,17 +424,11 @@ class GraftFilesTable(lakeTable: lake.LakeTable) extends Table with SupportsRead
                 pinnedSnap.files.map(GraftFilesTable.toRow),
                 math.max(1, math.min(pinnedSnap.files.size, 4)))
               if (pinnedSnap.manifests.isEmpty) return inline
-              val root = lakeTable.root
+              val (store, root) = (lakeTable.store, lakeTable.root)
               val refs = pinnedSnap.manifests.map(_.path)
               val fromManifests = sc
                 .parallelize(refs, math.max(1, math.min(refs.size, sc.defaultParallelism)))
-                .flatMap { p =>
-                  implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-                  org.json4s.jackson.Serialization
-                    .read[lake.ManifestData](
-                      java.nio.file.Files.readString(java.nio.file.Paths.get(root, p)))
-                    .files.map(GraftFilesTable.toRow)
-                }
+                .flatMap(p => lake.readManifestFile(store, root, p).map(GraftFilesTable.toRow))
               inline.union(fromManifests)
             }
           }.asInstanceOf[T]

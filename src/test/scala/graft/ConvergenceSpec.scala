@@ -238,21 +238,19 @@ class ConvergenceSpec extends SparkSuite {
 
   test("commit race INSIDE the version-check window raises CommitConflict (fail-if-exists claim)") {
     // Simulate the race where both writers pass the version pre-check before
-    // either claims the manifest: pre-create the winner's v<N+1>.json AFTER
-    // the loser read the current version but BEFORE its claim. The hard-link
-    // claim must refuse to replace it (ATOMIC_MOVE silently would — the
-    // round-1 bug), so the loser gets CommitConflictException, not data loss.
+    // either claims the manifest: the winner's v<N+1>.json appears AFTER the
+    // loser read the current version but BEFORE its claim (the loser's store
+    // plants it at the claim step). The hard-link claim must refuse to
+    // replace it (ATOMIC_MOVE silently would — the round-1 bug), so the
+    // loser gets CommitConflictException, not data loss.
     val root = tmpDir("race-window")
     val t = LakeTable.createIfNotExists(spark, root, "t", RepoRow.schemaV1, RepoRow.keyColumns, 4)
     val s = t.snapshot
     val winner = s.copy(version = s.version + 1, epochId = 7)
-    // the "concurrent winner" writes the manifest file directly, without
-    // advancing _CURRENT — exactly the mid-commit window
     val vPath = java.nio.file.Paths.get(root, "meta", f"v${s.version + 1}%016d.json")
-    java.nio.file.Files.writeString(vPath,
+    val loser = new LakeTable(spark, root, "t", new RivalAtClaim(vPath,
       org.json4s.jackson.Serialization.write(winner)(
-        org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)))
-    val loser = LakeTable.load(spark, root, "t")
+        org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints))))
     intercept[CommitConflictException] {
       loser.commit(s.copy(version = s.version + 1, epochId = 1))
     }

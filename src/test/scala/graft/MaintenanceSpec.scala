@@ -313,18 +313,20 @@ class MaintenanceSpec extends SparkSuite {
     val s = table.snapshot
     val hashBefore = table.read().agg(sum(crc32(concat_ws("|", col("repo"), col("path"),
       sha2(col("content"), 256))))).collect()(0).getLong(0)
-    // a concurrent writer claims the next manifest mid-commit-window (the
-    // same simulation as ConvergenceSpec's fail-if-exists test): the
-    // rebucket must LOSE — loudly, never silently replacing the claim
+    // a concurrent writer claims the next manifest mid-commit-window, just
+    // before the rebucket's own claim (the same simulation as
+    // ConvergenceSpec's fail-if-exists test): the rebucket must LOSE —
+    // loudly, never silently replacing the claim
     val vPath = java.nio.file.Paths.get(root, "meta", f"v${s.version + 1}%016d.json")
-    java.nio.file.Files.writeString(vPath,
+    val loser = new LakeTable(spark, root, "t", new RivalAtClaim(vPath,
       org.json4s.jackson.Serialization.write(s.copy(version = s.version + 1, epochId = 9))(
-        org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)))
-    val loser = LakeTable.load(spark, root, "t")
-    intercept[Exception](loser.rebucket(64))
-    // _CURRENT never moved; the table still reads its committed state under
-    // the OLD layout, and the aborted rewrite's files are mere orphans
-    assert(table.snapshot.version == s.version && table.snapshot.numBuckets == 4)
+        org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints))))
+    intercept[CommitConflictException](loser.rebucket(64))
+    // the rival's claim stands as the committed v<N+1>; the table still reads
+    // its data under the OLD layout, and the aborted rewrite's files are
+    // mere orphans
+    assert(table.snapshot.version == s.version + 1 && table.snapshot.epochId == 9 &&
+      table.snapshot.numBuckets == 4)
     assert(table.read().agg(sum(crc32(concat_ws("|", col("repo"), col("path"),
       sha2(col("content"), 256))))).collect()(0).getLong(0) == hashBefore)
     // clear the simulated winner; vacuum sweeps the aborted rewrite's files
@@ -421,28 +423,26 @@ class MaintenanceSpec extends SparkSuite {
     val nOrphans = 2048
     (0 until nOrphans).foreach(i =>
       java.nio.file.Files.createFile(orphanDir.resolve(s"part-$i.parquet")))
-    System.setProperty("graft.vacuum.distributed", "always")
-    try {
-      val t0 = System.nanoTime()
-      val (_, removed) = table.vacuum(keepSnapshots = 1)
-      val ms = (System.nanoTime() - t0) / 1e6
-      assert(removed == nOrphans, s"must remove exactly the orphans, removed $removed")
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, refs.head.path)),
-        "referenced files survive the sweep")
-      assert(!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root, "data", "crashed")),
-        "fully-orphaned data dirs are pruned")
-      // latency guard: the sweep is one job over per-dir tasks, not a
-      // driver-side walk of 34k paths followed by 2k serial deletes
-      assert(ms < 30000, s"distributed sweep took $ms ms")
-      info(f"distributed sweep over ${nFiles + nOrphans} files: $ms%.0f ms")
-      // per-task payload bound: no task received more than ITS dir's slice
-      // of the referenced set (the pre-fix full-set broadcast shipped all
-      // 32k paths to every executor; at 10M+ files that is a
-      // multi-hundred-MB object per executor)
-      val maxTask = Vacuum.lastMaxTaskRefs.get()
-      assert(maxTask == nFiles / nSeedDirs && maxTask < nFiles,
-        s"largest per-task slice must be one dir's ${nFiles / nSeedDirs}, saw $maxTask")
-    } finally System.clearProperty("graft.vacuum.distributed")
+    table.sweepThreshold = 0 // sweep in a Spark job at any size
+    val t0 = System.nanoTime()
+    val (_, removed) = table.vacuum(keepSnapshots = 1)
+    val ms = (System.nanoTime() - t0) / 1e6
+    assert(removed == nOrphans, s"must remove exactly the orphans, removed $removed")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, refs.head.path)),
+      "referenced files survive the sweep")
+    assert(!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root, "data", "crashed")),
+      "fully-orphaned data dirs are pruned")
+    // latency guard: the sweep is one job over per-dir tasks, not a
+    // driver-side walk of 34k paths followed by 2k serial deletes
+    assert(ms < 30000, s"distributed sweep took $ms ms")
+    info(f"distributed sweep over ${nFiles + nOrphans} files: $ms%.0f ms")
+    // per-task payload bound: no task received more than ITS dir's slice
+    // of the referenced set (the pre-fix full-set broadcast shipped all
+    // 32k paths to every executor; at 10M+ files that is a
+    // multi-hundred-MB object per executor)
+    val maxTask = Vacuum.lastMaxTaskRefs.get()
+    assert(maxTask == nFiles / nSeedDirs && maxTask < nFiles,
+      s"largest per-task slice must be one dir's ${nFiles / nSeedDirs}, saw $maxTask")
   }
 
   test("age-based vacuum retention drops old snapshots; current always survives") {
