@@ -139,21 +139,21 @@ object ingest {
     /** Apply one epoch of change events. `events` must carry `lsn`, `op`, and
       * payload columns for some registry version (extra columns are dropped by
       * conform; missing newer columns are null-filled).
-      * `knownInputCount` skips the metrics count() scan when the caller already
-      * knows the batch size (benchmark path). */
+      *
+      * Two Spark jobs per clean epoch, through the merge's stats pre-pass
+      * seam (`LakeTable.merge` / `deltaAppend`): the pre-pass also totals
+      * the gate's per-check violations (delete tombstones excluded), the
+      * input count and, in verify mode, the content checksum; the gate's
+      * verdict runs on those totals before any file is written, then the
+      * write job runs. `knownInputCount = Some(0)` skips a known-empty batch
+      * before any job runs; any other value is ignored (`events_in` comes
+      * from the pre-pass). */
     def applyEpoch(events: DataFrame, epochId: Long,
         knownInputCount: Option[Long] = None): EpochResult = {
       val t0 = System.nanoTime()
       val snap = table.snapshot
-      if (epochId >= 0 && epochId <= snap.epochId) {
-        // replayed epoch: exactly-once fence, nothing runs
-        return EpochResult(committed = false, snap.version,
-          EpochMetrics(epochId, 0, 0, 0, 0, 0.0), Nil)
-      }
-      if (knownInputCount.contains(0L)) {
-        // known-empty batch: skip before any write — the dense paths would
-        // otherwise run their (fused-stats) write first and only then skip
-        // the commit, leaving the written files as vacuum-able orphans
+      if ((epochId >= 0 && epochId <= snap.epochId) || knownInputCount.contains(0L)) {
+        // replayed epoch (exactly-once fence) or known-empty batch: nothing runs
         return EpochResult(committed = false, snap.version,
           EpochMetrics(epochId, 0, 0, 0, 0, 0.0), Nil)
       }
@@ -170,94 +170,47 @@ object ingest {
         events.select(cols: _*)
       }
       // quarantine-attached gated epochs persist the conformed batch: the
-      // merge write is the scan that POPULATES the cache, so a
-      // failure-bearing epoch's quarantine-row derivation reads the cached
-      // batch instead of re-scanning the source — a dirty epoch costs
-      // merge + (cached annotated pass + two small appends), never two full
-      // source scans. The cache is epoch-batch-sized (bounded by the tail's
-      // trigger size at 100 TB: maxFilesPerTrigger); MEMORY_AND_DISK spills
-      // rather than evicting, and clean epochs pay only the in-memory copy.
-      val cacheBatch = gate.exists(_.checks.nonEmpty) && quarantineTable.isDefined
+      // stats pre-pass is the scan that POPULATES the cache, so a
+      // failure-bearing epoch's quarantine-row derivation and the write
+      // read the cached batch instead of re-scanning the source. The cache
+      // is epoch-batch-sized (bounded by the tail's trigger size at 100 TB:
+      // maxFilesPerTrigger); MEMORY_AND_DISK spills rather than evicting,
+      // and clean epochs pay only the in-memory copy.
+      val gateOn = gate.filter(_.checks.nonEmpty)
+      val cacheBatch = gateOn.isDefined && quarantineTable.isDefined
       if (cacheBatch) { withMeta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); () }
       try {
 
-      // 2. quality gate (errors abort the epoch pre-commit; the atomic commit
-      //    means an aborted epoch leaves no partial state). Two shapes:
-      //    - FUSED (dense path): the gate's violation-count aggregates ride
-      //      the merge job itself as an Observation, resolved after the write
-      //      but BEFORE the commit (LakeTable's preCommit hook) — a clean
-      //      gated dense epoch is ONE Spark job, no separate gate scan; an
-      //      error-level failure aborts pre-commit and the written files are
-      //      unreferenced, vacuum-able orphans.
-      //    - SEPARATE (sparse or > 32 buckets, the same predicate as stats
-      //      fusion: willFuseStats): one aggregate job before the
-      //      write — an upstream Observation would drag every gated column
-      //      into the sparse path's narrow stats pre-pass scan, and aborting
-      //      before the write is strictly cheaper there anyway.
-      val dense = knownInputCount.exists(_ >= snap.numBuckets.toLong * 32)
-      val fuse = table.willFuseStats(snap, dense)
-      var gateObs: Option[org.apache.spark.sql.Observation] = None
-      gate.foreach { g =>
-        if (g.checks.nonEmpty && fuse) {
-          gateObs = Some(org.apache.spark.sql.Observation(
-            s"gate-$epochId-${java.util.UUID.randomUUID()}"))
-        } else {
-          val failures = g.evaluate(withMeta.where(col("op") =!= "D"))
+      // 2. quality gate + input count + checksum, summed by the merge's
+      //    stats pre-pass: errors abort before any file is written, so an
+      //    aborted epoch leaves no data files and no committed state
+      val gateSums = gateOn.toSeq.flatMap(_.violations(col("op") =!= "D"))
+      val sums = gateSums ++ Seq(lit(1L)) ++
+        (if (verifyChecksums) Seq(crc32(sha2(col("content"), 256))) else Nil)
+      var totals = Seq.empty[Long]
+      val check: Seq[Long] => Unit = t => {
+        totals = t
+        gateOn.foreach { g =>
+          val failures = g.failuresOf(t.take(gateSums.size))
           if (failures.nonEmpty) persistFailuresAndMaybeAbort(g, failures, withMeta, epochId)
         }
       }
 
-      // 3.+4. copy-on-write merge with the per-key max-LSN dedup FUSED into
-      //    the merge aggregation (one wide shuffle; see LakeTable.merge),
-      //    then the fenced commit. Epochs known to be dense (>= 32 events per
-      //    bucket on average) on tables of at most 32 buckets skip the
-      //    touched-bucket pre-pass entirely (per-bucket stats ride the merge
-      //    job as observed metrics).
-      //    Verified replay fuses its sha256 checksum into the SAME job the
-      //    same way — verify mode costs sha CPU, not an extra batch scan.
-      val csObs =
-        if (verifyChecksums && fuse)
-          Some(org.apache.spark.sql.Observation(s"cs-$epochId-${java.util.UUID.randomUUID()}"))
-        else None
-      val withGateObs = gateObs match {
-        case Some(o) =>
-          val aggs = gate.get.observedAggs(col("op") =!= "D")
-          withMeta.observe(o, aggs.head, aggs.tail: _*)
-        case None => withMeta
-      }
-      val gated = csObs match {
-        case Some(o) => withGateObs.observe(o, sum(crc32(sha2(col("content"), 256))).as("cs"))
-        case None => withGateObs
-      }
-      // fused-gate resolution: runs inside merge/deltaAppend after the write
-      // job (Observation resolved) and before the snapshot commit
-      val preCommit: () => Unit = () => gateObs.foreach { o =>
-        val g = gate.get
-        val failures = g.failuresFromObserved(o.get)
-        if (failures.nonEmpty) persistFailuresAndMaybeAbort(g, failures, withMeta, epochId)
-      }
+      // 3.+4. merge with the per-key max-LSN dedup FUSED into the merge
+      //    aggregation (one wide shuffle; see LakeTable.merge), then the
+      //    fenced commit
       val res = mode match {
-        case MergeMode.CoW => table.merge(gated, epochId, assumeFullTouch = dense, preCommit)
-        case MergeMode.MoR => table.deltaAppend(gated, epochId, assumeFullTouch = dense, preCommit)
+        case MergeMode.CoW => table.merge(withMeta, epochId, sums, check)
+        case MergeMode.MoR => table.deltaAppend(withMeta, epochId, sums, check)
       }
-
-      // 5. verified-replay checksum: observed on the merge job itself (dense)
-      //    or one dedicated CPU pass over the batch (sparse)
-      val checksum: Long =
-        if (verifyChecksums && res.committed) csObs match {
-          case Some(o) =>
-            o.get.get("cs").collect { case n: Number => n.longValue }.getOrElse(0L)
-          case None =>
-            withMeta.agg(sum(crc32(sha2(col("content"), 256)))).collect()(0) match {
-              case r if r.isNullAt(0) => 0L
-              case r => r.getLong(0)
-            }
-        }
-        else 0L
 
       val wallMs = (System.nanoTime() - t0) / 1000000L
       val applied = res.lineage.map(l => l.rows_upserted + l.rows_deleted).sum
-      val eventsIn = knownInputCount.getOrElse(if (res.committed) events.count() else 0L)
+      // the totals after the gate's: the input count, then the checksum
+      val (eventsIn, checksum) = totals.drop(gateSums.size) match {
+        case n +: cs if res.committed => (n, cs.headOption.getOrElse(0L))
+        case _ => (0L, 0L)
+      }
       val m = EpochMetrics(epochId, eventsIn,
         events_deduped = math.max(0L, eventsIn - applied), events_applied = applied,
         wall_ms = wallMs,

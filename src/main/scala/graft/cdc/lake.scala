@@ -3,7 +3,7 @@ package graft.cdc
 import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -757,21 +757,6 @@ object lake {
           "rename the column(s) — append/overwrite/read remain available")
     }
 
-    /** Whether a merge/deltaAppend for this snapshot will fuse its per-bucket
-      * stats into the write job as observed metrics (dense path) instead of
-      * running the narrow stats pre-pass. Callers that want to piggyback
-      * their own Observations on the write job (verified-replay checksum,
-      * fused quality gate) MUST gate on this same predicate — an upstream
-      * Observation on the sparse path would drag every observed column into
-      * the narrow (keys, lsn, op) pre-pass scan. */
-    def willFuseStats(snap: Snapshot, assumeFullTouch: Boolean): Boolean =
-      // threshold 32 (was 64): the observed-metric expression set is 4 x
-      // numBuckets, and at 64 buckets the 256-expression analysis+codegen
-      // per epoch measurably costs MORE than the one narrow stats pre-pass
-      // it replaces (A/B on the 64-bucket rebucket replay); at <= 32 the
-      // fusion still wins (one job per epoch, gate/checksum piggyback)
-      assumeFullTouch && snap.numBuckets <= 32
-
     /** Fold removed delta files' lsn range into the snapshot-level
       * high-watermark (see Snapshot.foldedLsnHigh). */
     private def foldDeltas(cur: Snapshot, removed: Seq[DataFile]): Option[Long] = {
@@ -933,35 +918,35 @@ object lake {
 
     /** Copy-on-write MERGE keyed on the table's key columns — the CDC-apply
       * kernel (reference contract: whenMatchedUpdateAll / whenNotMatchedInsertAll,
-      * /root/reference/src/models/writer.py:42-67, plus a delete extension).
+      * reference `src/models/writer.py:42-67`, plus a delete extension).
       *
       * `batch` carries columns: lsn:long, op:string(I|U|D) + the current
       * schema's columns. It may contain MULTIPLE events per key: per-key
-      * max-LSN dedup is FUSED into the merge itself (see below). Only buckets
-      * present in the batch are read and rewritten; untouched buckets carry
-      * over by manifest reference (zero data movement).
+      * max-LSN dedup is FUSED into the merge itself (see below).
       *
-      * Physical shape — ONE Spark job, one wide shuffle, per dense epoch:
-      * union(target rows @ their stored row _lsn, batch events) -> hash-aggregate
-      * max_by_row(payload, lsn) per key (custom TypedImperativeAggregate,
-      * graft.functions.MaxByRow — the built-in max_by(struct, lsn) degrades
-      * to SortAggregate for wide payloads) -> drop keys whose winner is a
-      * delete -> bucketed write. Dedup, matched-update, not-matched-insert
-      * and delete collapse into one aggregate over ONE explicit hash
-      * repartition on the key columns ([[byKey]]); its width divides the
-      * bucket count, so every bucket is whole in one task and the write needs
-      * no extra repartition. Per-bucket lineage stats ride along via
-      * Dataset.observe — no separate pass ([[batchStats]]). A dense epoch
-      * reads and rewrites every bucket; a bucket its batch missed keeps its
-      * old lsn range and gets no lineage row.
+      * Physical shape — two Spark jobs per epoch:
+      *  1. the [[perBucketStats]] pre-pass: the buckets the batch touches,
+      *     with their lsn ranges and change counts (an empty batch stops
+      *     here, having written nothing);
+      *  2. the write: union(the touched buckets' rows @ their stored row
+      *     _lsn, batch events) -> hash-aggregate max_by_row(payload, lsn) per
+      *     key (custom TypedImperativeAggregate, graft.functions.MaxByRow —
+      *     the built-in max_by(struct, lsn) degrades to SortAggregate for
+      *     wide payloads) -> drop keys whose winner is a delete -> bucketed
+      *     write. Dedup, matched-update, not-matched-insert and delete
+      *     collapse into one aggregate over ONE explicit hash repartition on
+      *     the key columns ([[byKey]]); its width divides the bucket count,
+      *     so every bucket is whole in one task and the write needs no extra
+      *     repartition.
+      * Only the touched buckets are read and rewritten; the others carry
+      * over by manifest reference (zero data movement). Epoch cost scales
+      * with the batch's key spread, not with table size.
       *
-      * Sparse epochs (`assumeFullTouch = false`, or more than 32 buckets —
-      * see [[willFuseStats]]): a narrow stats pass over (repo, path, lsn, op)
-      * — content column-pruned out of the scan — first computes the
-      * touched-bucket set, so only those buckets' files are read and
-      * rewritten; untouched buckets carry over by manifest reference (zero
-      * data movement). This is the path that matters at 100 TB: epoch cost
-      * scales with the batch's key spread, not with table size.
+      * `sums` are per-row long columns of `batch` that the pre-pass also
+      * totals; `check` gets those totals (in `sums` order) after the
+      * pre-pass and before any file is written, so throwing from it aborts
+      * the apply with nothing written and nothing committed. The
+      * ReplayEngine's quality gate, input count and checksum ride here.
       *
       * Ordering contract (binlog tail): epoch ids are fenced monotonic, and
       * within a batch order and duplication are free (max-LSN resolution).
@@ -974,128 +959,77 @@ object lake {
       * no row to outrank a stale pre-delete redelivery, so deleted-key
       * anti-resurrection needs an in-order tail or the cross-epoch dedup
       * watermark (streaming.statefulDedup).
-      *
-      * `preCommit` runs after the write job completes (any Observations on
-      * `batch` have resolved) but BEFORE the snapshot commit — throwing from
-      * it aborts the epoch with zero committed state (the written files are
-      * unreferenced, vacuum-able orphans). The ReplayEngine fuses the
-      * quality gate here on the dense path.
       */
-    def merge(batch: DataFrame, epochId: Long, assumeFullTouch: Boolean = false,
-        preCommit: () => Unit = () => ()): CommitResult = {
+    def merge(batch: DataFrame, epochId: Long, sums: Seq[Column] = Nil,
+        check: Seq[Long] => Unit = _ => ()): CommitResult = {
       val cur = snapshot
       requireMergeableSchema(cur)
       if (epochId >= 0 && epochId <= cur.epochId) return CommitResult(committed = false, cur, Nil)
-      val (leg, touched, statsOf) = batchStats(batch, cur, assumeFullTouch)
-      if (touched.exists(_.isEmpty)) return CommitResult(committed = false, cur, Nil) // empty batch
+      val (leg, stats) = batchStats(batch, cur, sums, check)
+      if (stats.isEmpty) return CommitResult(committed = false, cur, Nil) // empty batch
       // fused dedup+merge: base rows join the race at their stored row _lsn,
       // MoR delta rows at their own LSN, batch events at theirs — one
       // aggregation resolves everything by true log position (a CoW merge
       // also compacts any deltas of the buckets it rewrites). Chunked mode
-      // reads only the touched buckets' manifests: a sparse epoch never
+      // reads only the touched buckets' manifests: an epoch never
       // materializes the full file list driver-side.
-      val olds = filesOfBuckets(cur, touched)
-      val merged = mergeExpr(byKey(storedChanges(cur, olds).unionByName(leg), cur,
-        touched.fold(cur.numBuckets)(_.size)), cur)
+      val olds = filesOfBuckets(cur, Some(stats.keySet))
+      val merged = mergeExpr(byKey(storedChanges(cur, olds).unionByName(leg), cur, stats.size), cur)
       // byKey laid the aggregate out bucket-whole — no repartition before
       // the bucketed write
       val written = writeBucketed(merged, cur, cur.version + 1,
         repartitionByBucket = false, withRowLsn = true)
-      preCommit() // batch Observations have resolved; abort here = zero committed state
-      commitApply(cur, epochId, statsOf(), written, olds)
+      commitApply(cur, epochId, stats, written, olds)
     }
 
-    /** The batch leg of an apply job (lsn, op, payload), the buckets the job
-      * reads and rewrites (None = every bucket), and the batch's per-bucket
-      * stats, resolvable once the write job has run.
-      *
-      * Fused ([[willFuseStats]]): the stats are OBSERVED METRICS on the leg,
-      * four aggregates per bucket in one Observation, so the epoch is one
-      * job with no batch pre-pass, and the job reads and rewrites every
-      * bucket. Contract: `dense` callers assert a non-trivial batch (the
-      * ReplayEngine gates it on knownInputCount >= numBuckets*32). An
-      * actually-empty batch stays CORRECT — zero observed counts skip the
-      * commit — but its already-written files are left as vacuum-able
-      * orphans; emptiness cannot be known earlier without a pre-pass, which
-      * is the very job this path exists to avoid.
-      *
-      * Otherwise the [[perBucketStats]] pre-pass runs here, and its
-      * touched-bucket set (empty for an empty batch) prunes the job. */
-    private def batchStats(batch: DataFrame, cur: Snapshot, dense: Boolean)
-        : (DataFrame, Option[Set[Int]], () => Map[Int, BucketStats]) = {
-      val ordered = Seq(col("lsn"), col("op")) ++ cur.schema.fieldNames.map(col)
-      if (!willFuseStats(cur, dense)) {
-        val stats = perBucketStats(batch, cur, dense)
-        return (batch.select(ordered: _*), Some(stats.keySet), () => stats)
-      }
-      val nb = cur.numBuckets
-      val obs = org.apache.spark.sql.Observation(s"batch-stats-${UUID.randomUUID()}")
-      val aggs = (0 until nb).flatMap { b =>
-        val isB = col("_ob") === b
-        Seq(
-          min(when(isB, col("lsn"))).as(s"lmin$b"),
-          max(when(isB, col("lsn"))).as(s"lmax$b"),
-          sum(when(isB && col("op") === "D", 1L).otherwise(0L)).as(s"dels$b"),
-          sum(when(isB && col("op") =!= "D", 1L).otherwise(0L)).as(s"ups$b"))
-      }
-      val leg = batch
-        .select((ordered :+ bucketExpr(cur).as("_ob")): _*)
-        .observe(obs, aggs.head, aggs.tail: _*)
-        .drop("_ob")
-      def resolve(): Map[Int, BucketStats] = {
-        val m = obs.get
-        def metric(n: String): Option[Long] =
-          m.get(n).collect { case x: Number => x.longValue }
-        (0 until nb).flatMap { b =>
-          val ups = metric(s"ups$b").getOrElse(0L)
-          val dels = metric(s"dels$b").getOrElse(0L)
-          if (ups + dels == 0) None
-          else Some(b -> BucketStats(metric(s"lmin$b").getOrElse(-1L),
-            metric(s"lmax$b").getOrElse(-1L), ups, dels))
-        }.toMap
-      }
-      (leg, None, () => resolve())
-    }
+    /** The batch leg of an apply job (lsn, op, payload) and the batch's
+      * per-bucket stats from the [[perBucketStats]] pre-pass (empty for an
+      * empty batch). */
+    private def batchStats(batch: DataFrame, cur: Snapshot, sums: Seq[Column],
+        check: Seq[Long] => Unit): (DataFrame, Map[Int, BucketStats]) =
+      (batch.select((Seq(col("lsn"), col("op")) ++ cur.schema.fieldNames.map(col)): _*),
+        perBucketStats(batch, cur, sums, check))
 
-    /** Per-bucket batch stats, one narrow aggregate job (content is
-      * column-pruned out of the scan). Dense epochs aggregate RAW events
-      * straight to <= numBuckets groups — fully map-side combinable, no
-      * per-key stage. Sparse epochs first reduce to per-key winners, so the
-      * lineage counts are the batch's per-key change rows (and the
-      * touched-bucket set prunes the target read). Counting note: a winner
+    /** Per-bucket batch stats, one aggregate job that scans only the key,
+      * lsn and op columns and what `sums` reads. The batch is reduced to
+      * per-key winners first, so the lineage counts are the batch's per-key
+      * change rows, and the bucket set is what the apply reads and
+      * rewrites. Each `sums` column is totalled per key, per bucket, then
+      * over the batch, and `check` gets the totals. Counting note: a winner
       * that then LOSES to a higher stored row `_lsn` (a stale redelivery)
       * is still counted — lineage/metrics report the batch's change volume,
       * an upper bound on rows actually applied under redelivery. */
-    private def perBucketStats(batch: DataFrame, cur: Snapshot,
-        assumeFullTouch: Boolean): Map[Int, BucketStats] = {
-      val keys = cur.keyColumns
-      val narrow = batch.select((keys.map(col) :+ col("lsn") :+ col("op")): _*)
-      val perBucket =
-        if (assumeFullTouch) narrow.groupBy(bucketExpr(cur).as("_b"))
-        else narrow
-          .groupBy(keys.map(col): _*)
-          .agg(max_by(col("op"), col("lsn")).as("op"), max("lsn").as("lsn"))
-          .groupBy(bucketExpr(cur).as("_b"))
-      perBucket
-        .agg(min("lsn").as("lmin"), max("lsn").as("lmax"),
+    private def perBucketStats(batch: DataFrame, cur: Snapshot, sums: Seq[Column],
+        check: Seq[Long] => Unit): Map[Int, BucketStats] = {
+      val keys = cur.keyColumns.map(col)
+      val names = sums.indices.map(i => s"_sum$i")
+      val totals = names.map(n => sum(n).as(n))
+      val rows = batch
+        .select((keys ++ Seq(col("lsn"), col("op")) ++
+          sums.zip(names).map { case (c, n) => c.cast(LongType).as(n) }): _*)
+        .groupBy(keys: _*)
+        .agg(max_by(col("op"), col("lsn")).as("op"), (max("lsn").as("lsn") +: totals): _*)
+        .groupBy(bucketExpr(cur).as("_b"))
+        .agg(min("lsn").as("lmin"), (Seq(max("lsn").as("lmax"),
           sum(when(col("op") === "D", 1L).otherwise(0L)).as("dels"),
-          sum(when(col("op") =!= "D", 1L).otherwise(0L)).as("ups"))
+          sum(when(col("op") =!= "D", 1L).otherwise(0L)).as("ups")) ++ totals): _*)
         .collect()
-        .map(r => r.getAs[Int]("_b") -> BucketStats(r.getAs[Long]("lmin"),
-          r.getAs[Long]("lmax"), r.getAs[Long]("ups"), r.getAs[Long]("dels")))
-        .toMap
+      check(names.map(n => rows.map(_.getAs[Long](n)).sum))
+      rows.map(r => r.getAs[Int]("_b") -> BucketStats(r.getAs[Long]("lmin"),
+        r.getAs[Long]("lmax"), r.getAs[Long]("ups"), r.getAs[Long]("dels"))).toMap
     }
 
     /** Commit an apply epoch whose `written` files replace `olds` — every
       * file of the buckets a CoW merge rewrote, Nil for a MoR delta append.
-      * Each written file gets its bucket's batch lsn range; a rewritten
-      * bucket the batch missed keeps its old files' range. Lineage has one
-      * row per bucket in `stats`; an empty batch (no stats) commits
-      * nothing. */
+      * `stats` has every bucket the batch touched, so every bucket a file
+      * was written to: each file gets its bucket's batch lsn range, and
+      * lineage has one row per bucket in `stats`. */
     private def commitApply(cur: Snapshot, epochId: Long, stats: Map[Int, BucketStats],
         written: Seq[DataFile], olds: Seq[DataFile]): CommitResult = {
-      if (stats.isEmpty) return CommitResult(committed = false, cur, Nil)
-      val newFiles = stampRanges(written, olds, stats)
+      val newFiles = written.map { f =>
+        val s = stats(f.bucket)
+        f.copy(lsnMin = s.lsnMin, lsnMax = s.lsnMax)
+      }
       val oldByBucket = olds.groupBy(_.bucket)
       val (nf, nm) = nextFileState(cur, oldByBucket.keySet, newFiles)
       val next = cur.copy(version = cur.version + 1, epochId = math.max(epochId, cur.epochId),
@@ -1118,15 +1052,12 @@ object lake {
       else (stamped.map(_.lsnMin).min, stamped.map(_.lsnMax).max)
     }
 
-    /** `written` files stamped with their bucket's lsn range: the batch's
-      * range from `batch`, else the [[lsnEnvelope]] of the bucket's `olds`
-      * (the files the write replaced, whose rows it carried over). */
-    private def stampRanges(written: Seq[DataFile], olds: Seq[DataFile],
-        batch: Map[Int, BucketStats] = Map.empty): Seq[DataFile] = {
+    /** `written` files stamped with the [[lsnEnvelope]] of their bucket's
+      * `olds` (the files the write replaced, whose rows it carried over). */
+    private def stampRanges(written: Seq[DataFile], olds: Seq[DataFile]): Seq[DataFile] = {
       val oldByBucket = olds.groupBy(_.bucket)
       written.map { f =>
-        val (lo, hi) = batch.get(f.bucket).map(s => (s.lsnMin, s.lsnMax))
-          .getOrElse(lsnEnvelope(oldByBucket.getOrElse(f.bucket, Nil)))
+        val (lo, hi) = lsnEnvelope(oldByBucket.getOrElse(f.bucket, Nil))
         f.copy(lsnMin = lo, lsnMax = hi)
       }
     }
@@ -1137,19 +1068,19 @@ object lake {
       * [[compactDeltas]] (or any CoW merge touching the bucket) folds them
       * into base files. The MoR trade: epoch apply cost ~ batch size instead
       * of ~ touched-bucket size; read cost grows with outstanding deltas.
-      * Dense epochs fuse the per-bucket stats into the winners job exactly
-      * like [[merge]] ([[batchStats]]). */
-    def deltaAppend(batch: DataFrame, epochId: Long, assumeFullTouch: Boolean = false,
-        preCommit: () => Unit = () => ()): CommitResult = {
+      * The same two jobs as [[merge]], with the same `sums`/`check` seam:
+      * the [[perBucketStats]] pre-pass, then the winners write. */
+    def deltaAppend(batch: DataFrame, epochId: Long, sums: Seq[Column] = Nil,
+        check: Seq[Long] => Unit = _ => ()): CommitResult = {
       val cur = snapshot
       requireMergeableSchema(cur)
       if (epochId >= 0 && epochId <= cur.epochId) return CommitResult(committed = false, cur, Nil)
       val keys = cur.keyColumns
       val nonKey = cur.schema.fieldNames.toSeq.filterNot(keys.contains)
-      val (leg, touched, statsOf) = batchStats(batch, cur, assumeFullTouch)
-      if (touched.exists(_.isEmpty)) return CommitResult(committed = false, cur, Nil) // empty batch
+      val (leg, stats) = batchStats(batch, cur, sums, check)
+      if (stats.isEmpty) return CommitResult(committed = false, cur, Nil) // empty batch
       // per-key winners incl. delete tombstones, keeping (lsn, op)
-      val winners = byKey(leg, cur, touched.fold(cur.numBuckets)(_.size))
+      val winners = byKey(leg, cur, stats.size)
         .groupBy(keys.map(col): _*)
         .agg(graft.functions.MaxByRow.maxByRow(
           struct((Seq(col("lsn"), col("op")) ++ nonKey.map(col)): _*), col("lsn")).as("_e"))
@@ -1157,8 +1088,7 @@ object lake {
           nonKey.map(c => col(s"_e.$c").as(c)): _*)
       val written = writeBucketed(winners, cur, cur.version + 1,
         repartitionByBucket = false, kind = "delta")
-      preCommit() // see merge(): abort here leaves only vacuum-able orphans
-      val res = commitApply(cur, epochId, statsOf(), written, olds = Nil)
+      val res = commitApply(cur, epochId, stats, written, olds = Nil)
       if (res.committed) maybeAutoCompact(res.snapshot)
       res
     }
@@ -1382,7 +1312,6 @@ object lake {
       if (newBuckets == cur.numBuckets) return cur.version // already there: no-op
       val reshaped = cur.copy(numBuckets = newBuckets)
       val olds = filesOf(cur)
-      val oldDeltas = olds.filter(_.kind == "delta")
       // fused read (base ⊕ deltas, row lsn kept) under the OLD layout,
       // rewritten under the NEW bucket hash
       val data = readBucketsWithLsn(cur, None)
@@ -1393,7 +1322,7 @@ object lake {
       // shape so the chunked/inline decision tracks the new count
       val (nf, nm) = nextFileState(reshaped, (0 until cur.numBuckets).toSet, newFiles)
       val next = reshaped.copy(version = cur.version + 1, files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, oldDeltas))
+        foldedLsnHigh = foldDeltas(cur, olds))
       require(commit(next, fence = false), "rebucket commit failed")
       next.version
     }
@@ -1422,7 +1351,6 @@ object lake {
             s"cluster column '$c' not in schema ${cur.schema.fieldNames.mkString("(", ", ", ")")}"))
       }
       val olds = filesOf(cur)
-      val oldDeltas = olds.filter(_.kind == "delta")
       val data = readBucketsWithLsn(cur, None)
       // bucket membership is unchanged (unlike rebucket's global envelope),
       // so stamp each rewritten file with ITS bucket's old lsn range
@@ -1430,7 +1358,7 @@ object lake {
         sortCols = resolved, maxRowsPerFile = Some(maxRowsPerFile)), olds)
       val (nf, nm) = nextFileState(cur, (0 until cur.numBuckets).toSet, newFiles)
       val next = cur.copy(version = cur.version + 1, files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, oldDeltas))
+        foldedLsnHigh = foldDeltas(cur, olds))
       require(commit(next, fence = false), "cluster commit failed")
       next.version
     }

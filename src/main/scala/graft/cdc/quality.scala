@@ -81,19 +81,28 @@ object quality {
     private def crit(c: Criticality): String =
       c match { case Criticality.Error => "error"; case Criticality.Warn => "warn" }
 
+    /** One 1/0 violation indicator per check and row, in [[checks]] order;
+      * `rowFilter` limits which rows the gate applies to (the engine
+      * excludes delete tombstones). Their sums are the violation counts
+      * [[failuresOf]] reads: [[evaluate]] sums them in a job of its own, the
+      * ReplayEngine in the apply's stats pre-pass. */
+    def violations(rowFilter: Column = lit(true)): Seq[Column] =
+      checks.map(c => when(rowFilter && c.violation, 1L).otherwise(0L))
+
+    /** The failures behind per-check violation counts (in [[checks]] order). */
+    def failuresOf(counts: Seq[Long]): Seq[CheckFailure] =
+      checks.zip(counts).collect { case (c, n) if n > 0 =>
+        CheckFailure(c.name, c.column, crit(c.criticality), n)
+      }
+
     /** Evaluate all checks in ONE aggregate job; returns every failure
       * (warn + error) WITHOUT throwing — callers decide (and can persist the
       * audit rows before aborting, like the reference's _handle_errors). */
     def evaluate(df: DataFrame): Seq[CheckFailure] = {
       if (checks.isEmpty) return Nil
-      val aggs = checks.zipWithIndex.map { case (c, i) =>
-        sum(when(c.violation, 1L).otherwise(0L)).as(s"c$i")
-      }
+      val aggs = violations().zipWithIndex.map { case (v, i) => sum(v).as(s"c$i") }
       val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      checks.zipWithIndex.flatMap { case (c, i) =>
-        val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-        if (n > 0) Some(CheckFailure(c.name, c.column, crit(c.criticality), n)) else None
-      }
+      failuresOf(checks.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i)))
     }
 
     /** Evaluate the keyed checks (one shuffle per distinct key set; the gate
@@ -112,23 +121,6 @@ object quality {
 
     /** Row checks + keyed checks — the full sink-side gate (GatedWriter). */
     def evaluateAll(df: DataFrame): Seq[CheckFailure] = evaluate(df) ++ evaluateKeyed(df)
-
-    /** The same violation-count aggregates as [[evaluate]], shaped for fusing
-      * into another job as an `Observation` (ride the merge write; no separate
-      * gate scan). `rowFilter` limits which rows the gate applies to (the
-      * engine excludes delete tombstones). Resolve with
-      * [[failuresFromObserved]] after the observed job completes. */
-    def observedAggs(rowFilter: Column): Seq[Column] =
-      checks.zipWithIndex.map { case (c, i) =>
-        sum(when(rowFilter && c.violation, 1L).otherwise(0L)).as(s"gate$i")
-      }
-
-    /** Decode an Observation's metric map produced by [[observedAggs]]. */
-    def failuresFromObserved(m: Map[String, Any]): Seq[CheckFailure] =
-      checks.zipWithIndex.flatMap { case (c, i) =>
-        val n = m.get(s"gate$i").collect { case x: Number => x.longValue }.getOrElse(0L)
-        if (n > 0) Some(CheckFailure(c.name, c.column, crit(c.criticality), n)) else None
-      }
 
     /** Evaluate and throw [[QualityGateError]] if any error-level check fired. */
     def check(df: DataFrame): Seq[CheckFailure] = {

@@ -159,7 +159,10 @@ object streaming {
   /** Run the CDC apply loop over a streaming source; one micro-batch = one
     * epoch. `Trigger.AvailableNow` drains everything currently in the source
     * then stops (deterministic for tests/bench); pass ProcessingTime for a
-    * long-lived tail.
+    * long-lived tail. Each micro-batch is persisted and handed to
+    * `applyEpoch` as is: the stats pre-pass runs the upstream plan once
+    * (filling the cache the write reads) and counts the batch, so a no-data
+    * batch commits nothing after that one job.
     *
     * `watermarkFile`: after each committed epoch, the table's durable
     * `lsnHigh` is published to this shared-storage path — the feed for an
@@ -206,32 +209,6 @@ object streaming {
       trigger: Trigger, watermarkFile: Option[String]): StreamingQuery = {
     events.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Detach the micro-batch's SQL execution id for the engine's own
-        // actions: foreachBatch runs inside the stream's
-        // SQLExecution.withNewExecutionId, and a NESTED action keeps the
-        // outer id — QueryExecutionListener then never fires for it, so any
-        // Observation the engine fuses into its merge job (the dense-path
-        // per-bucket stats / gate metrics) would block in get() forever.
-        // Detaching makes the engine's jobs root executions (the listener
-        // fires, observations resolve); the id is restored so the
-        // micro-batch machinery above this call is untouched.
-        val sc = batch.sparkSession.sparkContext
-        val prevExecId = sc.getLocalProperty("spark.sql.execution.id")
-        sc.setLocalProperty("spark.sql.execution.id", null)
-        // Rebind the micro-batch frame to the ENGINE's session: foreachBatch
-        // runs under a cloned session, and Spark's ExecutionListenerBus
-        // filters SQLExecutionEnd events by session UUID — an Observation
-        // registered on the clone (via a frame derived from `batch`) never
-        // sees the engine-session action that resolves it. The batch frame
-        // is a LogicalRDD over the already-planned incremental RDD, so the
-        // rebind re-plans nothing stateful.
-        val spark0 = engine.table.spark
-        val b0 =
-          if (batch.sparkSession eq spark0) batch
-          else org.apache.spark.sql.graftbridge.Bridge.ofRows(
-            spark0, batch.asInstanceOf[org.apache.spark.sql.classic.Dataset[
-              org.apache.spark.sql.Row]].queryExecution.logical)
-        try {
         val fenced = batchId >= 0 && batchId <= engine.table.snapshot.epochId
         if (fenced) {
           // crash-redelivered batchId (query restart on the same checkpoint):
@@ -243,23 +220,18 @@ object streaming {
           // would genuinely break state-version continuity for the NEXT
           // batch. count() drives every partition; the emitted rows are
           // discarded — the fence already guarantees the table ignores them.
-          b0.count()
+          batch.count()
         } else {
-          // persist + count up front: the upstream plan (state-store ops
-          // included) executes ONCE to populate the cache, the count feeds
-          // applyEpoch's knownInputCount — which takes the fused dense-merge
-          // path and skips both the stats pre-pass and the metrics count()
-          // re-scan (guide §1.2: don't re-run the batch plan per consumer).
-          // A no-data batch (n = 0) short-circuits applyEpoch entirely while
-          // the count() above still drove the state-store commit.
-          b0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // persist: the merge's stats pre-pass executes the upstream plan
+          // (state-store ops included) ONCE, driving every partition even
+          // for a no-data batch, and populates the cache the write then
+          // reads: the batch plan never runs twice
+          batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val n = b0.count()
-            engine.applyEpoch(b0, batchId, knownInputCount = Some(n))
+            engine.applyEpoch(batch, batchId)
             watermarkFile.foreach(f => LsnWatermark.write(f, engine.table.snapshot.lsnHigh))
-          } finally { b0.unpersist(blocking = false); () }
+          } finally { batch.unpersist(blocking = false); () }
         }
-        } finally sc.setLocalProperty("spark.sql.execution.id", prevExecId)
         ()
       }
       .option("checkpointLocation", checkpointDir)

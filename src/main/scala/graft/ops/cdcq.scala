@@ -15,7 +15,8 @@ import graft.cdc.model._
   * engine (epochs, dedup, CoW merge, fenced commits) into a temp-dir table
   * and returns the final state — which DuckDB re-derives relationally. This
   * makes the whole replay path (not just its pieces) part of the driver's
-  * correctness gate.
+  * correctness gate. Epochs are applied with no input-count hint: the
+  * merge's stats pre-pass counts each one.
   */
 object cdcq {
   /** Scratch roots for the oracle queries' temp lake tables, checkpoints and
@@ -63,17 +64,6 @@ object cdcq {
     cat
   }
 
-  /** Per-epoch event counts in ONE aggregate job over the (cached) changes.
-    * Passing these as `knownInputCount` lets every epoch take the fused
-    * dense-merge path (per-bucket stats ride the merge job as observed
-    * metrics) AND skips the per-epoch metrics count() scan — one Spark job
-    * per epoch instead of three (guide §1.2: remove unnecessary passes).
-    * Exact by construction: lsn div per == e iff e*per <= lsn <
-    * (e+1)*per, the identical range the epoch loop filters on. */
-  private def epochCounts(changes: DataFrame, per: Long): Map[Int, Long] =
-    changes.groupBy(epochOf(col("lsn"), per).cast("int").as("_e"))
-      .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
   /** Epoch of a (non-negative) LSN at `per` LSNs per epoch: exact long
     * division — a double `lsn / per` rounds once LSNs pass 2^53. */
   private[graft] def epochOf(lsn: Column, per: Long): Column =
@@ -110,11 +100,9 @@ object cdcq {
     val engine = new ReplayEngine(table, SchemaRegistry.single(tableSchema))
     val epochs = 4
     val per = (maxLsn + epochs) / epochs // ceil so the last range covers maxLsn
-    val counts = epochCounts(changes, per)
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = Some(counts.getOrElse(e, 0L)))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
     }
     changes.unpersist()
     table.read()
@@ -135,11 +123,9 @@ object cdcq {
       mode = ingest.MergeMode.MoR)
     val epochs = 4
     val per = (maxLsn + epochs) / epochs
-    val counts = epochCounts(changes, per)
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = Some(counts.getOrElse(e, 0L)))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
     }
     changes.unpersist()
     table.compactDeltas()
@@ -166,12 +152,10 @@ object cdcq {
       mode = ingest.MergeMode.MoR)
     val epochs = 4
     val per = (maxLsn + epochs) / epochs
-    val counts = epochCounts(changes, per)
     var sinceVersion = -1L
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = Some(counts.getOrElse(e, 0L)))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
       if (e == 1) sinceVersion = table.snapshot.version
     }
     changes.unpersist()
@@ -209,12 +193,10 @@ object cdcq {
     val maxLsn = changes.agg(max("lsn")).collect()(0).getLong(0)
     val epochs = 4
     val per = (maxLsn + epochs) / epochs
-    val counts = epochCounts(changes, per)
     var sinceVersion = -1L
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = Some(counts.getOrElse(e, 0L)))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
       if (e == 1) sinceVersion = table.snapshot.version
     }
     changes.unpersist()
@@ -253,11 +235,9 @@ object cdcq {
     }
     val epochs = 4
     val per = (maxLsn + epochs) / epochs
-    val counts = epochCounts(changes, per)
     (0 until epochs).foreach { e =>
       upEngine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = Some(counts.getOrElse(e, 0L)))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
       if (e == 1) drainFeed() // mid-replay drain: checkpoint holds a mid-log offset
     }
     changes.unpersist()
@@ -294,11 +274,9 @@ object cdcq {
     val maxLsn = changes.agg(max("lsn")).collect()(0).getLong(0)
     val epochs = 4
     val per = (maxLsn + epochs) / epochs
-    val counts = epochCounts(changes, per)
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = Some(counts.getOrElse(e, 0L)))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
       if (e == 1) {
         val before = table.snapshot
         require(table.filesOf(before).exists(_.kind == "delta"),
@@ -589,14 +567,9 @@ object cdcq {
       gate = Some(gate), auditTable = Some(audit), quarantineTable = Some(quarantine))
     val epochs = 4
     val per = (maxLsn + epochs) / epochs
-    // per-epoch counts (one aggregate over the cached batch) let the engine
-    // take the dense path, where the gate aggregates ride the merge job as
-    // observed metrics — a gated epoch costs ONE scan, not two
-    val perEpochCounts = epochCounts(changes, per)
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = perEpochCounts.get(e))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
     }
     changes.unpersist()
     DqTables(audit, quarantine)
@@ -655,11 +628,9 @@ object cdcq {
     val engine = new ReplayEngine(table, SchemaRegistry.single(tableSchema))
     val epochs = 2
     val per = (maxLsn + epochs) / epochs
-    val counts = epochCounts(changes, per)
     (0 until epochs).foreach { e =>
       engine.applyEpoch(
-        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e,
-        knownInputCount = Some(counts.getOrElse(e, 0L)))
+        changes.filter(col("lsn") >= e * per && col("lsn") < (e + 1) * per), e)
     }
     changes.unpersist()
     table.createView("repo_files_v")
@@ -959,18 +930,11 @@ object cdcq {
       tableSchema, Seq("repo", "path"), numBuckets = 16)
     val reg1 = SchemaRegistry.single(tableSchema)
     val engine1 = new ReplayEngine(table, reg1)
-    // both epoch counts in one aggregate over the cached batch (dense-path
-    // hint + metrics count, same rationale as epochCounts)
-    val cnts = changes.agg(
-      sum(when(col("lsn") < half, 1L).otherwise(0L)), count(lit(1))).head
-    val (c0, c1) = (cnts.getLong(0), cnts.getLong(1) - cnts.getLong(0))
-    engine1.applyEpoch(changes.filter(col("lsn") < half).drop("value_cents", "value"), 0,
-      knownInputCount = Some(c0))
+    engine1.applyEpoch(changes.filter(col("lsn") < half).drop("value_cents", "value"), 0)
     // additive evolution between epochs (the north rule's mid-stream case)
     table.evolveSchema(v2Schema)
     val engine2 = new ReplayEngine(table, table.snapshot.registry)
-    engine2.applyEpoch(changes.filter(col("lsn") >= half).drop("value"), 1,
-      knownInputCount = Some(c1))
+    engine2.applyEpoch(changes.filter(col("lsn") >= half).drop("value"), 1)
     changes.unpersist()
     table.read()
       .select(col("repo"), col("path"), col("commit_id"), col("lang"), col("value_cents"))

@@ -10,9 +10,9 @@ import graft.cdc.lake._
 import graft.cdc.ingest._
 import graft.cdc.model._
 
-/** The CDC-apply kernel behind `merge` and `deltaAppend`: how a dense epoch
-  * stamps the buckets its batch misses, and how many Spark jobs each of the
-  * four apply paths (CoW / MoR, dense / sparse) runs per epoch. */
+/** The CDC-apply kernel behind `merge` and `deltaAppend`: what a dense-sized
+  * epoch does to the buckets its batch misses, and how many Spark jobs an
+  * epoch runs in CoW and MoR mode, with or without `knownInputCount`. */
 class ApplyKernelSpec extends SparkSuite {
 
   /** Upsert events for paths `ids`, LSNs from `lsn0`, in the RepoRow shape. */
@@ -34,17 +34,12 @@ class ApplyKernelSpec extends SparkSuite {
     val bucket = t.bucketExpr(t.snapshot)
     val missed = events(seedIds, 0).select(bucket).distinct().collect().map(_.getInt(0)).sorted.take(2).toSet
     assert(missed.size == 2)
-    // an unstamped (-1) append file in a missed bucket: the kept range must
-    // come from the stamped files only
+    // an unstamped (-1) append file in a missed bucket: it must carry over
+    // unstamped, beside the stamped files
     val extra = events((5000L until 5200L).toSeq, 0).where(bucket === missed.head).drop("lsn", "op")
     assert(t.append(extra).committed)
     val before = t.filesOf(t.snapshot)
     assert(before.exists(f => f.bucket == missed.head && f.lsnMin < 0))
-    def envelope(fs: Seq[DataFile]): (Long, Long) = {
-      val stamped = fs.filter(_.lsnMin >= 0)
-      (stamped.map(_.lsnMin).min, stamped.map(_.lsnMax).max)
-    }
-    val oldRange = missed.map(b => b -> envelope(before.filter(_.bucket == b))).toMap
 
     val batch = events((0L until 600L).toSeq, 1000).where(!bucket.isin(missed.toSeq: _*))
     val rows = batch.select(bucket.as("b"), col("lsn")).collect().map(r => r.getInt(0) -> r.getLong(1))
@@ -55,12 +50,10 @@ class ApplyKernelSpec extends SparkSuite {
     val r = engine.applyEpoch(batch, 1, knownInputCount = Some(rows.length.toLong))
     assert(r.committed)
     val after = t.filesOf(t.snapshot)
-    missed.foreach { b =>
-      val now = after.filter(_.bucket == b)
-      assert(now.nonEmpty && now.forall(f => !before.exists(_.path == f.path)),
-        s"bucket $b must be rewritten by the dense epoch")
-      now.foreach(f => assert((f.lsnMin, f.lsnMax) == oldRange(b), s"bucket $b: $f"))
-    }
+    // a missed bucket carries over by reference: same files, same ranges
+    def refs(fs: Seq[DataFile], b: Int) =
+      fs.filter(_.bucket == b).map(f => (f.path, f.lsnMin, f.lsnMax)).toSet
+    missed.foreach(b => assert(refs(after, b) == refs(before, b), s"bucket $b must carry over"))
     batchRange.foreach { case (b, range) =>
       after.filter(_.bucket == b).foreach(f => assert((f.lsnMin, f.lsnMax) == range, s"bucket $b: $f"))
     }
@@ -108,19 +101,17 @@ class ApplyKernelSpec extends SparkSuite {
   }
 
   for (mode <- Seq(MergeMode.CoW, MergeMode.MoR)) {
-    test(s"$mode applyEpoch job counts: dense 1, sparse 3; an empty sparse epoch writes no data") {
-      // dense: the per-bucket stats ride the write job as observed metrics.
-      // sparse: the stats pre-pass, the write, and the input count() that
-      // fills the metrics when knownInputCount is absent.
-      for ((dense, want) <- Seq(true -> 1, false -> 3)) {
-        val t = newTable(s"jobs-$mode-$dense")
+    test(s"$mode applyEpoch job counts: 2 with or without knownInputCount; an empty epoch writes no data") {
+      // the stats pre-pass (which also counts the input) and the write
+      for (hint <- Seq(true, false)) {
+        val t = newTable(s"jobs-$mode-$hint")
         val engine = new ReplayEngine(t, SchemaRegistry.single(RepoRow.schemaV1), mode = mode)
         assert(engine.applyEpoch(events((0L until 400L).toSeq, 0), 0).committed)
         val ids = (0L until 512L).toSeq
         val (r, jobs) = jobsOf(engine.applyEpoch(events(ids, 1000), 1,
-          knownInputCount = if (dense) Some(ids.size.toLong) else None))
-        assert(r.committed)
-        assert(jobs == want, s"$mode ${if (dense) "dense" else "sparse"} epoch: $jobs Spark jobs")
+          knownInputCount = if (hint) Some(ids.size.toLong) else None))
+        assert(r.committed && r.metrics.events_in == ids.size)
+        assert(jobs == 2, s"$mode epoch (knownInputCount ${if (hint) "set" else "absent"}): $jobs Spark jobs")
         assert(t.read().count() == 512)
       }
       val t = newTable(s"empty-$mode")
@@ -130,7 +121,7 @@ class ApplyKernelSpec extends SparkSuite {
       val v = t.snapshot.version
       val r = engine.applyEpoch(events(Nil, 100), 1)
       assert(!r.committed && t.snapshot.version == v)
-      assert(dataDirs(t) == dirs, "an empty sparse epoch must write no data dir")
+      assert(dataDirs(t) == dirs, "an empty epoch must write no data dir")
     }
   }
 }

@@ -46,46 +46,50 @@ class CdcReplaySpec extends SparkSuite {
     }
   }
 
-  test("dense full-touch path (stats fused as observed metrics) matches oracle and sparse lineage") {
+  test("applyEpoch with and without knownInputCount: identical lineage, metrics and committed buckets") {
     val cfg = gen.GenConfig(n = 8000, nKeys = 1200, numPartitions = 4)
     val all = gen.changeEvents(spark, cfg)
-    def run(root: String, dense: Boolean, mode: MergeMode): (LakeTable, Seq[EpochResult]) = {
-      val t = LakeTable.createIfNotExists(spark, root, "repo_files",
+    val exp = gen.oracleFinalState(cfg)
+    /** Per epoch: lineage rows (committed_at dropped), metrics counts, and
+      * the buckets whose files the commit changed. */
+    def run(mode: MergeMode, hint: Boolean) = {
+      val t = LakeTable.createIfNotExists(spark, tmpDir(s"hint-$mode-$hint"), "repo_files",
         RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 8)
       val eng = new ReplayEngine(t, SchemaRegistry.single(RepoRow.schemaV1), mode = mode)
-      val rs = (0 until 2).map { e =>
-        val batch = all.filter(col("lsn") >= e * 4000 && col("lsn") < (e + 1) * 4000)
-        // knownInputCount = 4000 >= 8 buckets * 32 -> dense (observe) path
-        eng.applyEpoch(batch, e, knownInputCount = if (dense) Some(4000L) else None)
+      val epochs = (0 until 2).map { e =>
+        val before = t.filesOf(t.snapshot)
+        // 4000 events into 8 buckets: a dense-sized epoch, every bucket touched
+        val r = eng.applyEpoch(all.filter(col("lsn") >= e * 4000 && col("lsn") < (e + 1) * 4000), e,
+          knownInputCount = if (hint) Some(4000L) else None)
+        assert(r.committed)
+        val after = t.filesOf(t.snapshot)
+        val (b, a) = (before.map(_.path).toSet, after.map(_.path).toSet)
+        val changed = (after.filterNot(f => b(f.path)) ++ before.filterNot(f => a(f.path))).map(_.bucket).toSet
+        val m = r.metrics
+        assert(m.events_in == 4000L && m.events_applied == r.lineage.map(l => l.rows_upserted + l.rows_deleted).sum)
+        (r.lineage.map(_.copy(committed_at = null)).sortBy(_.partition),
+          (m.events_in, m.events_deduped, m.events_applied), changed)
       }
       if (mode == MergeMode.MoR) t.compactDeltas()
-      (t, rs)
-    }
-    val (td, rd) = run(tmpDir("dense"), dense = true, MergeMode.CoW)
-    val (ts, rs) = run(tmpDir("sparse"), dense = false, MergeMode.CoW)
-    // same final state as the independent oracle
-    val exp = gen.oracleFinalState(cfg)
-    Seq(td, ts).foreach { t =>
       val got = t.read().select(col("repo"), col("path"), sha2(col("content"), 256).as("h"))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
       assert(got.size == exp.size)
       exp.foreach { case (k, e) => assert(got.get(k).contains(gen.sha256Hex(e.content))) }
+      epochs
     }
-    // dense lineage (raw-event counts by bucket, lsn ranges) sums to the batch
-    rd.zipWithIndex.foreach { case (r, e) =>
-      assert(r.lineage.map(l => l.rows_upserted + l.rows_deleted).sum == 4000L)
-      assert(r.lineage.map(_.lsn_min).min == e * 4000L)
-      assert(r.lineage.map(_.lsn_max).max == (e + 1) * 4000L - 1)
+    for (mode <- Seq(MergeMode.CoW, MergeMode.MoR)) {
+      val (hinted, plain) = (run(mode, hint = true), run(mode, hint = false))
+      hinted.zip(plain).zipWithIndex.foreach { case ((h, p), e) =>
+        assert(h._1 == p._1, s"$mode epoch $e: lineage rows differ")
+        assert(h._2 == p._2, s"$mode epoch $e: metrics counts differ")
+        assert(h._3 == p._3, s"$mode epoch $e: committed bucket sets differ")
+      }
+      // lineage counts per-key winners, so the batch's redeliveries show as deduped
+      assert(hinted.forall(_._2._2 > 0), s"$mode: events_deduped must count the batch's superseded events")
     }
-    // MoR dense path too (observed metrics on the winners job)
-    val (tm, rm) = run(tmpDir("dense-mor"), dense = true, MergeMode.MoR)
-    val gotM = tm.read().select(col("repo"), col("path"), sha2(col("content"), 256).as("h"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    assert(gotM.size == exp.size)
-    rm.foreach(r => assert(r.lineage.map(l => l.rows_upserted + l.rows_deleted).sum == 4000L))
   }
 
-  test("fused gate: a clean gated dense epoch runs ONE Spark job; errors abort pre-commit") {
+  test("gate on the stats pre-pass: a clean gated dense epoch runs 2 Spark jobs; errors abort pre-write") {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val cols = Seq(
@@ -102,17 +106,17 @@ class CdcReplaySpec extends SparkSuite {
       quality.DataQualityChecks.schema, Seq("table_name", "check_name"), numBuckets = 2)
     val engine = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1),
       gate = Some(gate), auditTable = Some(audit))
-    val n = 256 // >= 4 buckets * 32 -> dense, stats+gate fused as observed metrics
+    val n = 256 // 64 events per bucket: a dense-sized epoch
     def batch(lsn0: Long, badLang: Boolean) =
       (0 until n).map { i =>
         val lang = if (badLang && i % 16 == 0) "cobol" else "scala"
         (lsn0 + i, "U", s"r${i % 7}", s"p/$i", s"c$i", lang, s"content-$i")
       }.toDF("lsn", "op", "repo", "path", "commit", "lang", "content")
 
-    // 1 job per clean gated dense epoch: gate aggregates ride the merge job
-    // as an Observation — no separate gate scan, no stats pre-pass. AQE is
-    // pinned off for the measurement: it submits each shuffle map stage as
-    // its own job, which would count the SAME single pass twice.
+    // 2 jobs per clean gated epoch: the stats pre-pass, which also sums the
+    // gate's violation counts, and the write — no separate gate scan. AQE
+    // is pinned off for the measurement: it submits each shuffle map stage
+    // as its own job, which would count the SAME single pass twice.
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -132,14 +136,14 @@ class CdcReplaySpec extends SparkSuite {
         if (c == last) stableFor += 1 else { stableFor = 0; last = c }
         Thread.sleep(100)
       }
-      assert(jobs.get() == 1, s"clean gated dense epoch must be ONE Spark job, saw ${jobs.get()}")
+      assert(jobs.get() == 2, s"clean gated dense epoch must be 2 Spark jobs, saw ${jobs.get()}")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
     }
 
-    // error-level failures: resolved from the same merge job's Observation,
-    // abort BEFORE the commit — zero committed state, audit rows persisted
+    // error-level failures: totalled by the stats pre-pass, abort BEFORE
+    // the write — zero committed state, audit rows persisted
     val vBefore = table.snapshot.version
     intercept[quality.QualityGateError] {
       engine.applyEpoch(batch(1000, badLang = true), 1, knownInputCount = Some(n.toLong))
@@ -149,27 +153,46 @@ class CdcReplaySpec extends SparkSuite {
     assert(auditRows.nonEmpty, "error failures must be audited before the abort")
     assert(auditRows.map(_.getAs[Long]("failed_rows")).sum == n / 16)
 
-    // the corrected batch then applies through the same fused path
+    // the corrected batch then applies
     val ok = engine.applyEpoch(batch(1000, badLang = false), 1, knownInputCount = Some(n.toLong))
     assert(ok.committed)
     assert(table.read().count() == n)
-
-    // MoR mode shares the preCommit hook: error abort leaves no delta files
-    val morTable = LakeTable.createIfNotExists(spark, tmpDir("fgate-mor"), "t",
-      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 4)
-    val morEngine = new ReplayEngine(morTable, SchemaRegistry.single(RepoRow.schemaV1),
-      gate = Some(gate), mode = MergeMode.MoR)
-    intercept[quality.QualityGateError] {
-      morEngine.applyEpoch(batch(0, badLang = true), 0, knownInputCount = Some(n.toLong))
-    }
-    assert(morTable.snapshot.files.isEmpty, "MoR error abort must commit no delta files")
-    // the aborted write's files are unreferenced orphans — vacuum reclaims them
-    val (_, orphans) = morTable.vacuum(keepSnapshots = 1)
-    assert(orphans > 0, "vacuum must reclaim the aborted epoch's orphan files")
-    assert(morTable.snapshot.files.isEmpty && morTable.read().count() == 0)
   }
 
-  test("quarantine-attached FAILING epoch: merge + cached annotated pass + 2 small appends (3 jobs)") {
+  test("an error-level gate failure on a dense-sized CoW or MoR epoch writes no data file") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val gate = new quality.QualityGate(quality.Check.fromColumns(Seq(
+      ColumnDef("repo", StringType, nullable = false, isPrimaryKey = true),
+      ColumnDef("path", StringType, nullable = false, isPrimaryKey = true),
+      ColumnDef("lang", StringType, qualityRule =
+        Some(QualityRule(Criticality.Error, allowedValues = Some(Seq("scala", "java"))))))))
+    val n = 256 // 64 events per bucket: a dense-sized epoch
+    def batch(lsn0: Long, badLang: Boolean) =
+      (0 until n).map { i =>
+        val lang = if (badLang && i % 16 == 0) "cobol" else "scala"
+        (lsn0 + i, "U", s"r${i % 7}", s"p/$i", s"c$i", lang, s"content-$i")
+      }.toDF("lsn", "op", "repo", "path", "commit", "lang", "content")
+    def dataListing(t: LakeTable): Set[String] = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(t.root, "data"))
+      try w.toArray.map(_.toString).toSet finally w.close()
+    }
+    for (mode <- Seq(MergeMode.CoW, MergeMode.MoR)) {
+      val t = LakeTable.createIfNotExists(spark, tmpDir(s"gate-nowrite-$mode"), "t",
+        RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 4)
+      val engine = new ReplayEngine(t, SchemaRegistry.single(RepoRow.schemaV1),
+        gate = Some(gate), mode = mode)
+      assert(engine.applyEpoch(batch(0, badLang = false), 0, knownInputCount = Some(n.toLong)).committed)
+      val (listing, version) = (dataListing(t), t.snapshot.version)
+      intercept[quality.QualityGateError] {
+        engine.applyEpoch(batch(1000, badLang = true), 1, knownInputCount = Some(n.toLong))
+      }
+      assert(t.snapshot.version == version, s"$mode: the abort must commit nothing")
+      assert(dataListing(t) == listing, s"$mode: the abort must leave data/ unchanged")
+    }
+  }
+
+  test("quarantine-attached FAILING epoch: stats pre-pass + 2 small appends on the cache + merge (4 jobs)") {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val cols = Seq(
@@ -195,15 +218,16 @@ class CdcReplaySpec extends SparkSuite {
       quarantineSchema, Seq("lsn"), numBuckets = 2)
     val engine = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1),
       gate = Some(gate), auditTable = Some(audit), quarantineTable = Some(quarantine))
-    val n = 256 // dense: gate + stats fused into the merge job
+    val n = 256
     val batch = (0 until n).map { i =>
       val lang = if (i % 16 == 0) "cobol" else "scala" // seeded warn failures
       (i.toLong, "U", s"r${i % 7}", s"p/$i", s"c$i", lang, s"content-$i")
     }.toDF("lsn", "op", "repo", "path", "commit", "lang", "content")
 
-    // explicit job budget: 1 merge write (gate observed + cache-populating)
-    // + 1 audit append + 1 quarantine append reading the CACHED batch — the
-    // round-3 dirty path paid a second full source scan here
+    // explicit job budget: 1 stats pre-pass (gate sums + cache-populating)
+    // + 1 audit append + 1 quarantine append and 1 merge write, both
+    // reading the CACHED batch — the round-3 dirty path paid a second full
+    // source scan here
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -222,8 +246,8 @@ class CdcReplaySpec extends SparkSuite {
         if (c == last) stableFor += 1 else { stableFor = 0; last = c }
         Thread.sleep(100)
       }
-      assert(jobs.get() == 3,
-        s"failure-bearing quarantine epoch budget is 3 Spark jobs, saw ${jobs.get()}")
+      assert(jobs.get() == 4,
+        s"failure-bearing quarantine epoch budget is 4 Spark jobs, saw ${jobs.get()}")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)

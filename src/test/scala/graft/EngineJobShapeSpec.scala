@@ -102,7 +102,7 @@ class EngineJobShapeSpec extends SparkSuite {
 
         val dense = events(all, 2000000)
         oneFilePerBucket("dense merge", everyBucket)(
-          assert(t.merge(dense, epochId = 2, assumeFullTouch = true).committed))
+          assert(t.merge(dense, epochId = 2).committed))
 
         val deltaIds = all.filter(_ % 13 == 5).take(30)
         val deltas = events(deltaIds, 3000000)
