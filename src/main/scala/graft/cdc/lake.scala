@@ -194,6 +194,25 @@ object lake {
     * the same reader/format-version gate Iceberg and Delta apply. */
   val SupportedFormatVersion = 2
 
+  /** The files of one manifest-planned scan as an unpartitioned `FileIndex`
+    * (what Spark's `MetadataLogFileIndex` is to its file sink): the list is
+    * fixed at construction, so planning never touches the file system.
+    * A case class for equality by file list, as `InMemoryFileIndex` has:
+    * two reads of the same files compare equal in plan reuse and cache
+    * lookup (`toString` stays `FileIndex`'s). */
+  private final case class ManifestFileIndex(files: Seq[org.apache.hadoop.fs.FileStatus])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.spark.sql.execution.datasources.PartitionDirectory
+    def rootPaths: Seq[org.apache.hadoop.fs.Path] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+        dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty, files.toArray))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = StructType(Nil)
+  }
+
   /** Observability for the distributed vacuum sweep: the size of the
     * LARGEST per-task referenced-path subset shipped by the last sweep —
     * proves the sweep ships per-snapshot-dir slices, never the full
@@ -500,7 +519,8 @@ object lake {
       readFilesWithLsn(snap, filesOfBuckets(snap, buckets))
 
     /** Predicate-planned read: the scan's file list is pruned BEFORE any
-      * parquet is opened, on two levels —
+      * parquet is opened (and, the scan being planned from the manifest,
+      * without listing any directory or probing any path), on two levels —
       *
       *  1. '''Bucket pruning''': a conjunction that pins every key column to
       *     literals (point lookup / IN list) resolves, driver-side, to the
@@ -565,10 +585,30 @@ object lake {
       }
     }
 
+    /** A parquet scan planned from the manifest's file list: the snapshot
+      * already names every file with its size, so nothing is globbed,
+      * probed for existence on the driver, or listed by the parallel
+      * leaf-file job `spark.read.parquet` starts above 32 paths. The plan
+      * is the same `FileSourceScanExec` (pruning, pushdown, vectorized
+      * reader, file packing). `ignoreMissingFiles` is pinned off whatever
+      * the session says: a referenced file that is gone fails the read at
+      * execution instead of silently dropping its rows. */
+    private def scanFiles(files: Seq[DataFile], physical: StructType): DataFrame = {
+      import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      val statuses = files.map(f => new org.apache.hadoop.fs.FileStatus(
+        f.bytes, false, 1, f.bytes, 0L, new org.apache.hadoop.fs.Path(Paths.get(root, f.path).toUri)))
+      // nullable, as `spark.read` declares a file source's columns: a
+      // file's declared nullability is not trusted
+      spark.baseRelationToDataFrame(HadoopFsRelation(ManifestFileIndex(statuses),
+        StructType(Nil), physical.toNullable, None, new ParquetFileFormat(),
+        rawLocalFsOptions + ("ignoreMissingFiles" -> "false"))(spark))
+    }
+
     /** Read base files, conforming each (schemaVersion, rowLsn) group to the
       * current schema; output = `_lsn` system column (stored per row for
       * merge-written files, -1 for append/overwrite/pre-field files) followed
-      * by the payload. */
+      * by the payload. Planned from the manifest ([[scanFiles]]): no listing. */
     private def readBase(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
       val lsnField = StructField("_lsn", LongType, nullable = false)
       if (files.isEmpty) {
@@ -576,10 +616,9 @@ object lake {
           StructType(lsnField +: snap.schema.fields))
       } else {
         files.groupBy(f => (f.schemaVersion, f.rowLsn)).map { case ((sv, hasLsn), group) =>
-          val paths = group.map(f => Paths.get(root, f.path).toString)
           val fileSchema = snap.schemaOf(sv)
           val physical = if (hasLsn) StructType(lsnField +: fileSchema.fields) else fileSchema
-          val df = spark.read.options(rawLocalFsOptions).schema(physical).parquet(paths: _*)
+          val df = scanFiles(group, physical)
           val lsnCol = if (hasLsn) col("_lsn") else lit(-1L).as("_lsn")
           df.select((lsnCol +: conformedPayload(snap, fileSchema)).toSeq: _*)
         }.reduce(_ unionByName _)
@@ -587,7 +626,8 @@ object lake {
     }
 
     /** Read delta files: (lsn, op) change metadata ahead of the payload,
-      * payload conformed per schema-version group. */
+      * payload conformed per schema-version group. Planned from the
+      * manifest ([[scanFiles]]): no listing. */
     private def readDeltas(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
       val metaFields = Seq(StructField("lsn", LongType, nullable = false),
         StructField("op", StringType, nullable = true))
@@ -596,10 +636,9 @@ object lake {
           StructType(metaFields ++ snap.schema.fields))
       } else {
         files.groupBy(_.schemaVersion).map { case (sv, group) =>
-          val paths = group.map(f => Paths.get(root, f.path).toString)
           val fileSchema = snap.schemaOf(sv)
           val physical = StructType(metaFields ++ fileSchema.fields)
-          val df = spark.read.options(rawLocalFsOptions).schema(physical).parquet(paths: _*)
+          val df = scanFiles(group, physical)
           df.select((Seq(col("lsn"), col("op")) ++ conformedPayload(snap, fileSchema)).toSeq: _*)
         }.reduce(_ unionByName _)
       }

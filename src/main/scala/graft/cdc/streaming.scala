@@ -192,6 +192,11 @@ object streaming {
     // under global locks. RawLocalFs keeps the SAME atomic-rename semantics
     // (plain POSIX rename) without the sidecar layer; on real deployments
     // checkpoints live on HDFS/object stores where this key is inert.
+    // It does not remove every fork: each checkpoint rename still resolves
+    // the source's link status through
+    // `RawLocalFileSystem.deprecatedGetFileLinkStatusInternal`, which
+    // shells out to `readlink` (Hadoop 3.4.2, no native lib) — one forked
+    // process per offset/commit file.
     val spark = events.sparkSession
     val confs = Seq(
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",

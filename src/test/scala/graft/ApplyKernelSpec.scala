@@ -63,34 +63,6 @@ class ApplyKernelSpec extends SparkSuite {
     assert(t.read().count() == keys.reduce(_ union _).distinct().count())
   }
 
-  /** Spark jobs `f` starts, counted with AQE off: AQE submits each shuffle
-    * map stage as its own job, which would count one pass twice. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      // the listener bus is async: poll until the job count is stable
-      var last = -1; var stableFor = 0
-      while (stableFor < 5) {
-        val c = jobs.get()
-        if (c == last) stableFor += 1 else { stableFor = 0; last = c }
-        Thread.sleep(100)
-      }
-      (out, jobs.get())
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-    }
-  }
-
   private def dataDirs(t: LakeTable): Set[String] = {
     val d = Paths.get(t.root, "data")
     if (!Files.isDirectory(d)) Set.empty
@@ -111,7 +83,7 @@ class ApplyKernelSpec extends SparkSuite {
         val (r, jobs) = jobsOf(engine.applyEpoch(events(ids, 1000), 1,
           knownInputCount = if (hint) Some(ids.size.toLong) else None))
         assert(r.committed && r.metrics.events_in == ids.size)
-        assert(jobs == 2, s"$mode epoch (knownInputCount ${if (hint) "set" else "absent"}): $jobs Spark jobs")
+        assert(jobs.size == 2, s"$mode epoch (knownInputCount ${if (hint) "set" else "absent"}): ${jobs.size} Spark jobs")
         assert(t.read().count() == 512)
       }
       val t = newTable(s"empty-$mode")

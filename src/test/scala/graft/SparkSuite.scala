@@ -26,4 +26,35 @@ abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The Spark jobs `f` starts, by `spark.job.description` ("" when unset),
+    * recorded with AQE off: AQE submits each shuffle map stage as its own
+    * job, which would count one pass twice. */
+  def jobsOf[T](f: => T): (T, Seq[String]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("")); ()
+      }
+    }
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      // the listener bus is async: poll until the job count is stable
+      var last = -1; var stableFor = 0
+      while (stableFor < 5) {
+        val c = jobs.size
+        if (c == last) stableFor += 1 else { stableFor = 0; last = c }
+        Thread.sleep(100)
+      }
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
+  }
 }
