@@ -442,21 +442,18 @@ object lake {
       }
 
     /** Per-source Hadoop options for every data-file read/write of this
-      * table: the `file:` scheme resolves to RawLocalFileSystem instead of
-      * the default ChecksumFileSystem wrapper. Hadoop's client-side `.crc`
-      * sidecars DOUBLE the small-file operations of every commit (one
-      * sidecar written, chmod'd and renamed per data file — and with no
-      * native Hadoop lib in this environment each permission call forks a
-      * `chmod` shell) and add one extra open+read per scanned file. Parquet
-      * already CRC-checks its own pages (PageHeader crc, enabled by
-      * default), so the sidecar is a redundant integrity layer on the data
-      * path. Scoped per-read/per-write via options — the session's global
-      * FileSystem (used by checkpoints, external inputs) is untouched, and
-      * on cluster deployments where table roots live on object stores the
-      * `fs.file.impl` key is simply inert. */
-    private val rawLocalFsOptions = Map(
-      "fs.file.impl" -> "org.apache.hadoop.fs.RawLocalFileSystem",
-      "fs.file.impl.disable.cache" -> "true")
+      * table: the `file:` scheme resolves to [[ForkFreeLocalFileSystem]]
+      * instead of the default ChecksumFileSystem wrapper. Hadoop's
+      * client-side `.crc` sidecars double the small-file operations of every
+      * commit (one sidecar written and renamed per data file) and add one
+      * extra open+read per scanned file; parquet already CRC-checks its own
+      * pages (PageHeader crc, on by default), so the sidecar is a redundant
+      * integrity layer on the data path. The fork-free binding also sets
+      * each created file's and `_b=N` directory's mode through `java.nio`
+      * instead of a forked `chmod` (Hadoop without its native library).
+      * Scoped per read/write via options: the session's global FileSystem
+      * (external inputs) is untouched. */
+    private val rawLocalFsOptions = ForkFreeLocalFs.fileSystemConf
 
     // ---- read path ---------------------------------------------------------
 
@@ -764,13 +761,15 @@ object lake {
       out.result()
     }
 
+    /** Parquet's own local-file reader over a plain (map-backed) parquet
+      * configuration: no Hadoop FileSystem and no Hadoop `Configuration`
+      * per footer. The reader's default options would build one, and its
+      * first lookup re-parses `core-default.xml` out of the Hadoop jar. */
     private def parquetFooterInfo(p: Path): (Long, Option[Map[String, skipping.ColStats]]) = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      val conf = spark.sessionState.newHadoopConf()
-      rawLocalFsOptions.foreach { case (k, v) => conf.set(k, v) } // skip the .crc side-read
-      val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val r = ParquetFileReader.open(in)
+      val options = org.apache.parquet.ParquetReadOptions
+        .builder(new org.apache.parquet.conf.PlainParquetConfiguration()).build()
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(p), options)
       try (r.getRecordCount,
         scala.util.Try(skipping.fromFooter(r.getFooter)).toOption.flatten)
       finally r.close()

@@ -181,26 +181,22 @@ object streaming {
     // per state/offset/commit file per batch — on the exactly-once path the
     // checkpoint's atomic-rename protocol is already the integrity fence,
     // and the engine's own epoch fence makes a torn redelivery a no-op, so
-    // the sidecars only double the per-batch metadata ops (each one a
-    // create+chmod+rename on stores with no native Hadoop lib). Scoped to
-    // THIS query: the session value is captured by the query at start() and
+    // the sidecars only double the per-batch metadata ops. Scoped to THIS
+    // query: the session value is captured by the query at start() and
     // restored right after.
     // Same layer one level down: the checkpoint managers write through
     // Hadoop's FileContext, whose local binding (`LocalFs`) is a ChecksumFs
-    // — every state delta / offset / commit file gets a `.crc` sidecar and
-    // (without the native lib) a forked `chmod` per created file, serialized
-    // under global locks. RawLocalFs keeps the SAME atomic-rename semantics
-    // (plain POSIX rename) without the sidecar layer; on real deployments
-    // checkpoints live on HDFS/object stores where this key is inert.
-    // It does not remove every fork: each checkpoint rename still resolves
-    // the source's link status through
-    // `RawLocalFileSystem.deprecatedGetFileLinkStatusInternal`, which
-    // shells out to `readlink` (Hadoop 3.4.2, no native lib) — one forked
-    // process per offset/commit file.
+    // (a `.crc` sidecar per file) over RawLocalFileSystem, which without
+    // the native library forks `chmod` per created file and `readlink` per
+    // rename. [[ForkFreeLocalFs]] keeps the same atomic POSIX rename with
+    // neither; on HDFS/object-store checkpoints the key is inert. The
+    // FileStreamSource's own `sources/0` log resolves its FileSystem when
+    // the source is created, after the restore below, so it keeps the
+    // session's binding.
     val spark = events.sparkSession
     val confs = Seq(
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-      "fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.RawLocalFs")
+      ForkFreeLocalFs.fileContextConf)
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try startReplayStream(events, engine, checkpointDir, trigger, watermarkFile)

@@ -52,10 +52,9 @@ object Bridge {
         hadoopConf = {
           // lake data files on the local scheme: bypass the Checksum wrapper
           // (no `.crc` side-read per file; parquet's own page CRCs remain —
-          // same rationale as LakeTable's rawLocalFsOptions)
+          // same binding as LakeTable's rawLocalFsOptions)
           val c = cs.sessionState.newHadoopConf()
-          c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-          c.set("fs.file.impl.disable.cache", "true")
+          graft.cdc.ForkFreeLocalFs.fileSystemConf.foreach { case (k, v) => c.set(k, v) }
           c
         })
   }
