@@ -35,11 +35,13 @@ import graft.cdc.lake.LakeTable
   * re-pins the current schema, matching Delta's CDF contract.
   */
 object changefeed {
+  /** The change metadata ahead of the payload in every feed row and delta
+    * file. */
+  val feedMeta: Seq[StructField] = Seq(StructField("lsn", LongType, nullable = false),
+    StructField("op", StringType, nullable = true))
+
   /** Feed row shape: change metadata then the payload columns of `schema`. */
-  def feedSchema(payload: StructType): StructType =
-    StructType(
-      StructField("lsn", LongType, nullable = false) +:
-        StructField("op", StringType, nullable = true) +: payload.fields)
+  def feedSchema(payload: StructType): StructType = StructType(feedMeta ++ payload.fields)
 
   private[cdc] def parseVersion(o: OffsetV1): Long = o match {
     case l: LongOffset => l.offset

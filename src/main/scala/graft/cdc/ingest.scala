@@ -161,14 +161,8 @@ object ingest {
       // 1. conform payload to the table's current schema version (additive
       //    evolution: old-version events null-fill / widen into the new shape),
       //    keeping the lsn/op event metadata alongside the payload
-      val withMeta = {
-        val have = events.columns.toSet
-        val cols = Seq(col("lsn"), col("op")) ++ snap.schema.fields.map { f =>
-          if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }
-        events.select(cols: _*)
-      }
+      val withMeta = events.select((Seq(col("lsn"), col("op")) ++
+        SchemaRegistry.conformedColumns(snap.schema, events.schema)): _*)
       // quarantine-attached gated epochs persist the conformed batch: the
       // stats pre-pass is the scan that POPULATES the cache, so a
       // failure-bearing epoch's quarantine-row derivation and the write

@@ -136,6 +136,8 @@ object lake {
       if (manifests.forall(m => m.numFiles == 0 || m.rows > 0))
         Some(files.map(_.rows).sum + manifests.map(_.rows).sum)
       else None
+    /** Live data-file count from inline entries + ref counts. O(refs). */
+    def numFiles: Int = files.size + manifests.map(_.numFiles).sum
 
     // memoized per Snapshot instance: planning consults schemaOf per FILE
     // (old-schema stats projection), and re-parsing the schema JSON per
@@ -148,6 +150,12 @@ object lake {
       k => DataType.fromJson(schemas(k.toString)).asInstanceOf[StructType])
     def registry: SchemaRegistry =
       SchemaRegistry(schemas.keysIterator.map(k => k.toInt -> schemaOf(k.toInt)).toMap)
+    /** `f`'s footer bounds, projected to what stays valid under the current
+      * schema: an old-schema file's bounds may be encoded under the OLD
+      * type (DATE days vs TIMESTAMP micros after a widening). */
+    def statsOf(f: DataFile): Option[Map[String, skipping.ColStats]] =
+      f.stats.map(s => if (f.schemaVersion == schemaVersion) s
+        else skipping.compatibleStats(s, schemaOf(f.schemaVersion), schema))
   }
 
   /** Per-bucket lineage emitted by every committing operation (FIXTURES.md B4). */
@@ -507,13 +515,7 @@ object lake {
       * them, they are applied at read time with the same fused max-LSN
       * aggregation the CoW merge uses. */
     def readBuckets(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame =
-      readBucketsWithLsn(snap, buckets).drop("_lsn")
-
-    /** [[readBuckets]] plus the per-row `_lsn` system column — the internal
-      * read the merge/compaction paths use so rewritten base files keep each
-      * row's true log position (rows from lsn-less files surface -1). */
-    private def readBucketsWithLsn(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame =
-      readFilesWithLsn(snap, filesOfBuckets(snap, buckets))
+      readFiles(snap, filesOfBuckets(snap, buckets))
 
     /** Predicate-planned read: the scan's file list is pruned BEFORE any
       * parquet is opened (and, the scan being planned from the manifest,
@@ -542,24 +544,18 @@ object lake {
       val wanted = filesOfBuckets(snap, buckets)
       val deltaBuckets = wanted.filter(_.kind == "delta").map(_.bucket).toSet
       val kept = wanted.filter { f =>
-        f.kind == "delta" || deltaBuckets(f.bucket) || f.stats.forall { s0 =>
-          // an old-schema file's bounds may be encoded under the OLD type
-          // (DATE days vs TIMESTAMP micros after a widening) — project the
-          // stats to what stays valid before comparing
-          val s = if (f.schemaVersion == snap.schemaVersion) s0
-            else skipping.compatibleStats(s0, snap.schemaOf(f.schemaVersion), snap.schema)
-          filters.forall(flt => skipping.mayMatch(s, f.rows, snap.schema, flt))
-        }
+        f.kind == "delta" || deltaBuckets(f.bucket) || snap.statsOf(f).forall(s =>
+          filters.forall(flt => skipping.mayMatch(s, f.rows, snap.schema, flt)))
       }
       skipping.ScanStats.last.set(Some((
-        buckets.map(_.size).getOrElse(snap.numBuckets), snap.numBuckets,
-        kept.size, snap.files.size + snap.manifests.map(_.numFiles).sum)))
-      readFilesWithLsn(snap, kept).drop("_lsn")
+        buckets.map(_.size).getOrElse(snap.numBuckets), snap.numBuckets, kept.size, snap.numFiles)))
+      readFiles(snap, kept)
     }
 
-    private def readFilesWithLsn(snap: Snapshot, wanted: Seq[DataFile]): DataFrame =
-      if (wanted.forall(_.kind == "base")) readBase(snap, wanted)
-      else mergeExpr(storedChanges(snap, wanted), snap)
+    /** The table rows `wanted` hold: base rows as stored, deltas applied. */
+    private def readFiles(snap: Snapshot, wanted: Seq[DataFile]): DataFrame =
+      (if (wanted.forall(_.kind == "base")) readBase(snap, wanted)
+      else mergeExpr(storedChanges(snap, wanted), snap)).drop("_lsn")
 
     /** The rows stored in `files` as change rows (lsn, op, payload...), the
       * input shape of [[mergeExpr]]: base rows at their stored row LSN,
@@ -569,18 +565,6 @@ object lake {
         .select((Seq(col("_lsn").as("lsn"), lit(null).cast(StringType).as("op")) ++
           snap.schema.fieldNames.map(col)): _*)
         .unionByName(readDeltas(snap, files.filter(_.kind == "delta")))
-
-    /** The read-side half of schema conformance, shared by the base and
-      * delta readers: cast columns the file carries, null-fill columns
-      * added since its schema version (the projection mirror of
-      * SchemaRegistry.conform's additive-evolution rules). */
-    private def conformedPayload(snap: Snapshot, fileSchema: StructType): Seq[org.apache.spark.sql.Column] = {
-      val have = fileSchema.fieldNames.toSet
-      snap.schema.fields.toSeq.map { f =>
-        if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }
-    }
 
     /** A parquet scan planned from the manifest's file list: the snapshot
       * already names every file with its size, so nothing is globbed,
@@ -602,49 +586,43 @@ object lake {
         rawLocalFsOptions + ("ignoreMissingFiles" -> "false"))(spark))
     }
 
-    /** Read base files, conforming each (schemaVersion, rowLsn) group to the
-      * current schema; output = `_lsn` system column (stored per row for
-      * merge-written files, -1 for append/overwrite/pre-field files) followed
-      * by the payload. Planned from the manifest ([[scanFiles]]): no listing. */
-    private def readBase(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-      val lsnField = StructField("_lsn", LongType, nullable = false)
-      if (files.isEmpty) {
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(lsnField +: snap.schema.fields))
-      } else {
-        files.groupBy(f => (f.schemaVersion, f.rowLsn)).map { case ((sv, hasLsn), group) =>
-          val fileSchema = snap.schemaOf(sv)
-          val physical = if (hasLsn) StructType(lsnField +: fileSchema.fields) else fileSchema
-          val df = scanFiles(group, physical)
-          val lsnCol = if (hasLsn) col("_lsn") else lit(-1L).as("_lsn")
-          df.select((lsnCol +: conformedPayload(snap, fileSchema)).toSeq: _*)
-        }.reduce(_ unionByName _)
-      }
-    }
+    /** Read base files: the `_lsn` system column (stored per row for
+      * merge-written files, -1 for append/overwrite/pre-field files)
+      * followed by the payload. */
+    private def readBase(snap: Snapshot, files: Seq[DataFile]): DataFrame =
+      readStored(snap, files, Seq(StructField("_lsn", LongType, nullable = false)))
 
-    /** Read delta files: (lsn, op) change metadata ahead of the payload,
-      * payload conformed per schema-version group. Planned from the
+    /** Read delta files: the feed's (lsn, op) change metadata ahead of the
+      * payload. */
+    private def readDeltas(snap: Snapshot, files: Seq[DataFile]): DataFrame =
+      readStored(snap, files, changefeed.feedMeta)
+
+    /** `files` as `meta` columns followed by the payload, each (schemaVersion,
+      * stored-meta) group conformed to the current schema. Delta files always
+      * store their meta columns; a base file stores `_lsn` only when
+      * [[DataFile.rowLsn]], and reads -1 otherwise. Planned from the
       * manifest ([[scanFiles]]): no listing. */
-    private def readDeltas(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-      val metaFields = Seq(StructField("lsn", LongType, nullable = false),
-        StructField("op", StringType, nullable = true))
+    private def readStored(snap: Snapshot, files: Seq[DataFile], meta: Seq[StructField]): DataFrame =
       if (files.isEmpty) {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(metaFields ++ snap.schema.fields))
+          StructType(meta ++ snap.schema.fields))
       } else {
-        files.groupBy(_.schemaVersion).map { case (sv, group) =>
-          val fileSchema = snap.schemaOf(sv)
-          val physical = StructType(metaFields ++ fileSchema.fields)
-          val df = scanFiles(group, physical)
-          df.select((Seq(col("lsn"), col("op")) ++ conformedPayload(snap, fileSchema)).toSeq: _*)
+        files.groupBy(f => (f.schemaVersion, f.kind == "delta" || f.rowLsn)).map {
+          case ((sv, stored), group) =>
+            val fileSchema = snap.schemaOf(sv)
+            val physical = if (stored) StructType(meta ++ fileSchema.fields) else fileSchema
+            val metaCols = if (stored) meta.map(m => col(m.name)) else meta.map(m => lit(-1L).as(m.name))
+            scanFiles(group, physical)
+              .select((metaCols ++ SchemaRegistry.conformedColumns(snap.schema, fileSchema)): _*)
         }.reduce(_ unionByName _)
       }
-    }
 
     /** The fused max-LSN resolution: input rows carry (lsn, op, payload...);
       * per key the highest-LSN row wins, a winning delete drops the key.
       * Used by both the CoW merge and the MoR read path. Output keeps the
-      * winner's LSN as `_lsn` so merge writes can persist it per row.
+      * winner's LSN as `_lsn` so merge writes can persist it per row. With
+      * `tombstones` the winners keep their (lsn, op) ahead of the payload
+      * and winning deletes stay: the delta rows a MoR apply writes.
       *
       * Because base rows enter at their STORED row LSN (not -1), a stale
       * redelivered event in a later epoch loses to the state it would have
@@ -653,15 +631,15 @@ object lake {
       * pre-delete redelivery, so anti-resurrection of deleted keys still
       * needs the cross-epoch dedup watermark (streaming.statefulDedup) or an
       * in-order tail. */
-    private def mergeExpr(all: DataFrame, snap: Snapshot): DataFrame = {
+    private def mergeExpr(all: DataFrame, snap: Snapshot, tombstones: Boolean = false): DataFrame = {
       val keys = snap.keyColumns
       val nonKey = snap.schema.fieldNames.toSeq.filterNot(keys.contains)
-      all.groupBy(keys.map(col): _*)
+      val won = all.groupBy(keys.map(col): _*)
         .agg(graft.functions.MaxByRow.maxByRow(
           struct((Seq(col("lsn"), col("op")) ++ nonKey.map(col)): _*), col("lsn")).as("_e"))
-        .filter(!(col("_e.op") <=> lit("D")))
-        .select((keys.map(col) ++ nonKey.map(c => col(s"_e.$c").as(c)) :+
-          col("_e.lsn").as("_lsn")): _*)
+      val payload = keys.map(col) ++ nonKey.map(c => col(s"_e.$c").as(c))
+      if (tombstones) won.select((Seq(col("_e.lsn").as("lsn"), col("_e.op").as("op")) ++ payload): _*)
+      else won.filter(!(col("_e.op") <=> lit("D"))).select((payload :+ col("_e.lsn").as("_lsn")): _*)
     }
 
     // ---- write path --------------------------------------------------------
@@ -803,26 +781,31 @@ object lake {
       else Some(math.max(cur.foldedLsnHigh.getOrElse(-1L), folded.max))
     }
 
+    /** The snapshot a data commit publishes: `next` (the current snapshot
+      * with the commit's version, fence, lsnHigh and layout) with every file
+      * of `removedBuckets` replaced by `added`. Every data commit builds its
+      * snapshot here, so every commit that drops delta files folds their lsn
+      * range into foldedLsnHigh — otherwise changesSince(v) across it would
+      * silently return an incomplete feed instead of throwing. Only the
+      * delta-bearing manifests of the removed buckets are resolved for it. */
+    private def nextSnapshot(next: Snapshot, removedBuckets: Set[Int], added: Seq[DataFile]): Snapshot = {
+      val folded = foldDeltas(next, filesOfBuckets(next, Some(removedBuckets), deltaOnly = true))
+      val (nf, nm) = nextFileState(next, removedBuckets, added)
+      next.copy(files = nf, manifests = nm, foldedLsnHigh = folded)
+    }
+
     /** Full overwrite (reference: src/models/writer.py:34-40). An unfenced
       * write (epochId = -1) carries the current fence FORWARD rather than
       * regressing it — otherwise a later crash-replay of already-committed
       * epochs would re-apply them. Overwrite discards ALL current files,
-      * including outstanding MoR deltas, so their lsn range is folded into
-      * foldedLsnHigh — otherwise changesSince(v) across the overwrite would
-      * silently return an incomplete feed instead of throwing. */
+      * including outstanding MoR deltas. */
     def overwrite(df: DataFrame, epochId: Long = -1L, lsnHigh: Long = -1L): CommitResult = {
       val cur = snapshot
       if (epochId >= 0 && epochId <= cur.epochId) return CommitResult(committed = false, cur, Nil)
       val next0 = cur.copy(version = cur.version + 1, epochId = math.max(epochId, cur.epochId),
         lsnHigh = math.max(lsnHigh, cur.lsnHigh))
       val files = writeBucketed(cur.registry.conform(df, cur.schemaVersion), cur, next0.version)
-      val allBuckets = (0 until cur.numBuckets).toSet
-      // the removed delta lsn fold needs the OLD delta files' ranges: in
-      // chunked mode resolve only delta-bearing manifests (ref-pruned)
-      val removedDeltas = filesOfBuckets(cur, None, deltaOnly = true)
-      val (nf, nm) = nextFileState(cur, allBuckets, files)
-      val next = next0.copy(files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, removedDeltas))
+      val next = nextSnapshot(next0, (0 until cur.numBuckets).toSet, files)
       val ok = commit(next, fence = epochId >= 0)
       val removedCounts = perBucket(cur)(_ => 1L, _.numFiles)
       val lin = files.groupBy(_.bucket).map { case (b, fs) =>
@@ -872,8 +855,7 @@ object lake {
             .map(k => cur.properties + (k -> epochId.toString)).getOrElse(cur.properties))
         if (written == null)
           written = writeBucketed(cur.registry.conform(df, cur.schemaVersion), cur, next0.version)
-        val (nf, nm) = nextFileState(cur, Set.empty, written)
-        val next = next0.copy(files = nf, manifests = nm)
+        val next = nextSnapshot(next0, Set.empty, written)
         try {
           val ok = commit(next, fence = scopedKey.isEmpty && epochId >= 0)
           val lin = written.groupBy(_.bucket).map { case (b, fs) =>
@@ -1069,35 +1051,14 @@ object lake {
         f.copy(lsnMin = s.lsnMin, lsnMax = s.lsnMax)
       }
       val oldByBucket = olds.groupBy(_.bucket)
-      val (nf, nm) = nextFileState(cur, oldByBucket.keySet, newFiles)
-      val next = cur.copy(version = cur.version + 1, epochId = math.max(epochId, cur.epochId),
-        lsnHigh = math.max(stats.values.map(_.lsnMax).max, cur.lsnHigh),
-        files = nf, manifests = nm, foldedLsnHigh = foldDeltas(cur, olds))
+      val next = nextSnapshot(cur.copy(version = cur.version + 1, epochId = math.max(epochId, cur.epochId),
+        lsnHigh = math.max(stats.values.map(_.lsnMax).max, cur.lsnHigh)), oldByBucket.keySet, newFiles)
       val ok = commit(next, fence = epochId >= 0)
       val lin = stats.toSeq.map { case (b, s) =>
         LineageEntry(name, next.version, epochId, b, s.lsnMin, s.lsnMax, s.upserts, s.deletes,
           newFiles.count(_.bucket == b), oldByBucket.get(b).fold(0)(_.size), nowTs())
       }
       CommitResult(ok, if (ok) next else cur, if (ok) lin else Nil)
-    }
-
-    /** The lsn range `files` cover, excluding the -1 "unstamped" sentinel so
-      * one unstamped file cannot corrupt the range; (-1, -1) when no file is
-      * stamped. */
-    private def lsnEnvelope(files: Seq[DataFile]): (Long, Long) = {
-      val stamped = files.filter(_.lsnMin >= 0)
-      if (stamped.isEmpty) (-1L, -1L)
-      else (stamped.map(_.lsnMin).min, stamped.map(_.lsnMax).max)
-    }
-
-    /** `written` files stamped with the [[lsnEnvelope]] of their bucket's
-      * `olds` (the files the write replaced, whose rows it carried over). */
-    private def stampRanges(written: Seq[DataFile], olds: Seq[DataFile]): Seq[DataFile] = {
-      val oldByBucket = olds.groupBy(_.bucket)
-      written.map { f =>
-        val (lo, hi) = lsnEnvelope(oldByBucket.getOrElse(f.bucket, Nil))
-        f.copy(lsnMin = lo, lsnMax = hi)
-      }
     }
 
     /** Merge-on-read apply: dedup the batch to per-key winners and append
@@ -1113,17 +1074,10 @@ object lake {
       val cur = snapshot
       requireMergeableSchema(cur)
       if (epochId >= 0 && epochId <= cur.epochId) return CommitResult(committed = false, cur, Nil)
-      val keys = cur.keyColumns
-      val nonKey = cur.schema.fieldNames.toSeq.filterNot(keys.contains)
       val (leg, stats) = batchStats(batch, cur, sums, check)
       if (stats.isEmpty) return CommitResult(committed = false, cur, Nil) // empty batch
       // per-key winners incl. delete tombstones, keeping (lsn, op)
-      val winners = byKey(leg, cur, stats.size)
-        .groupBy(keys.map(col): _*)
-        .agg(graft.functions.MaxByRow.maxByRow(
-          struct((Seq(col("lsn"), col("op")) ++ nonKey.map(col)): _*), col("lsn")).as("_e"))
-        .select(Seq(col("_e.lsn").as("lsn"), col("_e.op").as("op")) ++ keys.map(col) ++
-          nonKey.map(c => col(s"_e.$c").as(c)): _*)
+      val winners = mergeExpr(byKey(leg, cur, stats.size), cur, tombstones = true)
       val written = writeBucketed(winners, cur, cur.version + 1,
         repartitionByBucket = false, kind = "delta")
       val res = commitApply(cur, epochId, stats, written, olds = Nil)
@@ -1166,21 +1120,9 @@ object lake {
       * path). Returns buckets compacted. */
     def compactDeltas(only: Option[Set[Int]] = None): Int = synchronized {
       val cur = snapshot
-      val deltaBuckets = {
-        val b = deltaCountsByBucket(cur).keySet
-        only.map(b.intersect).getOrElse(b)
-      }
-      if (deltaBuckets.isEmpty) return 0
-      val olds = filesOfBuckets(cur, Some(deltaBuckets))
-      // fused apply, row LSNs kept, laid out bucket-whole for the write
-      val data = mergeExpr(byKey(storedChanges(cur, olds), cur, deltaBuckets.size), cur)
-      val newFiles = stampRanges(writeBucketed(data, cur, cur.version + 1,
-        repartitionByBucket = false, withRowLsn = true), olds)
-      val (nf, nm) = nextFileState(cur, deltaBuckets, newFiles)
-      val next = cur.copy(version = cur.version + 1, files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, olds))
-      require(commit(next, fence = false), "delta compaction commit failed")
-      deltaBuckets.size
+      val buckets = only.foldLeft(deltaCountsByBucket(cur).keySet)(_ intersect _)
+      if (buckets.nonEmpty) rewrite(cur, buckets)()
+      buckets.size
     }
 
     /** CDC-out: the change rows (lsn, op, payload) committed AFTER snapshot
@@ -1217,53 +1159,21 @@ object lake {
       val newDeltas = filesOfBuckets(cur, None, deltaOnly = true).filterNot(f => before(f.path))
       // file skipping on the FEED: a narrow tail (`WHERE lsn >= x`, an
       // op-filtered or payload-filtered read) plans only the delta files
-      // that may match. Two independent refuters, both may-match safe:
-      // the manifest's exact per-file lsn stamps (present even when footer
-      // stats are not) and the harvested per-column footer bounds evaluated
-      // against the feed schema (lsn, op, payload...). Unlike the base-table
-      // path this needs no delta-free guard: feed rows ARE delta-file rows,
-      // no cross-file resolution happens here.
-      val kept =
-        if (filters.isEmpty) newDeltas
-        else {
-          val feedSchema = StructType(
-            StructField("lsn", LongType, nullable = false) +:
-              StructField("op", StringType, nullable = true) +: cur.schema.fields)
-          def lsnRangeOk(f: DataFile, flt: org.apache.spark.sql.sources.Filter): Boolean = {
-            import org.apache.spark.sql.sources._
-            def v(a: Any): Option[Long] = a match {
-              case n: Number => Some(n.longValue); case _ => None
-            }
-            if (f.lsnMin < 0) true // unstamped: never prune
-            else flt match {
-              case EqualTo("lsn", x) => v(x).forall(l => f.lsnMin <= l && l <= f.lsnMax)
-              case GreaterThan("lsn", x) => v(x).forall(l => f.lsnMax > l)
-              case GreaterThanOrEqual("lsn", x) => v(x).forall(l => f.lsnMax >= l)
-              case LessThan("lsn", x) => v(x).forall(l => f.lsnMin < l)
-              case LessThanOrEqual("lsn", x) => v(x).forall(l => f.lsnMin <= l)
-              // keep the file when a NON-NULL value fails the Number
-              // extraction (conservative, like every other branch's
-              // v(x).forall); prune only when every value is provably out
-              // of range or null
-              case In("lsn", xs) if xs != null && xs.nonEmpty =>
-                xs.exists(x => x != null && v(x).forall(l => f.lsnMin <= l && l <= f.lsnMax))
-              case And(l, r) => lsnRangeOk(f, l) && lsnRangeOk(f, r)
-              case Or(l, r) => lsnRangeOk(f, l) || lsnRangeOk(f, r)
-              case _ => true
-            }
-          }
-          newDeltas.filter { f =>
-            filters.forall(flt => lsnRangeOk(f, flt)) &&
-              f.stats.forall { s0 =>
-                // same old-schema bounds projection as readWhere (lsn/op
-                // are physical feed columns outside the registry schema
-                // and pass through untouched)
-                val s = if (f.schemaVersion == cur.schemaVersion) s0
-                  else skipping.compatibleStats(s0, cur.schemaOf(f.schemaVersion), cur.schema)
-                filters.forall(flt => skipping.mayMatch(s, f.rows, feedSchema, flt))
-              }
-          }
-        }
+      // whose harvested footer bounds, evaluated against the feed schema
+      // (lsn, op, payload...), may match. A stamped file's exact lsn range
+      // from the manifest bounds its `lsn` column even where footer stats
+      // are absent. Unlike the base-table path this needs no delta-free
+      // guard: feed rows ARE delta-file rows, no cross-file resolution
+      // happens here.
+      val feed = changefeed.feedSchema(cur.schema)
+      val kept = newDeltas.filter { f =>
+        // lsn/op are physical feed columns outside the registry schema:
+        // the old-schema projection passes them through untouched
+        val s = cur.statsOf(f).getOrElse(Map.empty[String, skipping.ColStats])
+        val stats = if (f.lsnMin < 0) s
+          else s + ("lsn" -> skipping.ColStats(Some(f.lsnMin.toString), Some(f.lsnMax.toString), 0L))
+        filters.forall(flt => skipping.mayMatch(stats, f.rows, feed, flt))
+      }
       skipping.ScanStats.lastFeed.set(Some((kept.size, newDeltas.size)))
       readDeltas(cur, kept)
     }
@@ -1298,6 +1208,50 @@ object lake {
     /** List snapshot versions currently on disk (oldest first). */
     def history(): Seq[Long] = LakeTable.versions(store, metaDir)
 
+    /** The one maintenance rewrite behind [[compactDeltas]], [[compact]],
+      * [[cluster]] and [[rebucket]]: every file of `buckets` is read and
+      * written back as base files laid out under `to` (the current layout,
+      * or a new bucket count), per-row `_lsn` kept, then committed unfenced
+      * (a logical no-op: the epoch fence is untouched). Delta-bearing
+      * buckets resolve through [[mergeExpr]], and ONE key repartition
+      * ([[byKey]] under `to`) serves both that aggregate and the bucketed
+      * write; delta-free buckets take the same repartition with no
+      * aggregate. Keyless tables (never delta-bearing) repartition on the
+      * bucket column instead. Each new file is stamped with its old
+      * bucket's [[lsnEnvelope]], or with the global one when `to` changes
+      * the bucket count: a bucket's rows scatter under the new hash, and a
+      * wider range costs pruning selectivity, never correctness. Returns
+      * the committed snapshot. */
+    private def rewrite(cur: Snapshot, buckets: Set[Int])(to: Snapshot = cur,
+        sortCols: Seq[String] = Nil, maxRowsPerFile: Option[Long] = None): Snapshot = {
+      val olds = filesOfBuckets(cur, Some(buckets))
+      val touched = if (to.numBuckets == cur.numBuckets) buckets.size else to.numBuckets
+      val data =
+        if (olds.exists(_.kind == "delta")) mergeExpr(byKey(storedChanges(cur, olds), to, touched), cur)
+        else if (cur.keyColumns.isEmpty) readBase(cur, olds)
+        else byKey(readBase(cur, olds), to, touched)
+      val written = writeBucketed(data, to, cur.version + 1, repartitionByBucket = cur.keyColumns.isEmpty,
+        withRowLsn = true, sortCols = sortCols, maxRowsPerFile = maxRowsPerFile)
+      val envelope: Int => (Long, Long) =
+        if (to.numBuckets != cur.numBuckets) { val all = lsnEnvelope(olds); _ => all }
+        else { val byBucket = olds.groupBy(_.bucket); b => lsnEnvelope(byBucket.getOrElse(b, Nil)) }
+      val next = nextSnapshot(to.copy(version = cur.version + 1), buckets, written.map { f =>
+        val (lo, hi) = envelope(f.bucket)
+        f.copy(lsnMin = lo, lsnMax = hi)
+      })
+      commit(next, fence = false) // unfenced: never a replay no-op
+      next
+    }
+
+    /** The lsn range `files` cover, excluding the -1 "unstamped" sentinel so
+      * one unstamped file cannot corrupt the range; (-1, -1) when no file is
+      * stamped. */
+    private def lsnEnvelope(files: Seq[DataFile]): (Long, Long) = {
+      val stamped = files.filter(_.lsnMin >= 0)
+      if (stamped.isEmpty) (-1L, -1L)
+      else (stamped.map(_.lsnMin).min, stamped.map(_.lsnMax).max)
+    }
+
     /** Compact a bucket's small files into one file per bucket (logical no-op;
       * data rewrite only). Buckets whose file count is below `minFiles` are
       * left alone. Returns the number of buckets compacted. */
@@ -1316,14 +1270,7 @@ object lake {
       }
       val buckets = perBucket(cur)(_ => 1L, _.numFiles)
         .filter { case (b, n) => n >= minFiles && n > expected(b) }.keySet
-      if (buckets.isEmpty) return 0
-      val olds = filesOfBuckets(cur, Some(buckets))
-      val data = readBucketsWithLsn(cur, Some(buckets))
-      val newFiles = stampRanges(writeBucketed(data, cur, cur.version + 1, withRowLsn = true), olds)
-      val (nf, nm) = nextFileState(cur, buckets, newFiles)
-      val next = cur.copy(version = cur.version + 1, files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, olds))
-      require(commit(next, fence = false), "compaction commit failed")
+      if (buckets.nonEmpty) rewrite(cur, buckets)()
       buckets.size
     }
 
@@ -1338,31 +1285,15 @@ object lake {
       * by the rewrite (the fused read applies them), so their lsn range
       * folds into foldedLsnHigh exactly like compaction. Per-row `_lsn`
       * stamps survive the rewrite; the new files' lsn RANGES are the old
-      * files' global envelope (per-bucket ranges can't be mapped across the
-      * hash change without a per-row pass — conservative ranges only cost
-      * pruning selectivity, never correctness). Chunked-manifest mode
+      * files' global envelope (see [[rewrite]]). Chunked-manifest mode
       * re-evaluates against the NEW count (a 32 → 256 rebucket flips the
       * table into chunked commits automatically). Returns the new snapshot
       * version. */
     def rebucket(newBuckets: Int): Long = synchronized {
       val cur = snapshot
       require(newBuckets >= 1, s"bucket count must be >= 1, got $newBuckets")
-      if (newBuckets == cur.numBuckets) return cur.version // already there: no-op
-      val reshaped = cur.copy(numBuckets = newBuckets)
-      val olds = filesOf(cur)
-      // fused read (base ⊕ deltas, row lsn kept) under the OLD layout,
-      // rewritten under the NEW bucket hash
-      val data = readBucketsWithLsn(cur, None)
-      val (lo, hi) = lsnEnvelope(olds)
-      val newFiles = writeBucketed(data, reshaped, cur.version + 1, withRowLsn = true)
-        .map(_.copy(lsnMin = lo, lsnMax = hi))
-      // every old bucket is removed; nextFileState runs against the NEW
-      // shape so the chunked/inline decision tracks the new count
-      val (nf, nm) = nextFileState(reshaped, (0 until cur.numBuckets).toSet, newFiles)
-      val next = reshaped.copy(version = cur.version + 1, files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, olds))
-      require(commit(next, fence = false), "rebucket commit failed")
-      next.version
+      if (newBuckets == cur.numBuckets) cur.version // already there: no-op
+      else rewrite(cur, (0 until cur.numBuckets).toSet)(to = cur.copy(numBuckets = newBuckets)).version
     }
 
     /** Sort-cluster maintenance op: rewrite every bucket ordered by
@@ -1388,17 +1319,8 @@ object lake {
           throw new IllegalArgumentException(
             s"cluster column '$c' not in schema ${cur.schema.fieldNames.mkString("(", ", ", ")")}"))
       }
-      val olds = filesOf(cur)
-      val data = readBucketsWithLsn(cur, None)
-      // bucket membership is unchanged (unlike rebucket's global envelope),
-      // so stamp each rewritten file with ITS bucket's old lsn range
-      val newFiles = stampRanges(writeBucketed(data, cur, cur.version + 1, withRowLsn = true,
-        sortCols = resolved, maxRowsPerFile = Some(maxRowsPerFile)), olds)
-      val (nf, nm) = nextFileState(cur, (0 until cur.numBuckets).toSet, newFiles)
-      val next = cur.copy(version = cur.version + 1, files = nf, manifests = nm,
-        foldedLsnHigh = foldDeltas(cur, olds))
-      require(commit(next, fence = false), "cluster commit failed")
-      next.version
+      rewrite(cur, (0 until cur.numBuckets).toSet)(
+        sortCols = resolved, maxRowsPerFile = Some(maxRowsPerFile)).version
     }
 
     /** Garbage-collect: drop all snapshots except the newest `keepSnapshots`

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,6 +49,19 @@ final case class SchemaRegistry(versions: Map[Int, StructType]) extends Serializ
 
 object SchemaRegistry {
   def single(schema: StructType): SchemaRegistry = SchemaRegistry(Map(1 -> schema))
+
+  /** The columns of `target` projected from rows shaped like `source`: cast
+    * the columns `source` carries, null-fill the ones added since (the
+    * projection mirror of [[SchemaRegistry.conform]]'s additive rules). The
+    * lake readers conform each file's payload with it, the replay engine
+    * each batch's. */
+  private[cdc] def conformedColumns(target: StructType, source: StructType): Seq[Column] = {
+    val have = source.fieldNames.toSet
+    target.fields.toSeq.map { f =>
+      if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }
+  }
 
   /** The widening lattice: from -> legal wider targets. */
   private val widening: Map[DataType, Set[DataType]] = Map(

@@ -111,17 +111,14 @@ object GraftAgg {
   }
 
   /** Case-insensitive stats lookup (SQL identifiers may arrive lower-cased),
-    * projected through [[graft.cdc.skipping.compatibleStats]] for old-schema
-    * files: bounds written under a different encoding class (DATE days vs
+    * projected through [[lake.Snapshot.statsOf]] for old-schema files:
+    * bounds written under a different encoding class (DATE days vs
     * TIMESTAMP micros after a widening) are dropped — the null count, which
     * widening preserves, survives so count(col) still answers. */
   private def statsFor(snap: lake.Snapshot, file: lake.DataFile, name: String)
       : Option[graft.cdc.skipping.ColStats] =
-    file.stats
-      .map(s => if (file.schemaVersion == snap.schemaVersion) s
-        else graft.cdc.skipping.compatibleStats(s, snap.schemaOf(file.schemaVersion), snap.schema))
-      .flatMap(m => m.get(name).orElse(
-        m.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }))
+    snap.statsOf(file).flatMap(m => m.get(name).orElse(
+      m.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }))
 
   private def bound(snap: lake.Snapshot, files: Seq[lake.DataFile],
       col: org.apache.spark.sql.connector.expressions.Expression, isMin: Boolean)

@@ -371,8 +371,7 @@ class GraftHistoryTable(lakeTable: lake.LakeTable) extends Table with SupportsRe
                 Row(s.version,
                   s.committedAt.map(new java.sql.Timestamp(_)).orNull,
                   s.epochId, s.lsnHigh, s.schemaVersion, s.formatVersion,
-                  s.files.size + s.manifests.map(_.numFiles).sum,
-                  s.manifests.size)
+                  s.numFiles, s.manifests.size)
               }
               ctx.sparkSession.sparkContext.parallelize(rows, 1)
             }
@@ -455,17 +454,12 @@ private object GraftFilesTable {
   * feed. */
 class GraftChangesTable(lakeTable: lake.LakeTable, sinceVersion: Long)
   extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-
   // MVCC pin (same contract GraftTable documents): the snapshot version is
   // captured at resolution and the scan resolves against IT, so a commit or
   // schema evolution between resolution and execution can neither change
   // the feed's rows nor mis-bind the declared relation schema.
   private val pinnedSnap = lakeTable.snapshot
-  private val changesSchema = StructType(
-    StructField("lsn", LongType, nullable = false) +:
-      StructField("op", StringType, nullable = true) +:
-      pinnedSnap.schema.fields)
+  private val changesSchema = graft.cdc.changefeed.feedSchema(pinnedSnap.schema)
 
   override def name(): String = s"${lakeTable.name}.changes_since_$sinceVersion"
   override def schema(): StructType = changesSchema
@@ -665,27 +659,8 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
                 .map(org.apache.spark.sql.functions.col): _*)
             }).asInstanceOf[T]
 
-          /** Table-level statistics from the snapshot alone — inline file
-            * entries plus the rows/bytes sums the manifest refs carry, ZERO
-            * manifest reads. Without this Catalyst assumes infinite size and
-            * a 100-row dim table never broadcasts in a statically-planned
-            * join (AQE rescues shuffles at runtime, but join ORDER and
-            * non-AQE contexts plan on these numbers). Refs written before
-            * the sums existed report 0 with files present — then the size
-            * stays unknown rather than under-reported (a falsely-small
-            * table would broadcast something huge). */
           override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-            new org.apache.spark.sql.connector.read.Statistics {
-              private val known = snap.manifests.forall(m => m.numFiles == 0 || m.bytes > 0)
-              override def sizeInBytes(): java.util.OptionalLong =
-                if (known) java.util.OptionalLong.of(
-                  snap.files.map(_.bytes).sum + snap.manifests.map(_.bytes).sum)
-                else java.util.OptionalLong.empty()
-              override def numRows(): java.util.OptionalLong =
-                if (known) java.util.OptionalLong.of(
-                  snap.files.map(_.rows).sum + snap.manifests.map(_.rows).sum)
-                else java.util.OptionalLong.empty()
-            }
+            GraftStats.of(snap)
         }
       }
     }

@@ -664,7 +664,7 @@ case class GraftMergeCommand(
         // observability hook must not pay the O(all buckets) cost the
         // pruned probe exists to avoid)
         GraftMergeCommand.lastProbe.set(Some(
-          (probeFiles.size, snap.files.size + snap.manifests.map(_.numFiles).sum)))
+          (probeFiles.size, snap.numFiles)))
         // target payload is fetched only when an assignment list or a
         // canonicalized leg condition can reference it — an empty spec with
         // source-only conditions (untouched/delete-only matched legs) never

@@ -271,8 +271,7 @@ class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
       case _ => matched
     }
     skipping.ScanStats.last.set(Some((
-      buckets.map(_.size).getOrElse(snap.numBuckets), snap.numBuckets,
-      kept.size, snap.files.size + snap.manifests.map(_.numFiles).sum)))
+      buckets.map(_.size).getOrElse(snap.numBuckets), snap.numBuckets, kept.size, snap.numFiles)))
     val byBucket = kept.groupBy(_.bucket)
     // every bucket gets a partition (possibly empty): both sides of a
     // storage-partitioned join then carry identical key sets 0..NB-1
@@ -288,15 +287,5 @@ class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
 
   /** Same manifest-level statistics as the V1 scan (broadcast planning). */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      private val known = snap.manifests.forall(m => m.numFiles == 0 || m.bytes > 0)
-      override def sizeInBytes(): java.util.OptionalLong =
-        if (known) java.util.OptionalLong.of(
-          snap.files.map(_.bytes).sum + snap.manifests.map(_.bytes).sum)
-        else java.util.OptionalLong.empty()
-      override def numRows(): java.util.OptionalLong =
-        if (known) java.util.OptionalLong.of(
-          snap.files.map(_.rows).sum + snap.manifests.map(_.rows).sum)
-        else java.util.OptionalLong.empty()
-    }
+    GraftStats.of(snap)
 }

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.cdc._
 import graft.cdc.lake._
@@ -12,8 +13,9 @@ import graft.cdc.model._
 
 /** Engine write jobs carry their shape in their own plans: they leave the
   * session's confs alone, and they keep one file per touched bucket under
-  * whatever AQE and shuffle width the session runs with. */
-class EngineJobShapeSpec extends SparkSuite {
+  * whatever AQE and shuffle width the session runs with; a maintenance
+  * rewrite runs one shuffle. */
+class EngineJobShapeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val aqeKey = "spark.sql.adaptive.enabled"
   private val widthKey = "spark.sql.shuffle.partitions"
@@ -34,6 +36,25 @@ class EngineJobShapeSpec extends SparkSuite {
     import spark.implicits._
     ids.map(i => (lsn0 + i, "U", s"r${i % 7}", s"p$i", s"c$lsn0-$i", "scala", s"x$lsn0-$i"))
       .toDF("lsn", "op", "repo", "path", "commit", "lang", "content")
+  }
+
+  /** Run `op` and assert that the queries it runs plan exactly one shuffle
+    * exchange between them, AQE query stages included. */
+  private def oneShuffle[T](what: String)(op: => T): T = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try { val o = op; awaitStable(plans.size); o }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val exchanges = plans.asScala.toSeq.map(p => collect(p) { case e: ShuffleExchangeExec => e }.size)
+    assert(exchanges.sum == 1, s"$what: shuffle exchanges per query $exchanges, want one in all")
+    out
   }
 
   private def bucketsOf(t: LakeTable, df: DataFrame): Set[Int] =
@@ -104,21 +125,36 @@ class EngineJobShapeSpec extends SparkSuite {
         oneFilePerBucket("dense merge", everyBucket)(
           assert(t.merge(dense, epochId = 2).committed))
 
-        val deltaIds = all.filter(_ % 13 == 5).take(30)
-        val deltas = events(deltaIds, 3000000)
-        val deltaBuckets = bucketsOf(t, deltas)
-        oneFilePerBucket("deltaAppend", deltaBuckets)(
-          assert(t.deltaAppend(deltas, epochId = 3).committed))
+        val content = scala.collection.mutable.Map(all.map(i => i -> s"x2000000-$i"): _*)
+        /** MoR-append upserts for `ids` as epoch `epoch`; returns their buckets. */
+        def deltaAppend(ids: Seq[Long], epoch: Long): Set[Int] = {
+          val deltas = events(ids, epoch * 1000000)
+          val buckets = bucketsOf(t, deltas)
+          oneFilePerBucket(s"deltaAppend $epoch", buckets)(
+            assert(t.deltaAppend(deltas, epochId = epoch).committed))
+          ids.foreach(i => content(i) = s"x${epoch * 1000000}-$i")
+          buckets
+        }
+        val deltaBuckets = deltaAppend(all.filter(_ % 13 == 5).take(30), 3)
         oneFilePerBucket("compactDeltas", deltaBuckets)(
-          assert(t.compactDeltas() == deltaBuckets.size))
+          assert(oneShuffle("compactDeltas")(t.compactDeltas()) == deltaBuckets.size))
+
+        // the maintenance rewrites over delta-bearing buckets: one key
+        // shuffle serves both the delta-resolving aggregate and the write
+        val smallFiles = deltaAppend(all.filter(_ % 17 == 3).take(30), 4)
+        oneFilePerBucket("compact", smallFiles)(
+          assert(oneShuffle("compact")(t.compact()) == smallFiles.size))
+        deltaAppend(all.filter(_ % 11 == 7).take(30), 5)
+        oneFilePerBucket("cluster", everyBucket)(oneShuffle("cluster")(t.cluster(Seq("content"))))
+        deltaAppend(all.filter(_ % 23 == 1).take(30), 6)
+        oneFilePerBucket("rebucket", bucketsOf(t, appended))(oneShuffle("rebucket")(t.rebucket(2 * nb)))
+        assert(t.snapshot.numBuckets == 2 * nb)
 
         // the layout checks say nothing if the rows are wrong
         val rows = t.read().select("path", "content").collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
         assert(rows.size == all.size, s"${rows.size} rows, want ${all.size}")
-        val wrong = all.filterNot { i =>
-          rows.get(s"p$i").contains(if (deltaIds.contains(i)) s"x3000000-$i" else s"x2000000-$i")
-        }
+        val wrong = all.filterNot(i => rows.get(s"p$i").contains(content(i)))
         assert(wrong.isEmpty, s"${wrong.size} paths hold the wrong content, e.g. p${wrong.headOption}")
       }
     }

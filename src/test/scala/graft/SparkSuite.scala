@@ -27,6 +27,17 @@ abstract class SparkSuite extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Listener buses deliver asynchronously: poll `count` until it has held
+    * still for half a second. */
+  def awaitStable(count: => Int): Unit = {
+    var last = -1; var stableFor = 0
+    while (stableFor < 5) {
+      val c = count
+      if (c == last) stableFor += 1 else { stableFor = 0; last = c }
+      Thread.sleep(100)
+    }
+  }
+
   /** The Spark jobs `f` starts, by `spark.job.description` ("" when unset),
     * recorded with AQE off: AQE submits each shuffle map stage as its own
     * job, which would count one pass twice. */
@@ -43,13 +54,7 @@ abstract class SparkSuite extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = f
-      // the listener bus is async: poll until the job count is stable
-      var last = -1; var stableFor = 0
-      while (stableFor < 5) {
-        val c = jobs.size
-        if (c == last) stableFor += 1 else { stableFor = 0; last = c }
-        Thread.sleep(100)
-      }
+      awaitStable(jobs.size)
       import scala.jdk.CollectionConverters._
       (out, jobs.asScala.toSeq)
     } finally {
