@@ -19,7 +19,8 @@ import org.json4s.jackson.Serialization
   * Layout per table root:
   * {{{
   *   data/<snapshotVersion>-<uuid>/_b=<bucket>/part-*.parquet
-  *   meta/v%016d.json     immutable snapshot manifests
+  *   meta/v%016d.json     immutable snapshots (the manifest list)
+  *   meta/m/<uuid>-b<bucket>.json  immutable per-bucket manifests
   *   meta/_CURRENT        hint: a recently committed version
   * }}}
   *
@@ -73,8 +74,8 @@ object lake {
         * simply never skipped. */
       stats: Option[Map[String, skipping.ColStats]] = None)
 
-  /** Pointer to one bucket's immutable manifest file (chunked-manifest mode,
-    * Iceberg's manifest-list idea minimized): `path` is root-relative, the
+  /** Pointer to one bucket's immutable manifest file (Iceberg's
+    * manifest-list idea minimized): `path` is root-relative, the
     * counts let planners prune without reading the manifest; `rows`/`bytes`
     * sums feed table-level statistics without reading it either (0 on
     * refs written before the fields existed = stats unknown, never a lie). */
@@ -105,7 +106,6 @@ object lake {
         * commands rely on it when stamping their batches at lsnHigh + 1. */
       lsnHigh: Long,
       properties: Map[String, String],
-      files: Seq[DataFile],
       /** Highest lsnMax among delta files ever folded away (CoW merge /
         * compaction). Lets changesSince prove completeness in O(1): a delta
         * committed after snapshot v carries lsn > v.lsnHigh (binlog ordering
@@ -117,27 +117,24 @@ object lake {
         * (json4s fills defaults, so old manifests stay readable); such
         * snapshots are treated as arbitrarily old. */
       committedAt: Option[Long] = None,
-      /** Chunked-manifest mode (auto above 64 buckets): the file list lives
-        * in per-bucket manifest files referenced here instead of inline in
-        * `files`. A commit rewrites ONLY the touched buckets' manifests and
-        * carries the rest by reference — commit cost is O(touched buckets'
-        * files), not O(all files), which is what keeps the driver out of the
-        * way at the 100 TB envelope (4096+ buckets, millions of files).
-        * Resolve with LakeTable.filesOf / filesOfBuckets, never `files`
-        * alone. */
+      /** The file list: one ref per non-empty bucket, each pointing at that
+        * bucket's manifest file. A commit rewrites ONLY the touched buckets'
+        * manifests and carries the rest by reference — commit cost is
+        * O(touched buckets' files), not O(all files), which is what keeps
+        * the driver out of the way at the 100 TB envelope (4096+ buckets,
+        * millions of files). Resolve with LakeTable.filesOf /
+        * filesOfBuckets. */
       manifests: Seq[ManifestRef] = Nil) {
     /** Any MoR delta files outstanding — O(refs), no manifest reads. */
-    def anyDeltas: Boolean =
-      files.exists(_.kind == "delta") || manifests.exists(_.deltaFiles > 0)
-    /** Total live rows from inline entries + ref sums, or None when a
-      * pre-sum ref (0 with files present) makes the total unknowable
-      * without resolving manifests. O(refs). */
+    def anyDeltas: Boolean = manifests.exists(_.deltaFiles > 0)
+    /** Total live rows from the ref sums, or None when a pre-sum ref (0
+      * with files present) makes the total unknowable without resolving
+      * manifests. O(refs). */
     def knownRows: Option[Long] =
-      if (manifests.forall(m => m.numFiles == 0 || m.rows > 0))
-        Some(files.map(_.rows).sum + manifests.map(_.rows).sum)
+      if (manifests.forall(m => m.numFiles == 0 || m.rows > 0)) Some(manifests.map(_.rows).sum)
       else None
-    /** Live data-file count from inline entries + ref counts. O(refs). */
-    def numFiles: Int = files.size + manifests.map(_.numFiles).sum
+    /** Live data-file count from the ref counts. O(refs). */
+    def numFiles: Int = manifests.map(_.numFiles).sum
 
     // memoized per Snapshot instance: planning consults schemaOf per FILE
     // (old-schema stats projection), and re-parsing the schema JSON per
@@ -195,10 +192,10 @@ object lake {
     Serialization.read[ManifestData](store.read(Paths.get(root, rel))
       .getOrElse(throw new NoSuchFileException(s"$root/$rel"))).files
 
-  /** Highest snapshot format this reader understands: 1 = inline file list,
-    * 2 = adds chunked per-bucket manifests (`Snapshot.manifests`). A reader
-    * that ignored `manifests` would silently see a partial table, so
-    * [[LakeTable.snapshotAt]] refuses any snapshot above this version —
+  /** Highest snapshot format this reader understands: 1 = no data files
+    * yet (an empty create), 2 = per-bucket manifests (`Snapshot.manifests`).
+    * A reader that ignored `manifests` would silently see a partial table,
+    * so [[LakeTable.snapshotAt]] refuses any snapshot above this version —
     * the same reader/format-version gate Iceberg and Delta apply. */
   val SupportedFormatVersion = 2
 
@@ -244,7 +241,7 @@ object lake {
       val t = new LakeTable(spark, root, name)
       if (t.currentVersionOpt.isEmpty) {
         val snap0 = Snapshot(1, name, 0L, 1,
-          Map("1" -> schema.json), keyColumns, numBuckets, -1L, -1L, properties, Nil)
+          Map("1" -> schema.json), keyColumns, numBuckets, -1L, -1L, properties)
         t.commit(snap0)
       }
       t
@@ -306,8 +303,15 @@ object lake {
       throw new IllegalStateException(s"table $name at $root has no snapshot")))
 
     def snapshotAt(v: Long): Snapshot = {
-      val s = Serialization.read[Snapshot](store.read(snapPath(v)).getOrElse(
+      val json = JsonMethods.parse(store.read(snapPath(v)).getOrElse(
         throw new NoSuchFileException(snapPath(v).toString)))
+      // an inline file list (earlier format-1 writers): json4s drops the
+      // unknown field, so reading on would silently lose those files
+      require((json \ "files") match { case JArray(fs) => fs.isEmpty; case _ => true },
+        s"snapshot v$v of '$name' lists its data files inline, a layout this reader no " +
+          "longer reads — refusing to read it as a table without those files; rewrite the " +
+          "table with a graft version that still reads inline file lists")
+      val s = json.extract[Snapshot]
       require(s.formatVersion <= SupportedFormatVersion,
         s"snapshot v$v of '$name' has formatVersion ${s.formatVersion}, but this reader " +
           s"supports <= $SupportedFormatVersion — refusing to read a partial view; " +
@@ -332,11 +336,10 @@ object lake {
         require(next.version == cur.version + 1,
           s"non-monotonic commit: have v${cur.version}, got v${next.version}")
       }
-      // stamp the commit wall-clock and normalize the format version: chunked
-      // manifests are a format-2 feature, and bumping ONLY when they appear
-      // keeps pure-inline tables readable by format-1 readers forever.
-      // The stamp is MONOTONICIZED against the previous snapshot's (Delta's
-      // in-commit-timestamp approach): a wall-clock regression or a second
+      // stamp the commit wall-clock and normalize the format version:
+      // manifests are a format-2 feature, so a snapshot without any (an
+      // empty create) stays format 1. The stamp is MONOTONICIZED against
+      // the previous snapshot's (Delta's in-commit-timestamp approach): a wall-clock regression or a second
       // writer host with clock skew can otherwise stamp v+1 before v, which
       // would make TIMESTAMP AS OF resolve the wrong snapshot (versionAt
       // scans newest-first assuming monotone stamps) — and the strict +1
@@ -355,15 +358,7 @@ object lake {
       true
     }
 
-    // ---- chunked manifests --------------------------------------------------
-
-    /** Chunked-manifest mode: automatic above 64 buckets (the envelope where
-      * an inline O(all files) list stops being a sane driver-side payload),
-      * or forced via table property `graft.manifest.chunk = always`. The
-      * predicate is a pure function of creation-time state, so a table is
-      * chunked or inline for life. */
-    private def chunkedManifests(snap: Snapshot): Boolean =
-      snap.numBuckets > 64 || snap.properties.get("graft.manifest.chunk").contains("always")
+    // ---- per-bucket manifests ----------------------------------------------
 
     /** Immutable once written (uuid names), so cached for the handle's life. */
     private val manifestCache = new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFile]]()
@@ -387,67 +382,39 @@ object lake {
         schemaVersionHi = if (files.isEmpty) 0 else files.map(_.schemaVersion).max)
     }
 
-    /** All data files of a snapshot (inline + manifest-resolved). In chunked
-      * mode this reads every manifest — use [[filesOfBuckets]] with a bucket
-      * set whenever the caller knows one (merge, pruned reads). */
-    def filesOf(snap: Snapshot): Seq[DataFile] =
-      if (snap.manifests.isEmpty) snap.files
-      else snap.files ++ snap.manifests.flatMap(readManifest)
+    /** All data files of a snapshot: reads every manifest — use
+      * [[filesOfBuckets]] with a bucket set whenever the caller knows one
+      * (merge, pruned reads). */
+    def filesOf(snap: Snapshot): Seq[DataFile] = snap.manifests.flatMap(readManifest)
 
     /** Bucket-pruned file resolution: reads ONLY the requested buckets'
       * manifests (`deltaOnly` additionally skips manifests whose ref reports
       * zero delta files — changesSince / compactDeltas pruning). */
     def filesOfBuckets(snap: Snapshot, buckets: Option[Set[Int]],
-        deltaOnly: Boolean = false): Seq[DataFile] = {
-      def want(b: Int) = buckets.forall(_.contains(b))
-      val inline = snap.files.filter(f => want(f.bucket) && (!deltaOnly || f.kind == "delta"))
-      val fromManifests = snap.manifests
-        .filter(m => want(m.bucket) && (!deltaOnly || m.deltaFiles > 0))
+        deltaOnly: Boolean = false): Seq[DataFile] =
+      snap.manifests
+        .filter(m => buckets.forall(_.contains(m.bucket)) && (!deltaOnly || m.deltaFiles > 0))
         .flatMap(readManifest)
         .filter(f => !deltaOnly || f.kind == "delta")
-      inline ++ fromManifests
-    }
 
-    /** Per-bucket sums of `ofFile` over inline entries and `ofRef` over
-      * manifest refs: file, row and delta counts with no manifest reads (a
-      * pre-field ref reports 0 rows = unknown, never a lie). */
-    private def perBucket(snap: Snapshot)(ofFile: DataFile => Long, ofRef: ManifestRef => Long): Map[Int, Long] =
-      (snap.files.map(f => f.bucket -> ofFile(f)) ++ snap.manifests.map(m => m.bucket -> ofRef(m)))
-        .groupMapReduce(_._1)(_._2)(_ + _)
-
-    /** Per-bucket MoR delta-file counts; buckets without deltas are absent. */
-    private def deltaCountsByBucket(snap: Snapshot): Map[Int, Long] =
-      perBucket(snap)(f => if (f.kind == "delta") 1L else 0L, _.deltaFiles).filter(_._2 > 0)
-
-    /** Next snapshot's file state after dropping ALL files of
-      * `removedBuckets` and adding `added`: inline list math in inline mode;
-      * in chunked mode, new manifest files are written ONLY for affected
-      * buckets (removed ∪ added) and every other bucket's manifest is
-      * carried by reference — O(touched), never O(table). */
+    /** Next snapshot's manifest refs after dropping ALL files of
+      * `removedBuckets` and adding `added`: new manifest files are written
+      * ONLY for affected buckets (removed ∪ added) and every other bucket's
+      * manifest is carried by reference — O(touched), never O(table). */
     private def nextFileState(cur: Snapshot, removedBuckets: Set[Int],
-        added: Seq[DataFile]): (Seq[DataFile], Seq[ManifestRef]) =
-      if (!chunkedManifests(cur)) {
-        // filesOf (not cur.files): if the chunk property was ever flipped
-        // off on a chunked table, the manifests migrate back inline instead
-        // of being silently dropped (pure-inline tables pay nothing — the
-        // manifest list is empty)
-        (filesOf(cur).filterNot(f => removedBuckets(f.bucket)) ++ added, Nil)
-      } else {
-        val addedByBucket = added.groupBy(_.bucket)
-        val affected = removedBuckets ++ addedByBucket.keySet
-        val keptByBucket = filesOfBuckets(cur, Some(affected -- removedBuckets)).groupBy(_.bucket)
-        val newRefs = affected.toSeq.sorted.flatMap { b =>
-          val list = keptByBucket.getOrElse(b, Nil) ++ addedByBucket.getOrElse(b, Nil)
-          if (list.isEmpty) None else Some(writeManifest(b, list))
-        }
-        // inline files of UNaffected buckets stay inline (covers a table
-        // flipped to chunked mid-life — nothing is dropped either way)
-        val inlineCarried = cur.files.filterNot(f => affected(f.bucket))
-        // superseded manifests leave the cache: a long-lived writer handle
-        // must not accumulate every file list it ever wrote
-        cur.manifests.filter(m => affected(m.bucket)).foreach(m => manifestCache.remove(m.path))
-        (inlineCarried, cur.manifests.filterNot(m => affected(m.bucket)) ++ newRefs)
+        added: Seq[DataFile]): Seq[ManifestRef] = {
+      val addedByBucket = added.groupBy(_.bucket)
+      val affected = removedBuckets ++ addedByBucket.keySet
+      val keptByBucket = filesOfBuckets(cur, Some(affected -- removedBuckets)).groupBy(_.bucket)
+      val newRefs = affected.toSeq.sorted.flatMap { b =>
+        val list = keptByBucket.getOrElse(b, Nil) ++ addedByBucket.getOrElse(b, Nil)
+        if (list.isEmpty) None else Some(writeManifest(b, list))
       }
+      // superseded manifests leave the cache: a long-lived writer handle
+      // must not accumulate every file list it ever wrote
+      cur.manifests.filter(m => affected(m.bucket)).foreach(m => manifestCache.remove(m.path))
+      cur.manifests.filterNot(m => affected(m.bucket)) ++ newRefs
+    }
 
     /** Per-source Hadoop options for every data-file read/write of this
       * table: the `file:` scheme resolves to [[ForkFreeLocalFileSystem]]
@@ -517,7 +484,14 @@ object lake {
     def readBuckets(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame =
       readFiles(snap, filesOfBuckets(snap, buckets))
 
-    /** Predicate-planned read: the scan's file list is pruned BEFORE any
+    /** Predicate-planned read: the table rows of the files [[planScan]]
+      * keeps. Every predicate is re-applied row-level above this scan (the
+      * V1 relation keeps `unhandledFilters` = all). */
+    def readWhere(snap: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
+      readFiles(snap, planScan(snap, filters))
+
+    /** The one scan planner, of the V1 relation ([[readWhere]]) and the
+      * native keyed scan alike: the scan's file list is pruned BEFORE any
       * parquet is opened (and, the scan being planned from the manifest,
       * without listing any directory or probing any path), on two levels —
       *
@@ -535,21 +509,30 @@ object lake {
       *     pruning needs no such guard — a key's entire history lives in its
       *     one bucket.)
       *
-      * Every predicate is re-applied row-level above this scan (the V1
-      * relation keeps `unhandledFilters` = all), so both levels are pure
-      * I/O elision. */
-    def readWhere(snap: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-      if (filters.isEmpty) return readBuckets(snap, None)
+      * Both levels are pure I/O elision: every caller re-applies the
+      * predicates above the scan. A pushed `limit` (the keyed scan's, on a
+      * delta-free snapshot) keeps only a file prefix whose row counts cover
+      * it, and only with no filters: a filtered file may yield fewer rows
+      * than its count. [[skipping.ScanStats.last]] records the planned
+      * buckets and the kept files. */
+    def planScan(snap: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter],
+        limit: Option[Int] = None): Seq[DataFile] = {
       val buckets = skipping.bucketsForKeys(filters, snap.keyColumns, snap.schema, snap.numBuckets)
       val wanted = filesOfBuckets(snap, buckets)
       val deltaBuckets = wanted.filter(_.kind == "delta").map(_.bucket).toSet
-      val kept = wanted.filter { f =>
+      val matched = wanted.filter { f =>
         f.kind == "delta" || deltaBuckets(f.bucket) || snap.statsOf(f).forall(s =>
           filters.forall(flt => skipping.mayMatch(s, f.rows, snap.schema, flt)))
       }
+      val kept = limit match {
+        case Some(n) if filters.isEmpty =>
+          var need = n.toLong
+          matched.takeWhile { f => val take = need > 0; need -= f.rows; take }
+        case _ => matched
+      }
       skipping.ScanStats.last.set(Some((
         buckets.map(_.size).getOrElse(snap.numBuckets), snap.numBuckets, kept.size, snap.numFiles)))
-      readFiles(snap, kept)
+      kept
     }
 
     /** The table rows `wanted` hold: base rows as stored, deltas applied. */
@@ -790,8 +773,7 @@ object lake {
       * delta-bearing manifests of the removed buckets are resolved for it. */
     private def nextSnapshot(next: Snapshot, removedBuckets: Set[Int], added: Seq[DataFile]): Snapshot = {
       val folded = foldDeltas(next, filesOfBuckets(next, Some(removedBuckets), deltaOnly = true))
-      val (nf, nm) = nextFileState(next, removedBuckets, added)
-      next.copy(files = nf, manifests = nm, foldedLsnHigh = folded)
+      next.copy(manifests = nextFileState(next, removedBuckets, added), foldedLsnHigh = folded)
     }
 
     /** Full overwrite (reference: src/models/writer.py:34-40). An unfenced
@@ -807,10 +789,10 @@ object lake {
       val files = writeBucketed(cur.registry.conform(df, cur.schemaVersion), cur, next0.version)
       val next = nextSnapshot(next0, (0 until cur.numBuckets).toSet, files)
       val ok = commit(next, fence = epochId >= 0)
-      val removedCounts = perBucket(cur)(_ => 1L, _.numFiles)
+      val removedCounts = cur.manifests.map(m => m.bucket -> m.numFiles).toMap
       val lin = files.groupBy(_.bucket).map { case (b, fs) =>
         LineageEntry(name, next.version, epochId, b, lsnHigh, lsnHigh,
-          fs.map(_.rows).sum, 0L, fs.size, removedCounts.getOrElse(b, 0L).toInt, nowTs())
+          fs.map(_.rows).sum, 0L, fs.size, removedCounts.getOrElse(b, 0), nowTs())
       }.toSeq
       CommitResult(ok, if (ok) next else cur, if (ok) lin else Nil)
     }
@@ -990,9 +972,9 @@ object lake {
       // fused dedup+merge: base rows join the race at their stored row _lsn,
       // MoR delta rows at their own LSN, batch events at theirs — one
       // aggregation resolves everything by true log position (a CoW merge
-      // also compacts any deltas of the buckets it rewrites). Chunked mode
-      // reads only the touched buckets' manifests: an epoch never
-      // materializes the full file list driver-side.
+      // also compacts any deltas of the buckets it rewrites). Only the
+      // touched buckets' manifests are read: an epoch never materializes
+      // the full file list driver-side.
       val olds = filesOfBuckets(cur, Some(stats.keySet))
       val merged = mergeExpr(byKey(storedChanges(cur, olds).unionByName(leg), cur, stats.size), cur)
       // byKey laid the aggregate out bucket-whole — no repartition before
@@ -1106,7 +1088,7 @@ object lake {
       snap.properties.get("graft.mor.compactAfter")
         .flatMap(v => scala.util.Try(v.trim.toInt).toOption).foreach { k =>
           try {
-            val over = deltaCountsByBucket(snap).filter(_._2 > k).keySet
+            val over = snap.manifests.filter(_.deltaFiles > k).map(_.bucket).toSet
             if (over.nonEmpty) { compactDeltas(Some(over)); () }
           } catch {
             case scala.util.control.NonFatal(e) =>
@@ -1120,7 +1102,8 @@ object lake {
       * path). Returns buckets compacted. */
     def compactDeltas(only: Option[Set[Int]] = None): Int = synchronized {
       val cur = snapshot
-      val buckets = only.foldLeft(deltaCountsByBucket(cur).keySet)(_ intersect _)
+      val withDeltas = cur.manifests.filter(_.deltaFiles > 0).map(_.bucket).toSet
+      val buckets = only.foldLeft(withDeltas)(_ intersect _)
       if (buckets.nonEmpty) rewrite(cur, buckets)()
       buckets.size
     }
@@ -1257,19 +1240,18 @@ object lake {
       * left alone. Returns the number of buckets compacted. */
     def compact(minFiles: Int = 2): Int = synchronized {
       val cur = snapshot
-      // bucket selection is ref-count-only (no manifest reads). Under a
+      // bucket selection is ref-count-only (no manifest reads; a pre-field
+      // ref's 0 rows reads as a target of one file). Under a
       // cluster-on-write policy the TARGET layout is ceil(rows / cap) files
       // per bucket, not one: a bucket already at (or under) its target is
       // done — without this, scheduled compactions would rewrite perfectly
       // laid-out buckets forever and always report progress
-      val expected: Int => Long = clusterPolicy(cur)._2 match {
+      val expected: ManifestRef => Long = clusterPolicy(cur)._2 match {
         case None => _ => 1L
-        case Some(cap) =>
-          val rows = perBucket(cur)(_.rows, _.rows)
-          b => math.max(1L, (rows.getOrElse(b, 0L) + cap - 1) / cap)
+        case Some(cap) => m => math.max(1L, (m.rows + cap - 1) / cap)
       }
-      val buckets = perBucket(cur)(_ => 1L, _.numFiles)
-        .filter { case (b, n) => n >= minFiles && n > expected(b) }.keySet
+      val buckets = cur.manifests
+        .filter(m => m.numFiles >= minFiles && m.numFiles > expected(m)).map(_.bucket).toSet
       if (buckets.nonEmpty) rewrite(cur, buckets)()
       buckets.size
     }
@@ -1285,9 +1267,7 @@ object lake {
       * by the rewrite (the fused read applies them), so their lsn range
       * folds into foldedLsnHigh exactly like compaction. Per-row `_lsn`
       * stamps survive the rewrite; the new files' lsn RANGES are the old
-      * files' global envelope (see [[rewrite]]). Chunked-manifest mode
-      * re-evaluates against the NEW count (a 32 → 256 rebucket flips the
-      * table into chunked commits automatically). Returns the new snapshot
+      * files' global envelope (see [[rewrite]]). Returns the new snapshot
       * version. */
     def rebucket(newBuckets: Int): Long = synchronized {
       val cur = snapshot

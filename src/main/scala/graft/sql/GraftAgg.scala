@@ -49,13 +49,9 @@ import graft.cdc.lake
   */
 object GraftAgg {
 
-  /** Session kill-switch (default on): `spark.graft.agg.pushdown.enabled`. */
-  def enabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get("spark.graft.agg.pushdown.enabled", "true") == "true"
-
   /** `count(*)`-only aggregations answered from the manifest REFS alone —
     * zero manifest files opened (the refs carry per-bucket row sums and
-    * delta counts): on a chunked 10M-file table the canonical
+    * delta counts): on a 10M-file table the canonical
     * `SELECT count(*)` becomes a pure snapshot-JSON fold. Refs written
     * before the row sums existed report 0 with files present (unknown) and
     * refuse here — the caller falls back to [[answer]] over resolved files. */

@@ -383,9 +383,8 @@ class GraftHistoryTable(lakeTable: lake.LakeTable) extends Table with SupportsRe
 /** Read-only `files` metadata table (Iceberg `t.files` analog): one row per
   * LIVE data file of the table's current snapshot — path, bucket, kind,
   * rows/bytes, schema version, lsn range, per-row-lsn flag, and the
-  * data-skipping bounds as JSON. Inline file entries emit driver-side
-  * (they are already in memory); chunked-mode manifests are parsed ON
-  * EXECUTORS (one task slice per manifest ref), so the listing scales to
+  * data-skipping bounds as JSON. The manifests are parsed ON EXECUTORS
+  * (one task slice per manifest ref), so the listing scales to
   * the 10M-file envelope without materializing the file set on the driver
   * — the same distribution discipline as vacuum's per-dir scan. */
 class GraftFilesTable(lakeTable: lake.LakeTable) extends Table with SupportsRead {
@@ -419,16 +418,10 @@ class GraftFilesTable(lakeTable: lake.LakeTable) extends Table with SupportsRead
             override def schema: StructType = filesSchema
             override def buildScan(): RDD[Row] = {
               val sc = ctx.sparkSession.sparkContext
-              val inline = sc.parallelize(
-                pinnedSnap.files.map(GraftFilesTable.toRow),
-                math.max(1, math.min(pinnedSnap.files.size, 4)))
-              if (pinnedSnap.manifests.isEmpty) return inline
               val (store, root) = (lakeTable.store, lakeTable.root)
               val refs = pinnedSnap.manifests.map(_.path)
-              val fromManifests = sc
-                .parallelize(refs, math.max(1, math.min(refs.size, sc.defaultParallelism)))
+              sc.parallelize(refs, math.max(1, math.min(refs.size, sc.defaultParallelism)))
                 .flatMap(p => lake.readManifestFile(store, root, p).map(GraftFilesTable.toRow))
-              inline.union(fromManifests)
             }
           }.asInstanceOf[T]
       }
@@ -597,9 +590,7 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
       // shared with aggregate answering
       private lazy val allFiles: Seq[graft.cdc.lake.DataFile] = table.filesOf(snap)
       private lazy val spjEligible: Boolean =
-        GraftSpj.eligibleByRefs(table.spark, snap).getOrElse(
-          GraftSpj.eligible(table.spark, snap, allFiles))
-      private def anyDeltas: Boolean = snap.anyDeltas
+        GraftSpj.eligibleByRefs(snap).getOrElse(GraftSpj.eligible(snap, allFiles))
       // Spark probes supportCompletePushDown and pushAggregation with the
       // same Aggregation instance — memoize by identity, not equality
       // (java records compare array components by reference anyway)
@@ -611,7 +602,7 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
           case Some((prev, r)) if prev eq aggregation => r
           case _ =>
             val r =
-              if (pushed.nonEmpty || anyDeltas || !GraftAgg.enabled(table.spark)) None
+              if (pushed.nonEmpty || snap.anyDeltas) None
               else GraftAgg.answerFromRefs(snap, aggregation) // count(*): zero manifest reads
                 .orElse(GraftAgg.answer(snap, allFiles, aggregation))
             aggProbe = Some((aggregation, r))
@@ -643,7 +634,7 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
         // plan without an Exchange. MoR deltas or old-schema files need
         // the fused merge / conform logic, which lives on the V1 relation
         // path below — the general fallback, bit-identical results.
-        if (!anyDeltas && spjEligible)
+        if (spjEligible)
           return new GraftKeyedScan(table, snap, required, pushed.toSeq, limit)
         new V1Scan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
           private val scanFilters = pushed

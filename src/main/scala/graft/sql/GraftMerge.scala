@@ -705,23 +705,9 @@ case class GraftMergeCommand(
     val kept = flagged.filter(
       (col(matchedCol) && (delC || updC)) || (!col(matchedCol) && insC))
     val opCol = when(col(matchedCol) && delC, "D").otherwise("U")
-    // all rows of one SQL MERGE share one LSN above the committed
-    // watermark: by the Snapshot.lsnHigh invariant every stored row _lsn
-    // is <= lsnHigh, so lsnHigh + 1 outranks every existing row and the
-    // batch wins per key (multiple source rows per key is undefined under
-    // SQL MERGE anyway).
-    //
-    // CONTRACT (mixing ad-hoc SQL with a live binlog tail): this stamp
-    // extends the table's LSN domain past the upstream binlog position, so a
-    // later CDC epoch whose genuine events carry exactly these next
-    // positions would tie the ad-hoc rows instead of outranking them. A
-    // binlog tail that interleaves with ad-hoc row-level SQL must therefore
-    // keep its LSNs ABOVE the table's lsnHigh (re-read it after ad-hoc
-    // writes) — the same "one log, one ordering" rule every LSN-resolved
-    // store imposes. Stamping ad-hoc writes in a disjoint high range was
-    // considered and rejected: rows parked at 2^62 would outrank every
-    // FUTURE genuine event, silently freezing those keys.
-    val lsn = math.max(snap.lsnHigh, 0L) + 1L
+    // all rows of one SQL MERGE share one LSN, so the batch wins per key
+    // (multiple source rows per key is undefined under SQL MERGE anyway)
+    val lsn = GraftRowLevel.adHocLsn(snap)
     // per-column event payload, four shapes sharing one projection:
     //  - matched non-delete rows: SET * takes the source column; a partial
     //    SET applies its assignment exprs over the probed TARGET values
@@ -775,12 +761,8 @@ case class GraftMergeCommand(
         df.join(src.select(castKeys: _*), keys, "left_anti")
       val derived = act match {
         case GraftMergeRewrite.BySourceDelete(condOpt) =>
-          antiOf(condOpt.map(c => tgt.filter(byName(c))).getOrElse(tgt))
-            .select((Seq(lit(lsn).as("lsn"), lit("D").as("op")) ++
-              snap.schema.fields.toSeq.map { f =>
-                if (keys.contains(f.name)) col(f.name)
-                else lit(null).cast(f.dataType).as(f.name)
-              }): _*)
+          GraftRowLevel.tombstones(
+            antiOf(condOpt.map(c => tgt.filter(byName(c))).getOrElse(tgt)), snap, lsn)
         case GraftMergeRewrite.BySourceUpdate(assigns, condOpt) =>
           val am = assigns.toMap
           antiOf(condOpt.map(c => tgt.filter(byName(c))).getOrElse(tgt))
@@ -809,6 +791,41 @@ private[sql] object GraftRowLevel {
     case u: UnresolvedAttribute => UnresolvedAttribute(Seq(u.nameParts.last))
     case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
   })
+
+  /** The one LSN every row of an ad-hoc row-level SQL write (MERGE, DELETE,
+    * UPDATE) carries: one above the committed watermark. By the
+    * Snapshot.lsnHigh invariant every stored row _lsn is <= lsnHigh, so
+    * lsnHigh + 1 outranks every existing row.
+    *
+    * CONTRACT (mixing ad-hoc SQL with a live binlog tail): this stamp
+    * extends the table's LSN domain past the upstream binlog position, so a
+    * later CDC epoch whose genuine events carry exactly these next
+    * positions would tie the ad-hoc rows instead of outranking them. A
+    * binlog tail that interleaves with ad-hoc row-level SQL must therefore
+    * keep its LSNs ABOVE the table's lsnHigh (re-read it after ad-hoc
+    * writes) — the same "one log, one ordering" rule every LSN-resolved
+    * store imposes. Stamping ad-hoc writes in a disjoint high range was
+    * considered and rejected: rows parked at 2^62 would outrank every
+    * FUTURE genuine event, silently freezing those keys. */
+  def adHocLsn(snap: graft.cdc.lake.Snapshot): Long = math.max(snap.lsnHigh, 0L) + 1L
+
+  /** `rows` as key-only delete events at `lsn`, every non-key column a
+    * typed NULL (see [[GraftDeleteCommand]] for why only the key matters). */
+  def tombstones(rows: org.apache.spark.sql.DataFrame, snap: graft.cdc.lake.Snapshot,
+      lsn: Long): org.apache.spark.sql.DataFrame =
+    rows.select((Seq(lit(lsn).as("lsn"), lit("D").as("op")) ++
+      snap.schema.fields.toSeq.map { f =>
+        if (snap.keyColumns.exists(_.equalsIgnoreCase(f.name))) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
+      }): _*)
+
+  /** Merge a derived `batch` unfenced, persisted for the call so its
+    * derivation runs once for the merge's two consumers. */
+  def mergeOnce(table: graft.cdc.lake.LakeTable, batch: org.apache.spark.sql.DataFrame): Seq[Row] = {
+    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try { table.merge(cached, epochId = -1L); Nil }
+    finally { cached.unpersist(blocking = false); () }
+  }
 }
 
 /** SQL `DELETE FROM` lowered onto the tombstone merge kernel: target rows
@@ -833,18 +850,9 @@ case class GraftDeleteCommand(
   override def run(session: SparkSession): Seq[Row] = {
     val table = graftTable.table
     val snap = table.snapshot
-    val lsn = math.max(snap.lsnHigh, 0L) + 1L
-    val keys = snap.keyColumns.map(_.toLowerCase).toSet
-    val batch = table.readBuckets(snap, None)
-      .filter(GraftRowLevel.byName(condition))
-      .select((Seq(lit(lsn).as("lsn"), lit("D").as("op")) ++
-        snap.schema.fields.toSeq.map { f =>
-          if (keys(f.name.toLowerCase)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try { table.merge(batch, epochId = -1L); Nil }
-    finally { batch.unpersist(blocking = false); () }
+    GraftRowLevel.mergeOnce(table, GraftRowLevel.tombstones(
+      table.readBuckets(snap, None).filter(GraftRowLevel.byName(condition)),
+      snap, GraftRowLevel.adHocLsn(snap)))
   }
 }
 
@@ -865,17 +873,14 @@ case class GraftUpdateCommand(
   override def run(session: SparkSession): Seq[Row] = {
     val table = graftTable.table
     val snap = table.snapshot
-    val lsn = math.max(snap.lsnHigh, 0L) + 1L
     val assigned = assignments.map { case (k, v) => k -> GraftRowLevel.byName(v) }.toMap
     val rows0 = table.readBuckets(snap, None)
     val rows = condition.map(c => rows0.filter(GraftRowLevel.byName(c))).getOrElse(rows0)
-    val batch = rows.select((Seq(lit(lsn).as("lsn"), lit("U").as("op")) ++
-      snap.schema.fields.toSeq.map { f =>
-        assigned.get(f.name.toLowerCase)
-          .map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-      }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try { table.merge(batch, epochId = -1L); Nil }
-    finally { batch.unpersist(blocking = false); () }
+    GraftRowLevel.mergeOnce(table, rows.select(
+      (Seq(lit(GraftRowLevel.adHocLsn(snap)).as("lsn"), lit("U").as("op")) ++
+        snap.schema.fields.toSeq.map { f =>
+          assigned.get(f.name.toLowerCase)
+            .map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
+        }): _*))
   }
 }

@@ -2,7 +2,6 @@ package graft.sql
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Murmur3Hash, Pmod}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
@@ -14,7 +13,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.cdc.{lake, skipping}
+import graft.cdc.lake
 
 /** Storage-partitioned reads: the lake's hash-bucket layout REPORTED to
   * Catalyst, so SQL-surface joins and aggregations on the primary key
@@ -38,8 +37,8 @@ import graft.cdc.{lake, skipping}
   *
   * Files are read with Spark's own parquet reader (vectorized, row-group
   * filter pushdown — built once on the driver via
-  * [[Bridge.parquetReader]]), after the same bucket-pruning + per-file
-  * min/max skipping the V1 path applies. Eligibility is decided per
+  * [[Bridge.parquetReader]]), planned by the same
+  * [[lake.LakeTable.planScan]] as the V1 path. Eligibility is decided per
   * SNAPSHOT, conservatively: every live file must be a base file on the
   * CURRENT schema version (outstanding MoR deltas need the fused max-LSN
   * merge, old-schema files need conform-on-read — both stay on the V1
@@ -51,24 +50,18 @@ import graft.cdc.{lake, skipping}
 object GraftSpj {
 
   /** Whether this snapshot's reads can take the native keyed-scan path. */
-  def eligible(spark: SparkSession, snap: lake.Snapshot, files: Seq[lake.DataFile]): Boolean =
+  def eligible(snap: lake.Snapshot, files: Seq[lake.DataFile]): Boolean =
     snap.keyColumns.nonEmpty &&
-      spark.conf.get("spark.graft.spj.enabled", "true") == "true" &&
       files.forall(f => f.kind == "base" && f.schemaVersion == snap.schemaVersion)
 
   /** Refs-only eligibility proof: decide WITHOUT resolving any per-bucket
     * manifest when every ref stamps its schema-version range (10M-file
     * envelope: scan-build planning must not sweep the manifests just to
     * pick a scan path; only the PRUNED buckets' manifests should ever be
-    * read). Some(x) = provable from refs + inline entries; None = a
-    * pre-field ref (version range 0 = unknown) forces the caller's sweep. */
-  def eligibleByRefs(spark: SparkSession, snap: lake.Snapshot): Option[Boolean] = {
-    if (snap.keyColumns.isEmpty ||
-        spark.conf.get("spark.graft.spj.enabled", "true") != "true")
-      return Some(false)
-    val inlineOk = snap.files.forall(f =>
-      f.kind == "base" && f.schemaVersion == snap.schemaVersion)
-    if (!inlineOk || snap.anyDeltas) return Some(false)
+    * read). Some(x) = provable from the refs; None = a pre-field ref
+    * (version range 0 = unknown) forces the caller's sweep. */
+  def eligibleByRefs(snap: lake.Snapshot): Option[Boolean] = {
+    if (snap.keyColumns.isEmpty || snap.anyDeltas) return Some(false)
     if (snap.manifests.forall(m => m.numFiles == 0 ||
         (m.schemaVersionLo == snap.schemaVersion && m.schemaVersionHi == snap.schemaVersion)))
       Some(true)
@@ -253,26 +246,9 @@ class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
     new KeyGroupedPartitioning(Array(GraftSpj.bucketTransform(snap)), snap.numBuckets)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val effective = scanFilters ++ runtimeFilters
-    val buckets = skipping.bucketsForKeys(effective, snap.keyColumns, snap.schema, snap.numBuckets)
-    val wanted = table.filesOfBuckets(snap, buckets)
-    val matched = wanted.filter(f => f.stats.forall(s =>
-      effective.forall(flt => skipping.mayMatch(s, f.rows, snap.schema, flt))))
-    // pushed LIMIT (partial pushdown — Spark re-limits above): with no
-    // filters in play, manifest row counts are exact contributions, so
-    // plan only a file prefix that covers the limit. Any filter (static
-    // or runtime) disables the truncation — a filtered file may yield
-    // fewer rows than its count, and dropping its siblings could starve
-    // the limit.
-    val kept = pushedLimit match {
-      case Some(n) if effective.isEmpty =>
-        var need = n.toLong
-        matched.takeWhile { f => val take = need > 0; need -= f.rows; take }
-      case _ => matched
-    }
-    skipping.ScanStats.last.set(Some((
-      buckets.map(_.size).getOrElse(snap.numBuckets), snap.numBuckets, kept.size, snap.numFiles)))
-    val byBucket = kept.groupBy(_.bucket)
+    // static and runtime filters prune alike; any filter disables the
+    // pushed LIMIT's file prefix
+    val byBucket = table.planScan(snap, scanFilters ++ runtimeFilters, pushedLimit).groupBy(_.bucket)
     // every bucket gets a partition (possibly empty): both sides of a
     // storage-partitioned join then carry identical key sets 0..NB-1
     (0 until snap.numBuckets).map { b =>

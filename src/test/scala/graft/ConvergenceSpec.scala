@@ -192,13 +192,11 @@ class ConvergenceSpec extends SparkSuite {
       epochs <- SGen.choose(2, 5)
       modes <- SGen.listOfN(epochs, SGen.oneOf(true, false)) // true = MoR epoch
       compactAtEnd <- SGen.oneOf(true, false)
-      chunked <- SGen.oneOf(true, false) // per-bucket manifests vs inline list
     } yield (gen.GenConfig(n = n, nKeys = keys, deletePct = del, numPartitions = 4),
-      modes, compactAtEnd, chunked)
-    val prop = Prop.forAllNoShrink(cfgGen) { case (cfg, modes, compactAtEnd, chunked) =>
+      modes, compactAtEnd)
+    val prop = Prop.forAllNoShrink(cfgGen) { case (cfg, modes, compactAtEnd) =>
       val table = LakeTable.createIfNotExists(spark, tmpDir("prop-mixed"), "t",
-        RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 4,
-        properties = if (chunked) Map("graft.manifest.chunk" -> "always") else Map.empty)
+        RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 4)
       val reg = SchemaRegistry.single(RepoRow.schemaV1)
       val cow = new ReplayEngine(table, reg, mode = MergeMode.CoW)
       val mor = new ReplayEngine(table, reg, mode = MergeMode.MoR)

@@ -645,7 +645,7 @@ class GraftSqlSpec extends SparkSuite {
       s"SELECT kind, count(*) c, max(lsn_max) m FROM $cat.db.t.files GROUP BY kind")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(byKind("base")._1 == 4 && byKind("delta") == ((1L, 5L)), s"got $byKind")
-    // chunked-manifest mode (>64 buckets): refs parsed on EXECUTORS
+    // a 128-bucket table: its manifests are parsed on EXECUTORS
     spark.sql(s"""CREATE TABLE $cat.db.big (k BIGINT, v STRING)
                   TBLPROPERTIES ('primary_key'='k', 'buckets'='128')""")
     spark.sql(s"INSERT INTO $cat.db.big SELECT id, concat('v', id) FROM range(0, 2000)")

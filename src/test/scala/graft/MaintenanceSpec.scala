@@ -64,11 +64,11 @@ class MaintenanceSpec extends SparkSuite {
     val before = table.snapshot
     val rowsBefore = table.read().agg(sum(crc32(concat_ws("|", col("repo"), col("path"),
       sha2(col("content"), 256))))).collect()(0).getLong(0)
-    assert(before.files.groupBy(_.bucket).exists(_._2.size >= 2), "need multi-file buckets")
+    assert(table.filesOf(before).groupBy(_.bucket).exists(_._2.size >= 2), "need multi-file buckets")
     val n = table.compact(minFiles = 2)
     assert(n > 0)
     val after = table.snapshot
-    assert(after.files.groupBy(_.bucket).forall(_._2.size == 1))
+    assert(table.filesOf(after).groupBy(_.bucket).forall(_._2.size == 1))
     val rowsAfter = table.read().agg(sum(crc32(concat_ws("|", col("repo"), col("path"),
       sha2(col("content"), 256))))).collect()(0).getLong(0)
     assert(rowsAfter == rowsBefore)
@@ -76,14 +76,13 @@ class MaintenanceSpec extends SparkSuite {
   }
 
   test("chunked manifests: full lifecycle round-trips and vacuum GCs manifest files") {
-    // force chunked mode at a small bucket count so the whole lifecycle is
-    // cheap to exercise: CoW epochs, MoR deltas, changesSince, compaction,
-    // time travel, reload from disk, vacuum incl. manifest-file GC
+    // a small bucket count keeps the whole lifecycle cheap to exercise:
+    // CoW epochs, MoR deltas, changesSince, compaction, time travel, reload
+    // from disk, vacuum incl. manifest-file GC
     val cfg = gen.GenConfig(n = 9000, nKeys = 1500, deletePct = 10, numPartitions = 4)
     val root = tmpDir("chunked")
     val table = LakeTable.createIfNotExists(spark, root, "t",
-      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 8,
-      properties = Map("graft.manifest.chunk" -> "always"))
+      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 8)
     val engine = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1))
     val mor = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1),
       mode = MergeMode.MoR)
@@ -91,11 +90,11 @@ class MaintenanceSpec extends SparkSuite {
     engine.applyEpoch(all.filter(col("lsn") < 3000), 0)
     val mark = table.snapshot.version
     mor.applyEpoch(all.filter(col("lsn") >= 3000 && col("lsn") < 6000), 1)
-    // chunked state: no inline files, per-bucket manifests, delta counts set
+    // per-bucket manifests with their delta counts set
     val snap = table.snapshot
-    assert(snap.files.isEmpty && snap.manifests.nonEmpty, "chunked tables keep no inline files")
+    assert(snap.manifests.nonEmpty, "data commits must write per-bucket manifests")
     assert(snap.manifests.exists(_.deltaFiles > 0), "MoR epoch must register delta manifests")
-    // CDC-out across chunked manifests
+    // CDC-out across the manifests
     assert(table.changesSince(mark).count() > 0)
     engine.applyEpoch(all.filter(col("lsn") >= 6000), 2)
     table.compactDeltas()
@@ -110,7 +109,7 @@ class MaintenanceSpec extends SparkSuite {
     golden(table)
     // a FRESH handle (empty manifest cache) resolves from disk identically
     golden(LakeTable.load(spark, root, "t"))
-    // time travel reads an older chunked snapshot exactly
+    // time travel reads an older snapshot exactly
     assert(table.readAt(mark).count() > 0)
     // vacuum GCs unreferenced manifest JSONs along with snapshots/data
     val mBefore = java.nio.file.Files.list(java.nio.file.Paths.get(root, "meta", "m")).count()
@@ -120,39 +119,6 @@ class MaintenanceSpec extends SparkSuite {
     assert(mAfter < mBefore, "vacuum must delete unreferenced manifest files")
     assert(mAfter == table.snapshot.manifests.size.toLong)
     golden(table)
-  }
-
-  test("flipping the manifest-chunk property mid-life migrates files without loss") {
-    import spark.implicits._
-    def content(t: LakeTable): Set[(String, String)] =
-      t.read().select("path", "content").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    def batch(lsn0: Long, paths: Seq[String]) =
-      paths.zipWithIndex.map { case (p, i) =>
-        (lsn0 + i, "U", "r", p, s"c${lsn0 + i}", "scala", s"x-$p")
-      }.toDF("lsn", "op", "repo", "path", "commit", "lang", "content")
-    // inline table -> flip to chunked -> sparse write must not drop the
-    // other buckets' inline files
-    val t1 = LakeTable.createIfNotExists(spark, tmpDir("flip-on"), "t",
-      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 8)
-    new ReplayEngine(t1, SchemaRegistry.single(RepoRow.schemaV1))
-      .applyEpoch(batch(0, (0 until 40).map(i => s"p$i")), 0)
-    val before1 = content(t1)
-    t1.setProperties(Map("graft.manifest.chunk" -> "always"))
-    assert(t1.merge(batch(100, Seq("p0")), epochId = 1).committed)
-    assert(content(t1).map(_._1) == before1.map(_._1), "no keys may vanish on the flip")
-    assert(t1.snapshot.manifests.nonEmpty, "touched bucket must live in a manifest now")
-    // chunked table -> flip back to inline -> manifests migrate inline
-    val t2 = LakeTable.createIfNotExists(spark, tmpDir("flip-off"), "t",
-      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 8,
-      properties = Map("graft.manifest.chunk" -> "always"))
-    new ReplayEngine(t2, SchemaRegistry.single(RepoRow.schemaV1))
-      .applyEpoch(batch(0, (0 until 40).map(i => s"q$i")), 0)
-    val before2 = content(t2)
-    t2.setProperties(Map.empty, remove = Seq("graft.manifest.chunk"))
-    assert(t2.merge(batch(100, Seq("q0")), epochId = 1).committed)
-    assert(content(t2).map(_._1) == before2.map(_._1), "no rows may vanish on the flip back")
-    assert(t2.snapshot.manifests.isEmpty && t2.snapshot.files.nonEmpty,
-      "manifests must migrate back inline")
   }
 
   test("cluster: sorted bounded files per bucket; non-key range predicates skip files") {
@@ -273,8 +239,8 @@ class MaintenanceSpec extends SparkSuite {
     assert(v == before.version + 1 && snap.version == v)
     assert(snap.numBuckets == 128)
     assert(snap.epochId == before.epochId, "rebucket must not advance the epoch fence")
-    // >64 buckets: the table flips into chunked-manifest commits automatically
-    assert(snap.files.isEmpty && snap.manifests.nonEmpty, "128-bucket table must be chunked")
+    assert(snap.manifests.nonEmpty && snap.manifests.map(_.bucket).forall(b => b >= 0 && b < 128),
+      "the rewrite must write manifests under the new layout")
     val newFiles = table.filesOf(snap)
     assert(newFiles.nonEmpty && newFiles.forall(_.kind == "base"),
       "the rewrite must absorb outstanding deltas")
@@ -416,8 +382,17 @@ class MaintenanceSpec extends SparkSuite {
       java.nio.file.Files.createFile(java.nio.file.Paths.get(root, f.path))
       f
     }
+    // the referenced set, as one manifest per bucket
+    val manifests = refs.groupBy(_.bucket).toSeq.map { case (b, fs) =>
+      val rel = s"meta/m/seed-b$b.json"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "meta", "m"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(root, rel),
+        org.json4s.jackson.Serialization.write(ManifestData(fs))(
+          org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)))
+      ManifestRef(rel, b, fs.size, 0)
+    }
     val cur = table.snapshot
-    assert(table.commit(cur.copy(version = cur.version + 1, files = refs)))
+    assert(table.commit(cur.copy(version = cur.version + 1, manifests = manifests)))
     val orphanDir = java.nio.file.Paths.get(root, "data", "crashed", "_b=0")
     java.nio.file.Files.createDirectories(orphanDir)
     val nOrphans = 2048
@@ -469,15 +444,44 @@ class MaintenanceSpec extends SparkSuite {
       .replace("\"formatVersion\":1", "\"formatVersion\":99"))
     val e = intercept[IllegalArgumentException] { LakeTable.load(spark, root, "t").snapshot }
     assert(e.getMessage.contains("formatVersion"), e.getMessage)
-    // chunked tables persist formatVersion 2 (manifests are a format-2
-    // feature) and read back fine; inline tables stay format 1
+    // snapshots with manifests persist formatVersion 2 (manifests are a
+    // format-2 feature) and read back fine; an empty create stays format 1
     val c = LakeTable.createIfNotExists(spark, tmpDir("fmt2"), "t",
-      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 2,
-      properties = Map("graft.manifest.chunk" -> "always"))
+      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 2)
     assert(c.snapshot.formatVersion == 1, "empty create carries no manifests yet")
     c.append(Seq(("r", "p", "c", "l", "x")).toDF("repo", "path", "commit", "lang", "content"))
     assert(c.snapshot.formatVersion == 2 && c.snapshot.manifests.nonEmpty)
     assert(c.read().count() == 1)
+  }
+
+  test("a snapshot that lists its data files inline is refused, never read as an empty table") {
+    import spark.implicits._
+    import org.json4s._
+    import org.json4s.jackson.{JsonMethods, Serialization}
+    implicit val fmts: Formats = Serialization.formats(NoTypeHints)
+    val root = tmpDir("inline-gate")
+    val table = LakeTable.createIfNotExists(spark, root, "t",
+      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 2)
+    table.append(Seq(("r", "p", "c", "l", "x")).toDF("repo", "path", "commit", "lang", "content"))
+    val cur = table.snapshot
+    val files = table.filesOf(cur)
+    assert(files.nonEmpty)
+    // the next version as an earlier format-1 writer laid it out: the same
+    // files listed inline in the snapshot, no manifest refs
+    val inline = JsonMethods.parse(Serialization.write(cur.copy(version = cur.version + 1,
+      formatVersion = 1, manifests = Nil))) merge JObject("files" -> Extraction.decompose(files))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(root, "meta", f"v${cur.version + 1}%016d.json"),
+      JsonMethods.compact(JsonMethods.render(inline)))
+    val e = intercept[IllegalArgumentException](table.snapshotAt(cur.version + 1))
+    assert(e.getMessage.contains("inline"), e.getMessage)
+    // the inline snapshot is the newest version: loading the table refuses
+    // it too, and so does every read of the current snapshot
+    val e2 = intercept[IllegalArgumentException](LakeTable.load(spark, root, "t"))
+    assert(e2.getMessage.contains("inline"), e2.getMessage)
+    intercept[IllegalArgumentException](table.read())
+    // an older snapshot without inline files still reads
+    assert(table.readAt(cur.version).count() == 1)
   }
 
   test("committedAt stamps every commit; versionAt resolves timestamp time travel") {

@@ -24,14 +24,14 @@ class MetaStoreCrashSpec extends SparkSuite {
   private def slice(lo: Long, hi: Long) =
     gen.changeEvents(spark, cfg).filter(col("lsn") >= lo && col("lsn") < hi)
 
-  /** The table every op starts from: 4 buckets, chunked manifests (so
-    * manifest writes are steps too), a CoW base and one MoR delta per
+  /** The table every op starts from: 4 buckets (each commit's manifest
+    * writes are steps too), a CoW base and one MoR delta per
     * bucket (so compact and compactDeltas have work). Built once; every
     * crash point runs on a copy. */
   private lazy val preOp: String = {
     val root = tmpDir("crash-pre")
     val t = LakeTable.createIfNotExists(spark, root, "t", RepoRow.schemaV1, RepoRow.keyColumns,
-      numBuckets = 4, properties = Map("graft.manifest.chunk" -> "always"))
+      numBuckets = 4)
     assert(t.merge(slice(0, 1000), epochId = 0).committed)
     assert(t.deltaAppend(slice(1000, 2000), epochId = 1).committed)
     root

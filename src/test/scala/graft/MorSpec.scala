@@ -32,11 +32,11 @@ class MorSpec extends SparkSuite {
       val r = engine.applyEpoch(all.filter(col("lsn") >= e * 3000 && col("lsn") < (e + 1) * 3000), e)
       assert(r.committed)
     }
-    assert(table.snapshot.files.exists(_.kind == "delta"), "MoR must leave delta files")
+    assert(table.filesOf(table.snapshot).exists(_.kind == "delta"), "MoR must leave delta files")
     golden(table, cfg) // read-time application of deltas
     val compacted = table.compactDeltas()
     assert(compacted > 0)
-    assert(table.snapshot.files.forall(_.kind == "base"))
+    assert(table.filesOf(table.snapshot).forall(_.kind == "base"))
     assert(table.snapshot.epochId == 3, "compaction must not advance the fence")
     golden(table, cfg) // same state after compaction
     // fence still works post-compaction
@@ -51,12 +51,12 @@ class MorSpec extends SparkSuite {
     val all = gen.changeEvents(spark, cfg)
     val mor = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1), mode = MergeMode.MoR)
     (0 until 2).foreach(e => mor.applyEpoch(all.filter(col("lsn") >= e * 3000 && col("lsn") < (e + 1) * 3000), e))
-    assert(table.snapshot.files.exists(_.kind == "delta"))
+    assert(table.filesOf(table.snapshot).exists(_.kind == "delta"))
     val cow = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1), mode = MergeMode.CoW)
     // dense CoW epoch touches every bucket -> all deltas folded
     cow.applyEpoch(all.filter(col("lsn") >= 6000), 2, knownInputCount = Some(3000L))
-    assert(table.snapshot.files.forall(_.kind == "base"),
-      s"deltas must be compacted by the CoW merge: ${table.snapshot.files.map(_.kind).distinct}")
+    assert(table.filesOf(table.snapshot).forall(_.kind == "base"),
+      s"deltas must be compacted by the CoW merge: ${table.filesOf(table.snapshot).map(_.kind).distinct}")
     golden(table, cfg)
   }
 
@@ -104,7 +104,7 @@ class MorSpec extends SparkSuite {
   test("auto-compaction policy bounds MoR read amplification under long epoch runs") {
     import spark.implicits._
     def deltasByBucket(t: LakeTable): Map[Int, Int] =
-      t.snapshot.files.filter(_.kind == "delta").groupBy(_.bucket).view.mapValues(_.size).toMap
+      t.filesOf(t.snapshot).filter(_.kind == "delta").groupBy(_.bucket).view.mapValues(_.size).toMap
     def batch(e: Int) = (0 until 50).map { i =>
       (e * 100L + i, "U", s"r${i % 5}", s"p/$i", s"c$e-$i", "scala", s"content-$e-$i")
     }.toDF("lsn", "op", "repo", "path", "commit", "lang", "content")

@@ -40,7 +40,7 @@ class SkewAndLineageSpec extends SparkSuite {
     assert(hot(0).getAs[String]("content") == s"content-${n - 2}") // last even lsn
     // per-bucket file sizes stay balanced: hot key cannot pin a bucket beyond
     // its single surviving row
-    val byBucket = table.snapshot.files.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum)
+    val byBucket = table.filesOf(table.snapshot).groupBy(_.bucket).view.mapValues(_.map(_.rows).sum)
     val (mn, mx) = (byBucket.values.min, byBucket.values.max)
     assert(mx <= mn * 6 + 10, s"bucket row imbalance: $byBucket")
   }
@@ -61,7 +61,7 @@ class SkewAndLineageSpec extends SparkSuite {
       RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = nb)
     val engine = new ReplayEngine(table, SchemaRegistry.single(RepoRow.schemaV1))
     assert(engine.applyEpoch(ev, 0).committed)
-    val rowsByBucket = table.snapshot.files.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
+    val rowsByBucket = table.filesOf(table.snapshot).groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
     assert(rowsByBucket.size == nb, s"hot repo landed in ${rowsByBucket.size} of $nb buckets")
     assert(rowsByBucket.values.sum == n)
     assert(rowsByBucket.values.max <= 2 * n / nb, s"bucket row imbalance: $rowsByBucket")

@@ -21,11 +21,9 @@ class SpjSpec extends SparkSuite {
   private def withSpj[A](enabled: Boolean = true)(body: => A): A = {
     val saved = Seq(
       "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.graft.spj.enabled").map(k => k -> spark.conf.getOption(k))
+      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.getOption(k))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", enabled.toString)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.graft.spj.enabled", "true")
     try body
     finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -113,7 +111,7 @@ class SpjSpec extends SparkSuite {
       val delta = Seq((3L, "y3", 1L, "U"), (200L, "y200", 2L, "U"))
         .toDF("k", "v", "lsn", "op")
       assert(t.deltaAppend(delta, epochId = 100).committed)
-      assert(t.snapshot.files.exists(_.kind == "delta"), "precondition: deltas outstanding")
+      assert(t.filesOf(t.snapshot).exists(_.kind == "delta"), "precondition: deltas outstanding")
       val p = planOf(s"SELECT * FROM $cat.db.m")
       assert(!p.contains("graft keyed scan"), s"MoR snapshot must not take the keyed scan:\n$p")
       assert(spark.sql(s"SELECT v FROM $cat.db.m WHERE k = 3").collect()
@@ -132,12 +130,6 @@ class SpjSpec extends SparkSuite {
       val p2 = planOf(s"SELECT * FROM $cat2.db.s")
       assert(!p2.contains("graft keyed scan"))
       assert(spark.sql(s"SELECT * FROM $cat2.db.s WHERE extra IS NULL").count() == 10)
-      // disabling the flag forces the V1 path with identical results
-      spark.conf.set("spark.graft.spj.enabled", "false")
-      try {
-        val p3 = planOf(s"SELECT * FROM $cat.db.m")
-        assert(!p3.contains("graft keyed scan"))
-      } finally spark.conf.set("spark.graft.spj.enabled", "true")
     }
   }
 
@@ -248,7 +240,7 @@ class SpjSpec extends SparkSuite {
     val schema = StructType(Seq(
       StructField("k", LongType, nullable = false), StructField("v", StringType)))
     val table = LakeTable.createIfNotExists(spark, tmpDir("spj-refs"), "t",
-      schema, Seq("k"), numBuckets = 128) // >64 -> chunked manifests
+      schema, Seq("k"), numBuckets = 128)
     import spark.implicits._
     table.append((0L until 2000L).map(i => (i, s"v$i")).toDF("k", "v"))
     // a FRESH handle proves eligibility from the refs' schema-version
@@ -256,30 +248,30 @@ class SpjSpec extends SparkSuite {
     // any handle, including ones a future edit might open internally)
     val fresh = LakeTable.load(spark, table.root, "t")
     val snap = fresh.snapshot
-    assert(snap.files.isEmpty && snap.manifests.nonEmpty, "precondition: chunked")
+    assert(snap.manifests.nonEmpty, "precondition: the append wrote manifests")
     val g0 = graft.cdc.lake.manifestReadsGlobal.get()
-    assert(graft.sql.GraftSpj.eligibleByRefs(spark, snap).contains(true))
+    assert(graft.sql.GraftSpj.eligibleByRefs(snap).contains(true))
     assert(graft.cdc.lake.manifestReadsGlobal.get() == g0,
       "refs-only proof must not open manifests")
     // pre-stamp (legacy) refs: unknown -> None, caller sweeps
     val legacy = snap.copy(manifests =
       snap.manifests.map(_.copy(schemaVersionLo = 0, schemaVersionHi = 0)))
-    assert(graft.sql.GraftSpj.eligibleByRefs(spark, legacy).isEmpty)
+    assert(graft.sql.GraftSpj.eligibleByRefs(legacy).isEmpty)
     // a ref provably on an OLD schema version -> Some(false), still no sweep
     val widened = snap.copy(schemaVersion = snap.schemaVersion + 1,
       schemas = snap.schemas + ((snap.schemaVersion + 1).toString -> snap.schema.json))
-    assert(graft.sql.GraftSpj.eligibleByRefs(spark, widened).contains(false))
+    assert(graft.sql.GraftSpj.eligibleByRefs(widened).contains(false))
     // outstanding deltas visible in the ref counts -> Some(false)
     val withDeltas = snap.copy(manifests =
       snap.manifests.updated(0, snap.manifests.head.copy(deltaFiles = 1)))
-    assert(graft.sql.GraftSpj.eligibleByRefs(spark, withDeltas).contains(false))
+    assert(graft.sql.GraftSpj.eligibleByRefs(withDeltas).contains(false))
     // post-evolution appends stamp lo=oldSv, hi=sv: STILL provable (false)
     // from refs — without it every scan build would sweep until compaction
     val mixed = snap.copy(schemaVersion = snap.schemaVersion + 1,
       schemas = snap.schemas + ((snap.schemaVersion + 1).toString -> snap.schema.json),
       manifests = snap.manifests.map(m =>
         m.copy(schemaVersionLo = snap.schemaVersion, schemaVersionHi = snap.schemaVersion + 1)))
-    assert(graft.sql.GraftSpj.eligibleByRefs(spark, mixed).contains(false))
+    assert(graft.sql.GraftSpj.eligibleByRefs(mixed).contains(false))
 
     // INTEGRATED pin through the catalog: count(*) reads ZERO manifests
     // (refs-only aggregate) and a point lookup reads ONLY the pruned
