@@ -13,6 +13,10 @@ without a bound. For mor-read-mix the table is printed again over only the
 runs at the most common `attempted` (a run that fits a second pass reads
 faster on a warm JVM, so runs at different `attempted` do not compare).
 
+The gated metrics, their bounds and the run length (`run_seconds`) are read
+from the BENCHMARK.json in the current directory, so every run lasts as long
+as the benchmark's own runs.
+
 Usage, from the root of the change checkout:
 
     git clone -q <repo> /path/to/parent && git -C /path/to/parent checkout <parent-commit>
@@ -148,20 +152,17 @@ def main():
     ap.add_argument("--change", help="checkout of the change")
     ap.add_argument("--workload", action="append", help="workload to run (repeatable)")
     ap.add_argument("--seeds", help="inclusive seed range, e.g. 1201-1210")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="measured seconds per run (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--out", help="append every run to this JSONL file")
     ap.add_argument("--report", help="only summarize the runs in this JSONL file")
-    ap.add_argument("--benchmark", default="BENCHMARK.json", help="gated metrics and bounds")
     a = ap.parse_args()
-    bench = json.load(open(a.benchmark))
+    bench = json.load(open("BENCHMARK.json"))
     if a.report:
         records = [json.loads(l) for l in open(a.report) if l.strip()]
         sys.exit(0 if report(records, bench) else 1)
     if not (a.parent and a.change and a.workload and a.seeds):
         ap.error("--parent, --change, --workload and --seeds are required (or --report)")
-    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     records = []
     for w in a.workload:
         for i, seed in enumerate(seed_range(a.seeds)):

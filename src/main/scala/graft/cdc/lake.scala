@@ -309,8 +309,8 @@ object lake {
       // unknown field, so reading on would silently lose those files
       require((json \ "files") match { case JArray(fs) => fs.isEmpty; case _ => true },
         s"snapshot v$v of '$name' lists its data files inline, a layout this reader no " +
-          "longer reads — refusing to read it as a table without those files; rewrite the " +
-          "table with a graft version that still reads inline file lists")
+          "longer reads; to migrate, with the previous graft release set table property " +
+          "graft.manifest.chunk=always, then run cluster (a rewrite of every bucket) and vacuum")
       val s = json.extract[Snapshot]
       require(s.formatVersion <= SupportedFormatVersion,
         s"snapshot v$v of '$name' has formatVersion ${s.formatVersion}, but this reader " +
