@@ -484,16 +484,10 @@ object lake {
     def readBuckets(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame =
       readFiles(snap, filesOfBuckets(snap, buckets))
 
-    /** Predicate-planned read: the table rows of the files [[planScan]]
-      * keeps. Every predicate is re-applied row-level above this scan (the
-      * V1 relation keeps `unhandledFilters` = all). */
-    def readWhere(snap: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
-      readFiles(snap, planScan(snap, filters))
-
-    /** The one scan planner, of the V1 relation ([[readWhere]]) and the
-      * native keyed scan alike: the scan's file list is pruned BEFORE any
-      * parquet is opened (and, the scan being planned from the manifest,
-      * without listing any directory or probing any path), on two levels —
+    /** The one scan planner, of the SQL table scan (`GraftKeyedScan`): the
+      * scan's file list is pruned BEFORE any parquet is opened (and, the
+      * scan being planned from the manifest, without listing any directory
+      * or probing any path), on two levels —
       *
       *  1. '''Bucket pruning''': a conjunction that pins every key column to
       *     literals (point lookup / IN list) resolves, driver-side, to the
@@ -510,29 +504,34 @@ object lake {
       *     one bucket.)
       *
       * Both levels are pure I/O elision: every caller re-applies the
-      * predicates above the scan. A pushed `limit` (the keyed scan's, on a
-      * delta-free snapshot) keeps only a file prefix whose row counts cover
-      * it, and only with no filters: a filtered file may yield fewer rows
-      * than its count. [[skipping.ScanStats.last]] records the planned
-      * buckets and the kept files. */
+      * predicates above the scan. A pushed `limit` keeps only a prefix of
+      * the delta-free buckets' files whose row counts cover it, and the
+      * delta-bearing buckets whole (their rows are counted only by the
+      * fold) or, once the prefix covers it, not at all; and only with no
+      * filters: a filtered file may yield fewer rows than its count.
+      * Returns the kept files and the planned buckets;
+      * [[skipping.ScanStats.last]] records the planned buckets and the kept
+      * files. */
     def planScan(snap: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter],
-        limit: Option[Int] = None): Seq[DataFile] = {
+        limit: Option[Int] = None): (Seq[DataFile], Seq[Int]) = {
       val buckets = skipping.bucketsForKeys(filters, snap.keyColumns, snap.schema, snap.numBuckets)
       val wanted = filesOfBuckets(snap, buckets)
       val deltaBuckets = wanted.filter(_.kind == "delta").map(_.bucket).toSet
       val matched = wanted.filter { f =>
-        f.kind == "delta" || deltaBuckets(f.bucket) || snap.statsOf(f).forall(s =>
+        deltaBuckets(f.bucket) || snap.statsOf(f).forall(s =>
           filters.forall(flt => skipping.mayMatch(s, f.rows, snap.schema, flt)))
       }
       val kept = limit match {
         case Some(n) if filters.isEmpty =>
+          val (folded, plain) = matched.partition(f => deltaBuckets(f.bucket))
           var need = n.toLong
-          matched.takeWhile { f => val take = need > 0; need -= f.rows; take }
+          val prefix = plain.takeWhile { f => val take = need > 0; need -= f.rows; take }
+          if (need > 0) prefix ++ folded else prefix
         case _ => matched
       }
-      skipping.ScanStats.last.set(Some((
-        buckets.map(_.size).getOrElse(snap.numBuckets), snap.numBuckets, kept.size, snap.numFiles)))
-      kept
+      val planned = buckets.fold(0 until snap.numBuckets: Seq[Int])(_.toSeq.sorted)
+      skipping.ScanStats.last.set(Some((planned.size, snap.numBuckets, kept.size, snap.numFiles)))
+      (kept, planned)
     }
 
     /** The table rows `wanted` hold: base rows as stored, deltas applied. */

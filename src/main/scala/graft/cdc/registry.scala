@@ -53,9 +53,9 @@ object SchemaRegistry {
   /** The columns of `target` projected from rows shaped like `source`: cast
     * the columns `source` carries, null-fill the ones added since (the
     * projection mirror of [[SchemaRegistry.conform]]'s additive rules). The
-    * lake readers conform each file's payload with it, the replay engine
-    * each batch's. */
-  private[cdc] def conformedColumns(target: StructType, source: StructType): Seq[Column] = {
+    * lake readers and the SQL scan conform each file's payload with it, the
+    * replay engine each batch's. */
+  private[graft] def conformedColumns(target: StructType, source: StructType): Seq[Column] = {
     val have = source.fieldNames.toSet
     target.fields.toSeq.map { f =>
       if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)

@@ -384,7 +384,9 @@ object skipping {
 
   /** Observability for tests/benchmarks: (bucketsRead, bucketsTotal,
     * filesRead, filesTotal) of the last stats-pruned scan planned by
-    * [[lake.LakeTable.readWhere]]. */
+    * [[lake.LakeTable.planScan]]. Each SQL scan also reports these numbers
+    * as its own plan metrics (`GraftKeyedScan`); this global stays for
+    * callers that read it after a statement. */
   object ScanStats {
     val last = new java.util.concurrent.atomic.AtomicReference[Option[(Int, Int, Int, Int)]](None)
     /** (filesRead, filesTotal) of the last filter-pruned change-feed scan

@@ -740,7 +740,7 @@ object cdcq {
           FROM $cat.db.repo_files WHERE repo = 'r7' AND path = 'p/7'""")
     point.collect()
     val (b, bTot, f, fTot) = skipping.ScanStats.last.get()
-      .getOrElse(sys.error("the SQL scan must plan through readWhere"))
+      .getOrElse(sys.error("the SQL scan must plan through LakeTable.planScan"))
     require(b == 1 && bTot == 16,
       s"point lookup must plan exactly 1 of 16 buckets, planned $b/$bTot ($f/$fTot files)")
     val multi = spark.sql(

@@ -34,12 +34,12 @@ import graft.cdc.lake
   * root per table (reference analog: the 3-part `catalog.schema.table`
   * naming of src/models/table.py:16-93 re-targeted at our snapshot format).
   *
-  * The read/write paths delegate to the V1 connector bridges
-  * ([[org.apache.spark.sql.connector.read.V1Scan]] /
-  * [[org.apache.spark.sql.connector.write.V1Write]]): the lake table already
-  * produces/consumes DataFrames whose plans Catalyst optimizes end-to-end
-  * (manifest-pruned parquet scans under the hood), so re-implementing a
-  * partition-reader layer would duplicate what `LakeTable.read` compiles to.
+  * Table reads plan one native DSv2 scan per snapshot ([[GraftKeyedScan]]):
+  * bucket partitions that report the hash layout, with MoR deltas folded
+  * and old-schema files conformed inside each bucket's task. Writes
+  * delegate to the V1 connector bridge
+  * ([[org.apache.spark.sql.connector.write.V1Write]]): the lake table
+  * already consumes DataFrames whose plans Catalyst optimizes end-to-end.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCatalog
     with FunctionCatalog {
@@ -51,17 +51,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     warehouse = Option(options.get("warehouse")).getOrElse(
       throw new IllegalArgumentException(
         s"set spark.sql.catalog.$name.warehouse to the lake warehouse directory"))
-    // register the post-pushdown stats rule (GraftStats.scala): the "User
-    // Provided Optimizers" batch is the only logical extension point that
-    // runs AFTER V2ScanRelationPushDown has built the V1ScanWrapper the
-    // rule rewrites; every SparkSessionExtensions optimizer hook runs
-    // before it. Idempotent; stats only matter for catalog-resolved tables,
-    // so first catalog use is the natural registration moment.
-    val session = SparkSession.active
-    if (!session.experimental.extraOptimizations.contains(GraftStatsRule)) {
-      session.experimental.extraOptimizations =
-        session.experimental.extraOptimizations :+ GraftStatsRule
-    }
   }
 
   override def name(): String = catalogName
@@ -530,21 +519,19 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
       TableCapability.OVERWRITE_BY_FILTER, TableCapability.TRUNCATE)
 
-  /** Reads surface as a V1 relation with REAL DSv2 pushdown: through the
-    * V1ScanWrapper bridge Spark only ever drives plain `TableScan.buildScan()`
-    * (V1 PrunedFilteredScan is never consulted — verified against the 4.1.2
-    * DataSourceV2Strategy bytecode), so predicates and the projection must be
-    * received on the ScanBuilder via SupportsPushDownFilters /
-    * SupportsPushDownRequiredColumns. The pushed filters then do three jobs,
-    * outermost first: (1) key-equality bucket pruning + file-level bounds
-    * skipping in [[graft.cdc.lake.LakeTable.readWhere]] — files that can't
-    * match are never opened; (2) row-level filtering inside the lake plan,
-    * which Catalyst pushes into the surviving parquet scans
-    * (PushedFilters/ReadSchema); (3) every filter is ALSO returned as
-    * post-scan, so Spark re-applies them above us and partial translation is
-    * always safe. A SQL `SELECT two_cols FROM t WHERE k = 'x'` against a
-    * 100 TB table plans one bucket's surviving files and reads two columns
-    * of their matching row groups, not the world. */
+  /** Reads plan the one keyed scan ([[GraftKeyedScan]]) with DSv2
+    * pushdown: predicates and the projection arrive on the ScanBuilder via
+    * SupportsPushDownFilters / SupportsPushDownRequiredColumns. The pushed
+    * filters then do three jobs, outermost first: (1) key-equality bucket
+    * pruning + file-level bounds skipping in
+    * [[graft.cdc.lake.LakeTable.planScan]] — files that can't match are
+    * never opened; (2) row-group elision inside the parquet reader (only
+    * key-column filters in a bucket that folds MoR deltas); (3) every
+    * filter is ALSO returned as post-scan, so Spark re-applies them above
+    * us and partial translation is always safe. A SQL
+    * `SELECT two_cols FROM t WHERE k = 'x'` against a 100 TB table plans one
+    * bucket's surviving files and reads two columns of their matching row
+    * groups, not the world. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder
       with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -583,14 +570,8 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
         * there is nothing to win. Guarded on no pushed filters (Spark
         * won't offer aggregates past this scan's always-kept residual
         * filters anyway — belt and braces). */
-      // manifest-SWEEP-FREE planning when possible: SPJ eligibility proves
-      // itself from the manifest REFS' schema-version stamps (then only the
-      // PRUNED buckets' manifests are ever read, by the scan itself); a
-      // sweep happens at most once per scan build, only for pre-stamp refs,
-      // shared with aggregate answering
+      // resolved only when an aggregate asks: count(*) answers from the refs
       private lazy val allFiles: Seq[graft.cdc.lake.DataFile] = table.filesOf(snap)
-      private lazy val spjEligible: Boolean =
-        GraftSpj.eligibleByRefs(snap).getOrElse(GraftSpj.eligible(snap, allFiles))
       // Spark probes supportCompletePushDown and pushAggregation with the
       // same Aggregation instance — memoize by identity, not equality
       // (java records compare array components by reference anyway)
@@ -627,45 +608,9 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
               s"graft manifest-answered aggregate ${table.name} v${snap.version}"
           }
         }
-        // Native keyed-scan path (storage-partitioned reads, GraftSpj):
-        // when every live file is a base file on the current schema
-        // version, read the buckets directly and REPORT the bucket layout
-        // as KeyGroupedPartitioning — key-aligned joins/aggregations then
-        // plan without an Exchange. MoR deltas or old-schema files need
-        // the fused merge / conform logic, which lives on the V1 relation
-        // path below — the general fallback, bit-identical results.
-        if (spjEligible)
-          return new GraftKeyedScan(table, snap, required, pushed.toSeq, limit)
-        new V1Scan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-          private val scanFilters = pushed
-          private val scanSchema = required
-          override def readSchema(): StructType = scanSchema
-          override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T =
-            new GraftV1Relation(ctx, scanSchema, () => {
-              val base = table.readWhere(snap, scanFilters.toSeq)
-              val filtered = scanFilters
-                .flatMap(GraftV1Relation.translate).foldLeft(base)(_ filter _)
-              if (scanSchema.isEmpty) filtered.select()
-              else filtered.select(scanSchema.fieldNames.toIndexedSeq
-                .map(org.apache.spark.sql.functions.col): _*)
-            }).asInstanceOf[T]
-
-          override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-            GraftStats.of(snap)
-        }
+        new GraftKeyedScan(table, snap, required, pushed.toSeq, limit)
       }
     }
-
-  /** V1 relation over one pre-planned lake DataFrame (skipping, row filters
-    * and projection already applied by the scan builder — through the
-    * V1ScanWrapper bridge only plain `buildScan()` is ever driven). */
-  private class GraftV1Relation(ctx: SQLContext, tableSchema: StructType,
-      df: () => org.apache.spark.sql.DataFrame)
-    extends BaseRelation with TableScan {
-    override def sqlContext: SQLContext = ctx
-    override def schema: StructType = tableSchema
-    override def buildScan(): RDD[Row] = df().rdd
-  }
 
   /** SupportsOverwrite (not just truncate) because the advertised
     * OVERWRITE_BY_FILTER capability routes filtered overwrites here: a
@@ -697,8 +642,8 @@ class GraftTable(val table: lake.LakeTable, val pinnedVersion: Option[Long])
 }
 
 /** Best-effort source-filter → Column translation for row-level application
-  * inside the lake plan (reaches the parquet readers as PushedFilters),
-  * shared by the table and change-feed scans. Untranslated filters are
+  * inside the lake plan (reaches the parquet readers as PushedFilters) of
+  * the change-feed scan. Untranslated filters are
   * harmless — every pushed filter is also returned post-scan, so Spark
   * re-applies it above. */
 private[sql] object GraftV1Relation {

@@ -72,13 +72,6 @@ import org.apache.spark.sql.graftbridge.Bridge
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(_ => GraftMergeRewrite)
-    // NOTE: the stats rule (GraftStats.scala) is NOT injectable here — every
-    // SparkSessionExtensions optimizer hook (incl. injectPreCBORule, which
-    // despite the name runs in a batch BEFORE "Early Filter and Projection
-    // Push-Down") precedes V2ScanRelationPushDown, i.e. runs before the
-    // V1ScanWrapper it must rewrite exists. GraftCatalog.initialize registers
-    // it via experimental.extraOptimizations ("User Provided Optimizers",
-    // the one post-pushdown logical batch).
   }
 }
 

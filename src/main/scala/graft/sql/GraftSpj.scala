@@ -2,20 +2,26 @@ package graft.sql
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Murmur3Hash, Pmod}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression, GenericInternalRow, Murmur3Hash, Pmod, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.Expressions
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportPartitioning, SupportsReportStatistics}
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.cdc.lake
 
-/** Storage-partitioned reads: the lake's hash-bucket layout REPORTED to
+/** The one SQL table scan: the lake's hash-bucket layout REPORTED to
   * Catalyst, so SQL-surface joins and aggregations on the primary key
   * consume the table without a shuffle — the scan-side analog of what the
   * engine-API merge path already exploits by construction.
@@ -31,48 +37,22 @@ import graft.cdc.lake
   * joining two graft tables on their (equal-layout) keys or grouping by
   * the full key plans ZERO Exchange operators: at 100 TB that deletes the
   * single largest cost of any key-aligned star join or per-key rollup.
-  * Partitions are emitted for EVERY bucket (empty ones read nothing) so
-  * two tables' partition-key sets always align without push-down value
-  * padding.
+  * An unpruned scan emits a partition for EVERY bucket (empty ones read
+  * nothing), so two tables' partition-key sets align without push-down
+  * value padding; a key-pruned scan emits only its buckets, so a point
+  * read runs one task. Keyless tables report no partitioning.
   *
   * Files are read with Spark's own parquet reader (vectorized, row-group
-  * filter pushdown — built once on the driver via
-  * [[Bridge.parquetReader]]), planned by the same
-  * [[lake.LakeTable.planScan]] as the V1 path. Eligibility is decided per
-  * SNAPSHOT, conservatively: every live file must be a base file on the
-  * CURRENT schema version (outstanding MoR deltas need the fused max-LSN
-  * merge, old-schema files need conform-on-read — both stay on the V1
-  * relation path, which remains the general fallback). The declared
+  * filter pushdown — built once per file shape on the driver via
+  * [[Bridge.parquetReader]]), planned by [[lake.LakeTable.planScan]]. Every
+  * snapshot takes this scan: a bucket holding MoR deltas is folded inside
+  * its task ([[GraftBucketReaderFactory]]), and a file on an older schema
+  * version is read with its own schema and conformed per row. The declared
   * partitioning is immutable per scan because the snapshot is pinned
   * (MVCC): a concurrent rebucket produces a NEW snapshot, never a
   * mid-scan layout change.
   */
 object GraftSpj {
-
-  /** Whether this snapshot's reads can take the native keyed-scan path. */
-  def eligible(snap: lake.Snapshot, files: Seq[lake.DataFile]): Boolean =
-    snap.keyColumns.nonEmpty &&
-      files.forall(f => f.kind == "base" && f.schemaVersion == snap.schemaVersion)
-
-  /** Refs-only eligibility proof: decide WITHOUT resolving any per-bucket
-    * manifest when every ref stamps its schema-version range (10M-file
-    * envelope: scan-build planning must not sweep the manifests just to
-    * pick a scan path; only the PRUNED buckets' manifests should ever be
-    * read). Some(x) = provable from the refs; None = a pre-field ref
-    * (version range 0 = unknown) forces the caller's sweep. */
-  def eligibleByRefs(snap: lake.Snapshot): Option[Boolean] = {
-    if (snap.keyColumns.isEmpty || snap.anyDeltas) return Some(false)
-    if (snap.manifests.forall(m => m.numFiles == 0 ||
-        (m.schemaVersionLo == snap.schemaVersion && m.schemaVersionHi == snap.schemaVersion)))
-      Some(true)
-    else if (snap.manifests.exists(m => m.numFiles > 0 && m.schemaVersionLo > 0 &&
-        (m.schemaVersionLo != snap.schemaVersion || m.schemaVersionHi != snap.schemaVersion)))
-      // provably holds an old-schema file — lo below current counts too
-      // (post-evolution appends stamp lo=oldSv, hi=sv on every bucket;
-      // without this branch such tables would sweep on every scan build)
-      Some(false)
-    else None // unknown-range refs: resolve by sweeping
-  }
 
   /** The transform this table's scans report; both join sides must agree on
     * (canonicalName, numBuckets) to co-partition.
@@ -171,43 +151,111 @@ private[sql] class GraftBoundNamedBucket(numBuckets: Int, argTypes: Array[DataTy
     expr.eval(input).asInstanceOf[Int]
 }
 
-/** One bucket of one snapshot: the partition key is the bucket id. Files
-  * are (absolutePath, bytes) — resolved driver-side so executors never see
-  * manifest logic. */
-case class GraftBucketPartition(bucket: Int, files: Seq[(String, Long)])
+/** One bucket of one snapshot: the partition key is the bucket id. `files`
+  * are the bucket's planned manifest entries without their bounds, resolved
+  * driver-side so executors never see manifest logic. */
+case class GraftBucketPartition(bucket: Int, files: Seq[lake.DataFile])
   extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](bucket))
+  /** Whether the bucket holds MoR deltas, which its reader folds. */
+  def folds: Boolean = files.exists(_.kind == "delta")
 }
 
-/** Executor side: drive Spark's parquet reader over the partition's files,
-  * unwrapping the vectorized reader's type-erased ColumnarBatch elements. */
-class GraftBucketReaderFactory(
-    readerFn: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow])
-  extends PartitionReaderFactory {
+/** How one file is read: its schema version and whether its bucket folds.
+  * A folding bucket's deltas and base files share one reader per schema
+  * version: each reads the system columns `lsn, op, _lsn`, a file lacking
+  * one (a delta stores `lsn, op`, a row-LSN base file `_lsn`) as null. */
+private[sql] case class FileShape(schemaVersion: Int, folds: Boolean)
+
+/** A shape's parquet reader and the bound projection that conforms its
+  * rows; None when the reader's rows already are the scan's. */
+private[sql] case class ShapeReader(read: PartitionedFile => Iterator[InternalRow],
+    conform: Option[Seq[Expression]])
+
+/** Executor side: read each file with its shape's reader, unwrapping the
+  * vectorized reader's type-erased ColumnarBatch elements.
+  *
+  * A bucket with MoR deltas is folded by max LSN per key, the read-side form
+  * of the merge's MaxByRow. Its rows are laid out `(lsn, op, scan
+  * columns..., key columns the scan lacks...)`. The delta rows go into a map
+  * from key to the newest (lsn, op, row); the base rows stream past it, and
+  * one survives unless a delta with a higher LSN names its key; last come the
+  * surviving delta upserts. Equal LSNs carry identical payloads (the
+  * LSN-uniqueness contract), so a tie may go either way. Two base rows of one
+  * key (an `append` of a present key) both survive, as in a delta-free
+  * bucket. The map holds one bucket's deltas: the hash-build side the merge
+  * already assumes. */
+class GraftBucketReaderFactory(root: String, readers: Map[FileShape, ShapeReader],
+    keyRefs: Seq[Expression], outRefs: Seq[Expression]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftBucketPartition]
-    new PartitionReader[InternalRow] {
-      private val rows: Iterator[InternalRow] = p.files.iterator.flatMap { case (path, bytes) =>
-        readerFn(Bridge.partitionedFile(path, bytes)).flatMap { elem =>
-          (elem: Any) match {
-            case b: ColumnarBatch => b.rowIterator().asScala
-            case r: InternalRow => Iterator.single(r)
-          }
+    // one conform projection per shape and task, not per file
+    val conforms = scala.collection.mutable.HashMap.empty[FileShape, Option[UnsafeProjection]]
+    def read(f: lake.DataFile): Iterator[InternalRow] = {
+      val shape = FileShape(f.schemaVersion, p.folds)
+      val reader = readers(shape)
+      val rows = reader.read(Bridge.partitionedFile(s"$root/${f.path}", f.bytes)).flatMap { elem =>
+        (elem: Any) match {
+          case b: ColumnarBatch => b.rowIterator().asScala
+          case r: InternalRow => Iterator.single(r)
         }
       }
+      conforms.getOrElseUpdate(shape, reader.conform.map(UnsafeProjection.create)).fold(rows)(rows.map(_))
+    }
+    new PartitionReader[InternalRow] {
+      private val rows = if (p.folds) fold(p.files, read) else p.files.iterator.flatMap(read)
       private var current: InternalRow = _
       override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
   }
+
+  private def fold(files: Seq[lake.DataFile], read: lake.DataFile => Iterator[InternalRow]): Iterator[InternalRow] = {
+    val keyOf = UnsafeProjection.create(keyRefs)
+    val newest = new java.util.HashMap[UnsafeRow, InternalRow]()
+    val (deltas, bases) = files.partition(_.kind == "delta")
+    deltas.iterator.flatMap(read).foreach { r =>
+      val k = keyOf(r)
+      val prev = newest.get(k)
+      if (prev == null || prev.getLong(0) < r.getLong(0)) newest.put(k.copy(), r.copy())
+    }
+    val survivors = bases.iterator.flatMap(read).filter { r =>
+      val k = keyOf(r)
+      val d = newest.get(k)
+      d == null || (d.getLong(0) <= r.getLong(0) && { newest.remove(k); true })
+    }
+    val upserts = newest.values.iterator.asScala.filterNot(d => d.getUTF8String(1) == GraftBucketReaderFactory.Delete)
+    val out = UnsafeProjection.create(outRefs)
+    (survivors ++ upserts).map(out)
+  }
 }
 
-/** The native keyed scan: bucket-pruned + stats-skipped file planning (the
-  * same I/O elision as the V1 path), KeyGroupedPartitioning reported, all
-  * filters returned post-scan (Spark re-applies them above — pushdown here
-  * is row-group elision inside the parquet reader, never row logic). */
+private object GraftBucketReaderFactory {
+  val Delete: UTF8String = UTF8String.fromString("D")
+}
+
+/** The scan's pruning as Spark SQL metrics: each scan reports its own plan
+  * on its own plan node ([[GraftKeyedScan.reportDriverMetrics]]). */
+sealed abstract class GraftScanMetric(metricName: String, desc: String) extends CustomSumMetric {
+  override def name(): String = metricName
+  override def description(): String = desc
+}
+class BucketsPlannedMetric extends GraftScanMetric("bucketsPlanned", "buckets planned")
+class BucketsTotalMetric extends GraftScanMetric("bucketsTotal", "buckets total")
+class FilesPlannedMetric extends GraftScanMetric("filesPlanned", "files planned")
+class FilesTotalMetric extends GraftScanMetric("filesTotal", "files total")
+class DeltaFilesFoldedMetric extends GraftScanMetric("deltaFilesFolded", "delta files folded")
+
+/** The one SQL table scan: bucket-pruned + stats-skipped file planning,
+  * KeyGroupedPartitioning reported, all filters returned post-scan (Spark
+  * re-applies them above). Below the fold only key-column predicates may
+  * act, on files, row groups or rows: a newer delta row that fails a
+  * non-key predicate must still shadow an older base row that passes it,
+  * and a tombstone must never be skipped. So a folding bucket's files get
+  * the key-column filters only, and a file on an older schema only the
+  * filters on columns whose type it shares. */
 class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
     scanSchema: StructType, scanFilters: Seq[Filter], pushedLimit: Option[Int] = None)
   extends Scan with Batch with SupportsReportPartitioning with SupportsReportStatistics
@@ -227,6 +275,7 @@ class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
     * filters are deliberately NOT handed to the parquet reader (the
     * reader factory may already be built when they arrive). */
   @volatile private var runtimeFilters: Seq[Filter] = Nil
+  @volatile private var planMetrics: Array[CustomTaskMetric] = Array.empty
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     // only columns of the PRUNED read schema: Spark resolves these against
@@ -243,25 +292,94 @@ class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
     s"graft keyed scan ${table.name} v${snap.version} (${snap.numBuckets} buckets)"
 
   override def outputPartitioning(): Partitioning =
-    new KeyGroupedPartitioning(Array(GraftSpj.bucketTransform(snap)), snap.numBuckets)
+    if (snap.keyColumns.isEmpty) new UnknownPartitioning(snap.numBuckets)
+    else new KeyGroupedPartitioning(Array(GraftSpj.bucketTransform(snap)), snap.numBuckets)
+
+  /** The plan under the static filters: (files, planned buckets). The
+    * partitions are its buckets, the reader factory is built from its file
+    * shapes. */
+  private lazy val planned = table.planScan(snap, scanFilters, pushedLimit)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // static and runtime filters prune alike; any filter disables the
-    // pushed LIMIT's file prefix
-    val byBucket = table.planScan(snap, scanFilters ++ runtimeFilters, pushedLimit).groupBy(_.bucket)
-    // every bucket gets a partition (possibly empty): both sides of a
-    // storage-partitioned join then carry identical key sets 0..NB-1
-    (0 until snap.numBuckets).map { b =>
-      GraftBucketPartition(b, byBucket.getOrElse(b, Nil)
-        .map(f => (s"${table.root}/${f.path}", f.bytes)))
+    // runtime filters prune within the static plan, so its file shapes
+    // cover every re-plan (a pushed LIMIT never meets a runtime filter:
+    // dynamic pruning does not see through a Limit)
+    val (files, buckets) =
+      if (runtimeFilters.isEmpty || pushedLimit.isDefined) planned
+      else {
+        val static = planned._1.map(_.path).toSet
+        val (fs, bs) = table.planScan(snap, scanFilters ++ runtimeFilters, pushedLimit)
+        (fs.filter(f => static(f.path)), bs)
+      }
+    planMetrics = Array(
+      "bucketsPlanned" -> buckets.size.toLong, "bucketsTotal" -> snap.numBuckets.toLong,
+      "filesPlanned" -> files.size.toLong, "filesTotal" -> snap.numFiles.toLong,
+      "deltaFilesFolded" -> files.count(_.kind == "delta").toLong).map { case (n, v) =>
+      new CustomTaskMetric { override def name(): String = n; override def value(): Long = v }
+    }
+    // a partition per statically planned bucket, possibly empty: an
+    // unpruned scan covers 0..NB-1, so both sides of a storage-partitioned
+    // join carry identical key sets; a key-pruned scan covers only its
+    // buckets (Spark pads the other join side's extra keys with empty
+    // partitions), and a runtime filter only empties partitions
+    val byBucket = files.groupBy(_.bucket)
+    planned._2.map { b =>
+      GraftBucketPartition(b, byBucket.getOrElse(b, Nil).map(_.copy(stats = None)))
     }.toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftBucketReaderFactory(
-      Bridge.parquetReader(table.spark, snap.schema, scanSchema, scanFilters))
+  override def supportedCustomMetrics(): Array[CustomMetric] = Array(new BucketsPlannedMetric,
+    new BucketsTotalMetric, new FilesPlannedMetric, new FilesTotalMetric, new DeltaFilesFoldedMetric)
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = planMetrics
 
-  /** Same manifest-level statistics as the V1 scan (broadcast planning). */
+  /** A folding bucket's columns: the scan's, then the keys it lacks. */
+  private val foldSchema = StructType(scanSchema.fields ++
+    snap.keyColumns.filterNot(scanSchema.fieldNames.contains).map(snap.schema(_)))
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val folding = planned._1.filter(_.kind == "delta").map(_.bucket).toSet
+    val shapes = planned._1.map(f => FileShape(f.schemaVersion, folding(f.bucket))).distinct
+    val keyRefs = snap.keyColumns.map { k =>
+      BoundReference(2 + foldSchema.fieldIndex(k), snap.schema(k).dataType, nullable = true)
+    }
+    val outRefs = scanSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(2 + i, f.dataType, nullable = true)
+    }
+    new GraftBucketReaderFactory(table.root, shapes.map(s => s -> shapeReader(s)).toMap, keyRefs, outRefs)
+  }
+
+  /** One reader per file shape. A file reads the target columns it has —
+    * at the scan's (possibly nested-pruned) type where the column's type
+    * never changed — and is conformed to the target by the rule of
+    * [[graft.cdc.SchemaRegistry.conformedColumns]]; a folding bucket's rows
+    * lead with their (lsn, op), a base row's LSN its stored `_lsn` or -1. */
+  private def shapeReader(s: FileShape): ShapeReader = {
+    val target = if (s.folds) foldSchema else scanSchema
+    val fileSchema = snap.schemaOf(s.schemaVersion)
+    val same = fileSchema.fields.filter(f =>
+      snap.schema.fieldNames.contains(f.name) && snap.schema(f.name).dataType == f.dataType).map(_.name).toSet
+    val read = StructType(target.fields.flatMap(t =>
+      fileSchema.find(_.name == t.name).map(f => if (same(f.name)) t else f)))
+    val meta = if (s.folds) Seq(StructField("lsn", LongType), StructField("op", StringType),
+      StructField("_lsn", LongType)) else Nil
+    val required = StructType(meta ++ read.fields)
+    val lsnOp = if (s.folds) Seq(coalesce(col("lsn"), col("_lsn"), lit(-1L)), col("op")) else Nil
+    val pushable = if (s.folds) snap.keyColumns.toSet else same
+    val fn = Bridge.parquetReader(table.spark, StructType(meta ++ fileSchema.fields), required,
+      scanFilters.filter(_.references.forall(pushable)))
+    if (!s.folds && s.schemaVersion == snap.schemaVersion) ShapeReader(fn, None)
+    else ShapeReader(fn, Some(bind(required, lsnOp ++ graft.cdc.SchemaRegistry.conformedColumns(target, read))))
+  }
+
+  /** `cols` over rows shaped `input`, resolved by the analyzer (names, cast
+    * time zones) and bound to ordinals. */
+  private def bind(input: StructType, cols: Seq[Column]): Seq[Expression] = {
+    val rel = LocalRelation(input)
+    Bridge.ofRows(table.spark, rel).select(cols: _*).queryExecution.analyzed.expressions
+      .map(e => BindReferences.bindReference(e, rel.output))
+  }
+
+  /** Manifest-level statistics (broadcast planning). */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     GraftStats.of(snap)
 }

@@ -95,7 +95,7 @@ class AggPushSpec extends SparkSuite {
     assert(rowOf(q) == "[99,500]")
   }
 
-  test("count(*) on a chunked table answers from the refs, zero manifest reads") {
+  test("count(*) on a 128-bucket table answers from the refs, zero manifest reads") {
     import graft.cdc.lake._
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(

@@ -624,7 +624,7 @@ class GraftSqlSpec extends SparkSuite {
     assert(spark.sql(s"SELECT v FROM $cat.db.t2").collect()(0).getString(0) == "2")
   }
 
-  test("t.files metadata table lists the live inventory, inline and chunked modes") {
+  test("t.files metadata table lists the live inventory of every bucket manifest") {
     val cat = freshCatalog("fil")
     spark.sql(s"""CREATE TABLE $cat.db.t (k BIGINT, v STRING)
                   TBLPROPERTIES ('primary_key'='k', 'buckets'='4')""")
@@ -791,13 +791,12 @@ class GraftSqlSpec extends SparkSuite {
     spark.sql(s"""CREATE TABLE $cat.db.t (repo STRING, path STRING, content STRING)
                   TBLPROPERTIES ('primary_key'='repo,path', 'buckets'='4')""")
     spark.sql(s"INSERT INTO $cat.db.t VALUES ('r1','a','x1'), ('r1','b','x2'), ('r2','c','x3')")
-    // correctness through the pruned+filtered V1 scan
+    // correctness through the pruned+filtered keyed scan
     val got = spark.sql(s"SELECT path FROM $cat.db.t WHERE repo = 'r1' ORDER BY path")
       .collect().map(_.getString(0)).toSeq
     assert(got == Seq("a", "b"))
-    // the mechanism: the same projection+predicate on the lake DataFrame
-    // (exactly what GraftV1Relation.buildScan builds) reaches the parquet
-    // scan as PushedFilters + a pruned ReadSchema
+    // the same projection+predicate on the lake DataFrame API reaches its
+    // parquet scan as PushedFilters + a pruned ReadSchema
     val root = spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/db/t"
     val inner = LakeTable.load(spark, root, "t").read()
       .filter(col("repo") === "r1").select("path")

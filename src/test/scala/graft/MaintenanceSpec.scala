@@ -75,7 +75,7 @@ class MaintenanceSpec extends SparkSuite {
     assert(after.epochId == before.epochId, "compaction must not advance the epoch fence")
   }
 
-  test("chunked manifests: full lifecycle round-trips and vacuum GCs manifest files") {
+  test("per-bucket manifests: full lifecycle round-trips and vacuum GCs manifest files") {
     // a small bucket count keeps the whole lifecycle cheap to exercise:
     // CoW epochs, MoR deltas, changesSince, compaction, time travel, reload
     // from disk, vacuum incl. manifest-file GC
@@ -155,9 +155,11 @@ class MaintenanceSpec extends SparkSuite {
     // a selective non-key equality now skips most files at planning time
     val probe = before.head.getAs[String]("commit")
     skipping.ScanStats.last.set(None)
-    val hits = table.readWhere(snap,
-      Seq(org.apache.spark.sql.sources.EqualTo("commit", probe))).collect()
-    assert(hits.exists(_.getAs[String]("commit") == probe))
+    val (planned, _) = table.planScan(snap, Seq(org.apache.spark.sql.sources.EqualTo("commit", probe)))
+    // the planned files still hold the probed row
+    val hits = spark.read.parquet(planned.map(f => s"${table.root}/${f.path}"): _*)
+      .where(col("commit") === probe).collect()
+    assert(hits.nonEmpty)
     val Some((_, _, filesRead, filesTotal)) = skipping.ScanStats.last.get()
     // floor = one file per bucket (disjoint sorted runs -> the probe value
     // can live in at most one file of each bucket)

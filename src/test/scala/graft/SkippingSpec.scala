@@ -5,7 +5,7 @@ import graft.cdc.{lake, skipping}
 import graft.cdc.lake.LakeTable
 
 /** File-level data skipping + key-hash bucket pruning (skipping.scala,
-  * LakeTable.readWhere, the SQL V1 scan). */
+  * LakeTable.planScan, the SQL keyed scan). */
 class SkippingSpec extends SparkSuite {
   import org.apache.spark.sql.sources._
 
@@ -75,7 +75,7 @@ class SkippingSpec extends SparkSuite {
     val row = spark.sql(s"SELECT k, grp, n FROM $cat.db.t WHERE k = 7").collect()
     assert(row.toSeq.map(r => (r.getLong(0), r.getString(1), r.getLong(2))) == Seq((7L, "g3", 7L)))
     val (b1, bTot1, f1, fTot1) = skipping.ScanStats.last.get()
-      .getOrElse(fail("SQL scan must plan through readWhere"))
+      .getOrElse(fail("SQL scan must plan through planScan"))
     assert(b1 == 1 && bTot1 == 8, s"point lookup must plan 1/8 buckets, planned $b1/$bTot1")
     assert(f1 < fTot1, s"planned $f1 of $fTot1 files")
     // IN over two keys: at most two buckets

@@ -101,10 +101,10 @@ class SpjSpec extends SparkSuite {
     spark.sql(s"CREATE TABLE $cat.db.m (k BIGINT, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='4')")
     spark.sql(s"INSERT INTO $cat.db.m SELECT id, concat('x', id) FROM range(0, 100)")
     withSpj() {
-      // base-only snapshot: keyed scan eligible
+      // base-only snapshot: the keyed scan
       assert(planOf(s"SELECT * FROM $cat.db.m").contains("graft keyed scan"))
       // outstanding MoR delta files (engine-API deltaAppend at the same
-      // root) need the fused max-LSN merge -> V1 path
+      // root) are folded per bucket inside the keyed scan
       val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
       val t = graft.cdc.lake.LakeTable.load(spark, s"$wh/db/m", "m")
       import spark.implicits._
@@ -113,22 +113,22 @@ class SpjSpec extends SparkSuite {
       assert(t.deltaAppend(delta, epochId = 100).committed)
       assert(t.filesOf(t.snapshot).exists(_.kind == "delta"), "precondition: deltas outstanding")
       val p = planOf(s"SELECT * FROM $cat.db.m")
-      assert(!p.contains("graft keyed scan"), s"MoR snapshot must not take the keyed scan:\n$p")
+      assert(p.contains("graft keyed scan"), s"MoR snapshot must take the keyed scan:\n$p")
       assert(spark.sql(s"SELECT v FROM $cat.db.m WHERE k = 3").collect()
         .map(_.getString(0)).toSeq == Seq("y3"))
       assert(spark.sql(s"SELECT count(*) c FROM $cat.db.m").collect()(0).getLong(0) == 101)
-      // compaction folds the deltas -> keyed scan eligible again
+      // compaction folds the deltas into the base -> still the keyed scan
       assert(t.compactDeltas() > 0)
       assert(planOf(s"SELECT * FROM $cat.db.m").contains("graft keyed scan"))
       assert(spark.sql(s"SELECT v FROM $cat.db.m WHERE k = 200").collect()
         .map(_.getString(0)).toSeq == Seq("y200"))
-      // old-schema files after ADD COLUMNS need conform-on-read -> V1 path
+      // old-schema files after ADD COLUMNS are conformed inside the keyed scan
       val cat2 = freshCatalog("el2")
       spark.sql(s"CREATE TABLE $cat2.db.s (k BIGINT, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='4')")
       spark.sql(s"INSERT INTO $cat2.db.s SELECT id, concat('x', id) FROM range(0, 10)")
       spark.sql(s"ALTER TABLE $cat2.db.s ADD COLUMNS (extra INT)")
       val p2 = planOf(s"SELECT * FROM $cat2.db.s")
-      assert(!p2.contains("graft keyed scan"))
+      assert(p2.contains("graft keyed scan"))
       assert(spark.sql(s"SELECT * FROM $cat2.db.s WHERE extra IS NULL").count() == 10)
     }
   }
@@ -234,61 +234,29 @@ class SpjSpec extends SparkSuite {
     }
   }
 
-  test("refs-only SPJ eligibility: chunked tables decide without reading any manifest") {
-    import graft.cdc.lake._
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("k", LongType, nullable = false), StructField("v", StringType)))
-    val table = LakeTable.createIfNotExists(spark, tmpDir("spj-refs"), "t",
-      schema, Seq("k"), numBuckets = 128)
-    import spark.implicits._
-    table.append((0L until 2000L).map(i => (i, s"v$i")).toDF("k", "v"))
-    // a FRESH handle proves eligibility from the refs' schema-version
-    // stamps alone — zero manifest reads at decision time (global counter:
-    // any handle, including ones a future edit might open internally)
-    val fresh = LakeTable.load(spark, table.root, "t")
-    val snap = fresh.snapshot
-    assert(snap.manifests.nonEmpty, "precondition: the append wrote manifests")
-    val g0 = graft.cdc.lake.manifestReadsGlobal.get()
-    assert(graft.sql.GraftSpj.eligibleByRefs(snap).contains(true))
-    assert(graft.cdc.lake.manifestReadsGlobal.get() == g0,
-      "refs-only proof must not open manifests")
-    // pre-stamp (legacy) refs: unknown -> None, caller sweeps
-    val legacy = snap.copy(manifests =
-      snap.manifests.map(_.copy(schemaVersionLo = 0, schemaVersionHi = 0)))
-    assert(graft.sql.GraftSpj.eligibleByRefs(legacy).isEmpty)
-    // a ref provably on an OLD schema version -> Some(false), still no sweep
-    val widened = snap.copy(schemaVersion = snap.schemaVersion + 1,
-      schemas = snap.schemas + ((snap.schemaVersion + 1).toString -> snap.schema.json))
-    assert(graft.sql.GraftSpj.eligibleByRefs(widened).contains(false))
-    // outstanding deltas visible in the ref counts -> Some(false)
-    val withDeltas = snap.copy(manifests =
-      snap.manifests.updated(0, snap.manifests.head.copy(deltaFiles = 1)))
-    assert(graft.sql.GraftSpj.eligibleByRefs(withDeltas).contains(false))
-    // post-evolution appends stamp lo=oldSv, hi=sv: STILL provable (false)
-    // from refs — without it every scan build would sweep until compaction
-    val mixed = snap.copy(schemaVersion = snap.schemaVersion + 1,
-      schemas = snap.schemas + ((snap.schemaVersion + 1).toString -> snap.schema.json),
-      manifests = snap.manifests.map(m =>
-        m.copy(schemaVersionLo = snap.schemaVersion, schemaVersionHi = snap.schemaVersion + 1)))
-    assert(graft.sql.GraftSpj.eligibleByRefs(mixed).contains(false))
-
-    // INTEGRATED pin through the catalog: count(*) reads ZERO manifests
-    // (refs-only aggregate) and a point lookup reads ONLY the pruned
-    // bucket's manifest — any future edit that eagerly sweeps (e.g.
-    // forcing allFiles before the refs proof) fails here
+  test("a 128-bucket table: count(*) opens no manifest, a MoR point read only its bucket's") {
     val cat = freshCatalog("mrd")
     spark.sql(s"CREATE TABLE $cat.db.big (k BIGINT, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='128')")
     spark.sql(s"INSERT INTO $cat.db.big SELECT id, concat('v', id) FROM range(0, 2000)")
-    val c0 = graft.cdc.lake.manifestReadsGlobal.get()
+    // a delta-free count(*) answers from the refs: zero manifests opened
+    val g0 = graft.cdc.lake.manifestReadsGlobal.get()
     assert(spark.sql(s"SELECT count(*) c FROM $cat.db.big").collect()(0).getLong(0) == 2000)
+    assert(graft.cdc.lake.manifestReadsGlobal.get() == g0, "count(*) must answer from the refs")
+    val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
+    val t = graft.cdc.lake.LakeTable.load(spark, s"$wh/db/big", "big")
+    import spark.implicits._
+    assert(t.deltaAppend((0L until 2000L by 3).map(i => (i, s"w$i", 1L, "U")).toDF("k", "v", "lsn", "op"),
+      epochId = 1).committed)
+    assert(t.snapshot.manifests.count(_.deltaFiles > 0) > 64, "precondition: most buckets hold deltas")
+    // every statement resolves a fresh table handle (empty manifest cache):
+    // the point read plans, folds and reads one bucket's manifest, never
+    // the 128 the snapshot lists
+    val c0 = graft.cdc.lake.manifestReadsGlobal.get()
+    assert(spark.sql(s"SELECT v FROM $cat.db.big WHERE k = 6").collect()
+      .map(_.getString(0)).toSeq == Seq("w6"))
     val c1 = graft.cdc.lake.manifestReadsGlobal.get()
-    assert(c1 == c0, s"count(*) must answer from refs, read ${c1 - c0} manifests")
-    assert(spark.sql(s"SELECT v FROM $cat.db.big WHERE k = 7").collect()
-      .map(_.getString(0)).toSeq == Seq("v7"))
-    val c2 = graft.cdc.lake.manifestReadsGlobal.get()
-    assert(c2 - c1 >= 1 && c2 - c1 <= 2,
-      s"point lookup must read only the pruned bucket's manifest, read ${c2 - c1} of 128")
+    assert(c1 - c0 >= 1 && c1 - c0 <= 2,
+      s"point lookup must read only the pruned bucket's manifest, read ${c1 - c0} of 128")
   }
 
   test("catalog bucket functions match the write layout hash exactly") {
