@@ -191,7 +191,14 @@ class KeyedScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       assert(plan.contains("graft keyed scan") && !plan.contains("Exchange"), s"MoR key join shuffles:\n$plan")
       val expected = ta.read().as("a").join(tb.read().as("b"), col("a.k") === col("b.k"))
         .select(col("a.k"), col("a.v"), col("b.v"))
-      assert(rows(join) == rows(expected) && rows(join).size == 600 - 75)
+      val got = rows(join)
+      assert(got == rows(expected) && got.size == 600 - 75)
+      // each side of the join reports its own plan (read after the first
+      // run: Spark resets a plan's metrics when it runs again, and the
+      // driver metrics are posted once per plan)
+      assert(collect(join.queryExecution.executedPlan) { case s: BatchScanExec => s }
+        .map(s => (s.customMetrics("bucketsPlanned").value, s.customMetrics("deltaFilesFolded").value)).sorted ==
+        Seq(ta, tb).map(t => (8L, t.filesOf(t.snapshot).count(_.kind == "delta").toLong)).sorted)
       // key-pruned sides plan a partition per pruned bucket only
       val pruned = spark.sql(s"SELECT a.k, a.v, b.v FROM $cat.db.a a JOIN $cat.db.b b ON a.k = b.k WHERE a.k IN (4, 5, 9)")
       val prunedPlan = pruned.queryExecution.executedPlan.toString
