@@ -75,7 +75,7 @@ class MaintenanceSpec extends SparkSuite {
     assert(after.epochId == before.epochId, "compaction must not advance the epoch fence")
   }
 
-  test("per-bucket manifests: full lifecycle round-trips and vacuum GCs manifest files") {
+  test("bucket manifests: full lifecycle round-trips and vacuum GCs manifest files") {
     // a small bucket count keeps the whole lifecycle cheap to exercise:
     // CoW epochs, MoR deltas, changesSince, compaction, time travel, reload
     // from disk, vacuum incl. manifest-file GC
