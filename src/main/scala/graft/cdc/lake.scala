@@ -80,13 +80,7 @@ object lake {
     * sums feed table-level statistics without reading it either (0 on
     * refs written before the fields existed = stats unknown, never a lie). */
   final case class ManifestRef(path: String, bucket: Int, numFiles: Int, deltaFiles: Int,
-      rows: Long = 0L, bytes: Long = 0L,
-      /** Min/max [[DataFile.schemaVersion]] across the manifest's files —
-        * lets planners prove "every file is on the current schema" from the
-        * refs ALONE (SPJ/aggregate eligibility), without opening any
-        * manifest. 0 = written before the fields existed = unknown, which
-        * forces the sweep, never a wrong answer. */
-      schemaVersionLo: Int = 0, schemaVersionHi: Int = 0)
+      rows: Long = 0L, bytes: Long = 0L)
 
   /** On-disk payload of one per-bucket manifest file. */
   final case class ManifestData(files: Seq[DataFile])
@@ -377,9 +371,7 @@ object lake {
       store.create(Paths.get(root, rel), Serialization.write(ManifestData(files)))
       manifestCache.put(rel, files)
       ManifestRef(rel, bucket, files.size, files.count(_.kind == "delta"),
-        files.map(_.rows).sum, files.map(_.bytes).sum,
-        schemaVersionLo = if (files.isEmpty) 0 else files.map(_.schemaVersion).min,
-        schemaVersionHi = if (files.isEmpty) 0 else files.map(_.schemaVersion).max)
+        files.map(_.rows).sum, files.map(_.bytes).sum)
     }
 
     /** All data files of a snapshot: reads every manifest — use
@@ -504,14 +496,12 @@ object lake {
       *     one bucket.)
       *
       * Both levels are pure I/O elision: every caller re-applies the
-      * predicates above the scan. A pushed `limit` keeps only a prefix of
-      * the delta-free buckets' files whose row counts cover it, and the
-      * delta-bearing buckets whole (their rows are counted only by the
-      * fold) or, once the prefix covers it, not at all; and only with no
-      * filters: a filtered file may yield fewer rows than its count.
-      * Returns the kept files and the planned buckets;
-      * [[skipping.ScanStats.last]] records the planned buckets and the kept
-      * files. */
+      * predicates above the scan. A pushed `limit`, only with no filters (a
+      * filtered file may yield fewer rows than its count), keeps a prefix of
+      * the delta-free buckets' files whose row counts cover it, else adds
+      * the delta buckets whole (only the fold counts their rows). Returns
+      * the kept files and the planned buckets, which
+      * [[skipping.ScanStats.last]] records with the kept files' count. */
     def planScan(snap: Snapshot, filters: Seq[org.apache.spark.sql.sources.Filter],
         limit: Option[Int] = None): (Seq[DataFile], Seq[Int]) = {
       val buckets = skipping.bucketsForKeys(filters, snap.keyColumns, snap.schema, snap.numBuckets)

@@ -384,9 +384,8 @@ object skipping {
 
   /** Observability for tests/benchmarks: (bucketsRead, bucketsTotal,
     * filesRead, filesTotal) of the last stats-pruned scan planned by
-    * [[lake.LakeTable.planScan]]. Each SQL scan also reports these numbers
-    * as its own plan metrics (`GraftKeyedScan`); this global stays for
-    * callers that read it after a statement. */
+    * [[lake.LakeTable.planScan]]; each SQL scan also reports them as its own
+    * plan metrics, and this global stays for callers that read it after. */
   object ScanStats {
     val last = new java.util.concurrent.atomic.AtomicReference[Option[(Int, Int, Int, Int)]](None)
     /** (filesRead, filesTotal) of the last filter-pruned change-feed scan

@@ -4,13 +4,16 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Expression, GenericInternalRow, Murmur3Hash, Pmod, UnsafeProjection, UnsafeRow}
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.{MemoryConsumer, MemoryMode}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences, BoundReference, Descending, Expression, GenericInternalRow, InterpretedOrdering, Murmur3Hash, Pmod, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.UnsafeExternalRowSorter
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -18,6 +21,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
 import graft.cdc.lake
 
@@ -161,10 +165,9 @@ case class GraftBucketPartition(bucket: Int, files: Seq[lake.DataFile])
   def folds: Boolean = files.exists(_.kind == "delta")
 }
 
-/** How one file is read: its schema version and whether its bucket folds.
-  * A folding bucket's deltas and base files share one reader per schema
-  * version: each reads the system columns `lsn, op, _lsn`, a file lacking
-  * one (a delta stores `lsn, op`, a row-LSN base file `_lsn`) as null. */
+/** How one file is read: its schema version and whether its bucket folds,
+  * in which case it reads the system columns `lsn, op, _lsn`, those it
+  * lacks (a delta stores `lsn, op`, a row-LSN base file `_lsn`) as null. */
 private[sql] case class FileShape(schemaVersion: Int, folds: Boolean)
 
 /** A shape's parquet reader and the bound projection that conforms its
@@ -176,17 +179,21 @@ private[sql] case class ShapeReader(read: PartitionedFile => Iterator[InternalRo
   * vectorized reader's type-erased ColumnarBatch elements.
   *
   * A bucket with MoR deltas is folded by max LSN per key, the read-side form
-  * of the merge's MaxByRow. Its rows are laid out `(lsn, op, scan
-  * columns..., key columns the scan lacks...)`. The delta rows go into a map
-  * from key to the newest (lsn, op, row); the base rows stream past it, and
-  * one survives unless a delta with a higher LSN names its key; last come the
-  * surviving delta upserts. Equal LSNs carry identical payloads (the
-  * LSN-uniqueness contract), so a tie may go either way. Two base rows of one
-  * key (an `append` of a present key) both survive, as in a delta-free
-  * bucket. The map holds one bucket's deltas: the hash-build side the merge
-  * already assumes. */
+  * of the merge's MaxByRow, over rows laid out as `foldRow`: lsn, op, the
+  * scan's `width` columns, then the key columns it lacks. A base row survives
+  * unless a delta with a higher LSN names its key; a key's newest delta is
+  * emitted unless it is a tombstone or a base row of its key survived it.
+  * Equal LSNs carry identical payloads (the LSN-uniqueness contract), so a
+  * tie may go either way; two base rows of one key (an `append` of a present
+  * key) both survive. The newest deltas are hashed, their bytes acquired
+  * from the task's execution memory, and the base rows streamed past them;
+  * when the task cannot grant the bytes, Spark's spilling sort folds the
+  * bucket instead. */
 class GraftBucketReaderFactory(root: String, readers: Map[FileShape, ShapeReader],
-    keyRefs: Seq[Expression], outRefs: Seq[Expression]) extends PartitionReaderFactory {
+    foldRow: StructType, keys: Seq[String], width: Int) extends PartitionReaderFactory {
+  private val Delete = UTF8String.fromString("D")
+  private def ref(i: Int) = BoundReference(i, foldRow(i).dataType, nullable = true)
+  private val keyRefs = keys.map(k => ref(foldRow.fieldIndex(k)))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftBucketPartition]
@@ -213,27 +220,62 @@ class GraftBucketReaderFactory(root: String, readers: Map[FileShape, ShapeReader
   }
 
   private def fold(files: Seq[lake.DataFile], read: lake.DataFile => Iterator[InternalRow]): Iterator[InternalRow] = {
+    // a folding shape's rows come out of its conform projection
+    val rows = (fs: Seq[lake.DataFile]) => fs.iterator.flatMap(read).map(_.asInstanceOf[UnsafeRow])
     val keyOf = UnsafeProjection.create(keyRefs)
-    val newest = new java.util.HashMap[UnsafeRow, InternalRow]()
     val (deltas, bases) = files.partition(_.kind == "delta")
-    deltas.iterator.flatMap(read).foreach { r =>
+    val folded = newestDeltas(rows(deltas), keyOf).fold(sortFold(rows(files), keyOf)) { newest =>
+      // a base row at or above its key's delta beats it: the delta's op is
+      // cleared, and its LSN still judges the key's other base rows
+      rows(bases).filter { r =>
+        val d = newest.get(keyOf(r))
+        d == null || d.getLong(0) <= r.getLong(0) && { d.setNullAt(1); true }
+      } ++ newest.values.iterator.asScala.filter(d => !d.isNullAt(1) && d.getUTF8String(1) != Delete)
+    }
+    folded.map(UnsafeProjection.create((2 until 2 + width).map(ref)))
+  }
+
+  /** Each key's newest delta, held in task execution memory until the task ends; None when not granted. */
+  private def newestDeltas(deltas: Iterator[UnsafeRow], keyOf: UnsafeProjection): Option[java.util.HashMap[UnsafeRow, UnsafeRow]] = {
+    val memory = new MemoryConsumer(Bridge.taskMemoryManager(), MemoryMode.ON_HEAP) {
+      override def spill(size: Long, trigger: MemoryConsumer): Long = 0L
+    }
+    TaskContext.get().addTaskCompletionListener[Unit](_ => memory.freeMemory(memory.getUsed))
+    val newest = new java.util.HashMap[UnsafeRow, UnsafeRow]()
+    var need = 0L
+    while (need <= memory.getUsed && deltas.hasNext) {
+      val r = deltas.next()
       val k = keyOf(r)
       val prev = newest.get(k)
-      if (prev == null || prev.getLong(0) < r.getLong(0)) newest.put(k.copy(), r.copy())
+      if (prev == null || prev.getLong(0) < r.getLong(0)) {
+        // a new entry's row objects, array headers, node and slot: about 160 bytes
+        need += r.getSizeInBytes + (if (prev == null) k.getSizeInBytes + 160 else -prev.getSizeInBytes)
+        newest.put(k.copy(), r.copy())
+      }
+      if (need > memory.getUsed) memory.acquireMemory(need - memory.getUsed + (1L << 20))
     }
-    val survivors = bases.iterator.flatMap(read).filter { r =>
-      val k = keyOf(r)
-      val d = newest.get(k)
-      d == null || (d.getLong(0) <= r.getLong(0) && { newest.remove(k); true })
-    }
-    val upserts = newest.values.iterator.asScala.filterNot(d => d.getUTF8String(1) == GraftBucketReaderFactory.Delete)
-    val out = UnsafeProjection.create(outRefs)
-    (survivors ++ upserts).map(out)
+    if (need <= memory.getUsed) Some(newest) else { memory.freeMemory(memory.getUsed); None }
   }
-}
 
-private object GraftBucketReaderFactory {
-  val Delete: UTF8String = UTF8String.fromString("D")
+  /** The fold over rows sorted by key, LSN descending and base rows (op
+    * null) first: of one key, the base rows ahead of its first delta survive,
+    * and so does that delta if no base row came first and it is no tombstone. */
+  private def sortFold(rows: Iterator[UnsafeRow], keyOf: UnsafeProjection): Iterator[InternalRow] = {
+    val order = keyRefs.map(SortOrder(_, Ascending)) ++ Seq(SortOrder(BoundReference(0, LongType, nullable = false),
+      Descending), SortOrder(BoundReference(1, StringType, nullable = true), Ascending))
+    val prefix = new UnsafeExternalRowSorter.PrefixComputer.Prefix // one for all rows: the ordering decides
+    val sorted = UnsafeExternalRowSorter.create(foldRow, new InterpretedOrdering(order), PrefixComparators.LONG,
+      (_: InternalRow) => prefix, Bridge.taskMemoryManager().pageSizeBytes(), false).sort(rows)
+    var key: UnsafeRow = null
+    var base, delta = false
+    sorted.filter { r =>
+      val k = keyOf(r)
+      if (k != key) { key = k.copy(); base = false; delta = false }
+      val keep = !delta && (r.isNullAt(1) || !base && r.getUTF8String(1) != Delete)
+      if (r.isNullAt(1)) base = true else delta = true
+      keep
+    }
+  }
 }
 
 /** The scan's pruning as Spark SQL metrics: each scan reports its own plan
@@ -339,13 +381,9 @@ class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
   override def createReaderFactory(): PartitionReaderFactory = {
     val folding = planned._1.filter(_.kind == "delta").map(_.bucket).toSet
     val shapes = planned._1.map(f => FileShape(f.schemaVersion, folding(f.bucket))).distinct
-    val keyRefs = snap.keyColumns.map { k =>
-      BoundReference(2 + foldSchema.fieldIndex(k), snap.schema(k).dataType, nullable = true)
-    }
-    val outRefs = scanSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      BoundReference(2 + i, f.dataType, nullable = true)
-    }
-    new GraftBucketReaderFactory(table.root, shapes.map(s => s -> shapeReader(s)).toMap, keyRefs, outRefs)
+    new GraftBucketReaderFactory(table.root, shapes.map(s => s -> shapeReader(s)).toMap,
+      StructType(StructField("lsn", LongType) +: StructField("op", StringType) +: foldSchema.fields),
+      snap.keyColumns, scanSchema.length)
   }
 
   /** One reader per file shape. A file reads the target columns it has —

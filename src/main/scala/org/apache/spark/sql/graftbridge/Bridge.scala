@@ -59,6 +59,10 @@ object Bridge {
         })
   }
 
+  /** The running task's memory manager, private[spark] on TaskContext. */
+  def taskMemoryManager(): org.apache.spark.memory.TaskMemoryManager =
+    org.apache.spark.TaskContext.get().taskMemoryManager()
+
   def partitionedFile(absPath: String, bytes: Long)
       : org.apache.spark.sql.execution.datasources.PartitionedFile =
     org.apache.spark.sql.execution.datasources.PartitionedFile(

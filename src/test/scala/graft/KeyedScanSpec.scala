@@ -129,6 +129,59 @@ class KeyedScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(vOf(1) == Seq("e"))
   }
 
+  test("a stale delta loses to a base row's stored LSN, in SQL as in LakeTable.read") {
+    val cat = freshCatalog("stale")
+    spark.sql(s"CREATE TABLE $cat.db.t (k STRING, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='1')")
+    val t = lakeOf(cat, "t")
+    import spark.implicits._
+    def batch(rows: (Long, String, String, String)*) = rows.toDF("lsn", "op", "k", "v")
+    // a CoW merge stores K@10 with its row LSN; a redelivery appends K@5
+    assert(t.merge(batch((10L, "U", "K", "A")), 0).committed)
+    assert(t.deltaAppend(batch((5L, "U", "K", "B"), (20L, "U", "L", "z")), 1).committed)
+    def all = rows(spark.sql(s"SELECT * FROM $cat.db.t"))
+    assert(spark.sql(s"SELECT v FROM $cat.db.t WHERE k = 'K'").collect().map(_.getString(0)).toSeq == Seq("A"))
+    assert(all == rows(t.read()) && all == Seq("[K,A]", "[L,z]"))
+    // K appended again (LSN -1): the delta at 5 shadows that row, and the
+    // row at 10 still beats the delta, whichever base file reads first
+    spark.sql(s"INSERT INTO $cat.db.t VALUES ('K', 'dup')")
+    assert(all == rows(t.read()) && all == Seq("[K,A]", "[L,z]"))
+  }
+
+  test("a bucket whose deltas the task's memory cannot hold is folded by sorting, to the same rows") {
+    val cat = freshCatalog("sort")
+    spark.sql(s"CREATE TABLE $cat.db.t (k STRING, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='1')")
+    val t = lakeOf(cat, "t")
+    import spark.implicits._
+    def batch(rows: Seq[(Long, String, String, String)]) = rows.toDF("lsn", "op", "k", "v")
+    def key(i: Int) = f"k$i%03d"
+    // base rows with row LSNs (100 + i), appended ones (LSN -1) and one
+    // appended duplicate of a row-LSN key
+    assert(t.merge(batch((0 until 100).map(i => (100L + i, "U", key(i), s"m$i"))), 0).committed)
+    spark.sql(s"INSERT INTO $cat.db.t SELECT format_string('k%03d', id), concat('a', id) FROM range(200, 300)")
+    spark.sql(s"INSERT INTO $cat.db.t VALUES ('k000', 'dup')")
+    // newer updates, tombstones, stale redeliveries, new keys, and keys
+    // whose second delta is older or newer than their first
+    assert(t.deltaAppend(batch(Seq((50L, "U", key(0), "stale")) ++
+      (1 to 20).map(i => (1000L + i, "U", key(i), s"u$i")) ++
+      (21 to 30).map(i => (1000L, "D", key(i), null: String)) ++
+      (31 to 40).map(i => (5L, "U", key(i), s"old$i")) ++
+      (200 to 250).map(i => (1000L, "U", key(i), s"u$i")) ++
+      (251 to 260).map(i => (1000L, "D", key(i), null: String)) ++
+      (500 to 550).map(i => (1000L, "I", key(i), s"n$i"))), 1).committed)
+    assert(t.deltaAppend(batch(Seq((999L, "U", key(201), "older"), (1001L, "U", key(500), "newer"))), 2).committed)
+    val expected = rows(t.read())
+    assert(expected.size == 90 + 90 + 51)
+    val df = spark.sql(s"SELECT * FROM $cat.db.t")
+    assert(rows(df) == expected)
+    val batchScan = scanOf(df).scan.toBatch
+    val Array(part) = batchScan.planInputPartitions()
+    val factory = batchScan.createReaderFactory()
+    val (hashed, held, _) = KeyedScanSpec.readInTask(spark, factory, part, starve = false)
+    assert(hashed.sorted == expected && held > 0, s"the task's execution memory must count the map: $held")
+    val (sorted, _, sorterAsked) = KeyedScanSpec.readInTask(spark, factory, part, starve = true)
+    assert(sorterAsked && sorted.sorted == expected)
+  }
+
   test("a pushed LIMIT takes a prefix of delta-free buckets only") {
     val cat = freshCatalog("lim")
     spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='8')")
@@ -239,4 +292,40 @@ class KeyedScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     }
     finally pool.shutdown()
   }
+}
+
+object KeyedScanSpec {
+  import org.apache.spark.memory.{MemoryConsumer, MemoryMode}
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+  import org.apache.spark.sql.graftbridge.Bridge
+  import org.apache.spark.util.collection.unsafe.sort.UnsafeExternalSorter
+
+  /** Holds all of its task's execution memory, and gives it up only when
+    * a sorter asks. */
+  final class Hog extends MemoryConsumer(Bridge.taskMemoryManager(), MemoryMode.ON_HEAP) {
+    @volatile var sorterAsked = false
+    acquireMemory(Runtime.getRuntime.maxMemory)
+    override def spill(size: Long, trigger: MemoryConsumer): Long =
+      if (!trigger.isInstanceOf[UnsafeExternalSorter]) 0L
+      else { sorterAsked = true; val u = getUsed; freeMemory(u); u }
+  }
+
+  /** Reads one partition of a `(k STRING, v STRING)` scan in a task, with
+    * its execution memory held by a [[Hog]] when `starve`: the rows, the
+    * task's execution memory once the reader is built (besides the hog's),
+    * and whether a sorter asked the hog for memory. */
+  def readInTask(spark: SparkSession, factory: PartitionReaderFactory, part: InputPartition,
+      starve: Boolean): (Seq[String], Long, Boolean) =
+    spark.sparkContext.parallelize(Seq(0), 1).map { _ =>
+      val hog = if (starve) Some(new Hog) else None
+      val reader = factory.createReader(part)
+      val held = Bridge.taskMemoryManager().getMemoryConsumptionForThisTask - hog.fold(0L)(_.getUsed)
+      val out = Iterator.continually(reader).takeWhile(_.next()).map { r =>
+        s"[${r.get.getUTF8String(0)},${if (r.get.isNullAt(1)) null else r.get.getUTF8String(1)}]"
+      }.toList
+      reader.close()
+      hog.foreach(h => h.freeMemory(h.getUsed))
+      (out, held, hog.exists(_.sorterAsked))
+    }.collect().head
 }
