@@ -52,7 +52,7 @@ object ingest {
     /** Copy-on-write: every epoch rewrites the touched buckets (read-optimal). */
     case object CoW extends MergeMode
     /** Merge-on-read: epochs append per-key-winner delta files; reads apply
-      * them with the fused max-LSN aggregation (write-optimal; compact with
+      * them with the per-bucket max-LSN fold (write-optimal; compact with
       * `table.compactDeltas()` or any CoW merge touching the bucket). */
     case object MoR extends MergeMode
   }
@@ -89,16 +89,6 @@ object ingest {
         * so any corruption between source and lake is caught at the epoch it
         * happens (compare against the same checksum computed source-side). */
       val verifyChecksums: Boolean = false) {
-
-    // The merge aggregation uses a TypedImperativeAggregate (MaxByRow) that
-    // runs in ObjectHashAggregateExec; Spark's default sort-fallback threshold
-    // (128 groups!) would demote it to sort-based immediately. Partitions are
-    // sized so their key count fits memory (same invariant as any hash join
-    // build side), so raise the threshold. Tunable by setting it BEFORE
-    // constructing the engine.
-    if (table.spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "128") {
-      table.spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-    }
 
     /** Persist gate failures (audit summaries + quarantined rows), then abort
       * on error-level failures. With an audit table attached, warn+error
@@ -190,9 +180,9 @@ object ingest {
         }
       }
 
-      // 3.+4. merge with the per-key max-LSN dedup FUSED into the merge
-      //    aggregation (one wide shuffle; see LakeTable.merge), then the
-      //    fenced commit
+      // 3.+4. merge with the per-key max-LSN dedup FUSED into the merge's
+      //    per-bucket fold (a shuffle of the batch only; see LakeTable.merge),
+      //    then the fenced commit
       val res = mode match {
         case MergeMode.CoW => table.merge(withMeta, epochId, sums, check)
         case MergeMode.MoR => table.deltaAppend(withMeta, epochId, sums, check)

@@ -3,8 +3,11 @@ package graft.cdc
 import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -430,10 +433,11 @@ object lake {
       * Deliberately `pmod(hash(keys), NB)` — Spark's own Murmur3 shuffle hash.
       * A hash repartition on the key columns into `n` tasks sends a row to
       * task `pmod(hash(keys), n)`, and when `n | NB` that equals
-      * `pmod(bucket, n)`: every bucket lands whole in one task. The engine's
-      * write-side aggregates read through such a repartition ([[byKey]],
-      * `n` from [[writeWidth]]), so their bucketed write needs no second
-      * shuffle and writes one file per touched bucket. */
+      * `pmod(bucket, n)`: every bucket lands whole in one task. The merge
+      * folds its batch through such a repartition ([[byKey]], `n` from
+      * [[writeWidth]]) into the stored rows of each task's buckets, so its
+      * bucketed write needs no second shuffle and writes one file per
+      * touched bucket. */
     def bucketExpr(snap: Snapshot): org.apache.spark.sql.Column =
       if (snap.keyColumns.isEmpty)
         // keyless table (append/scan-only — e.g. CTAS without a primary_key
@@ -453,11 +457,44 @@ object lake {
       (cap to 1 by -1).find(numBuckets % _ == 0).get
     }
 
-    /** `df` hash-repartitioned on the key columns into [[writeWidth]] tasks:
-      * the input of a write-side aggregate, whose key distribution it
-      * satisfies, so the aggregate adds no exchange of its own. */
+    /** `df` hash-repartitioned on the key columns into [[writeWidth]] tasks,
+      * each bucket whole in one task (see [[bucketExpr]]). */
     private def byKey(df: DataFrame, snap: Snapshot, touched: Int): DataFrame =
       df.repartition(writeWidth(snap.numBuckets, touched), snap.keyColumns.map(col): _*)
+
+    /** The stored rows of `files` through the one max-LSN fold
+      * ([[BucketFold]]), read in place: one task per group of
+      * [[writeWidth]] buckets, each bucket whole in one task, so the
+      * bucketed write needs no repartition. */
+    private def foldFiles(snap: Snapshot, files: Seq[DataFile], output: BucketFold.Output): DataFrame = {
+      val f = BucketFold(spark, root, snap, files.map(d => FileShape(d.schemaVersion, folds = true)),
+        snap.schema, output = output)
+      val byBucket = files.map(_.copy(stats = None)).groupBy(_.bucket)
+      val n = writeWidth(snap.numBuckets, byBucket.size)
+      val groups = byBucket.values.toSeq.groupBy(_.head.bucket % n).values.toSeq
+      Bridge.rowsFrame(spark, spark.sparkContext.parallelize(groups, math.max(1, groups.size))
+        .flatMap(_.iterator.flatMap(f(_))), f.schema)
+    }
+
+    /** `batch`'s change rows (lsn, op, payload: the fold row) folded into the
+      * stored rows of `files`, the buckets the batch touches. Only the batch
+      * crosses a shuffle: [[byKey]] sends it to n tasks, n dividing the
+      * bucket count, on the hash [[bucketExpr]] buckets by, so task i holds
+      * every batch row of the buckets b ≡ i (mod n) and reads those buckets'
+      * files in place. */
+    private def foldBatch(batch: DataFrame, snap: Snapshot, files: Seq[DataFile], touched: Int,
+        output: BucketFold.Output): DataFrame = {
+      val n = writeWidth(snap.numBuckets, touched)
+      val f = BucketFold(spark, root, snap, files.map(d => FileShape(d.schemaVersion, folds = true)),
+        snap.schema, output = output)
+      val byTask = files.map(_.copy(stats = None)).groupBy(_.bucket % n)
+      val (in, out) = (batch.schema, f.schema)
+      byKey(batch, snap, touched).mapPartitions { (rows: Iterator[Row]) =>
+        val toInternal = ExpressionEncoder(in).createSerializer()
+        val toRow = ExpressionEncoder(out).resolveAndBind().createDeserializer()
+        f(byTask.getOrElse(TaskContext.getPartitionId(), Nil), rows.map(toInternal)).map(toRow)
+      }(Encoders.row(out))
+    }
 
     /** Expose the current table state to Spark SQL as a temp view
       * (`spark.sql("SELECT ... FROM <viewName>")`). Re-call after commits to
@@ -470,9 +507,9 @@ object lake {
       * reader's widening support. */
     def read(): DataFrame = readBuckets(snapshot, None)
 
-    /** Current state of the selected buckets. If MoR delta files exist for
-      * them, they are applied at read time with the same fused max-LSN
-      * aggregation the CoW merge uses. */
+    /** Current state of the selected buckets. A bucket with MoR delta files
+      * is folded at read time by the max-LSN fold every merge and scan
+      * uses ([[BucketFold]]). */
     def readBuckets(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame =
       readFiles(snap, filesOfBuckets(snap, buckets))
 
@@ -524,19 +561,11 @@ object lake {
       (kept, planned)
     }
 
-    /** The table rows `wanted` hold: base rows as stored, deltas applied. */
+    /** The table rows `wanted` hold: base rows as stored, deltas applied.
+      * Without deltas, the parquet scan (column pruning, split packing). */
     private def readFiles(snap: Snapshot, wanted: Seq[DataFile]): DataFrame =
-      (if (wanted.forall(_.kind == "base")) readBase(snap, wanted)
-      else mergeExpr(storedChanges(snap, wanted), snap)).drop("_lsn")
-
-    /** The rows stored in `files` as change rows (lsn, op, payload...), the
-      * input shape of [[mergeExpr]]: base rows at their stored row LSN,
-      * delta rows at their own. */
-    private def storedChanges(snap: Snapshot, files: Seq[DataFile]): DataFrame =
-      readBase(snap, files.filter(_.kind == "base"))
-        .select((Seq(col("_lsn").as("lsn"), lit(null).cast(StringType).as("op")) ++
-          snap.schema.fieldNames.map(col)): _*)
-        .unionByName(readDeltas(snap, files.filter(_.kind == "delta")))
+      if (wanted.forall(_.kind == "base")) readBase(snap, wanted).drop("_lsn")
+      else foldFiles(snap, wanted, BucketFold.Rows)
 
     /** A parquet scan planned from the manifest's file list: the snapshot
       * already names every file with its size, so nothing is globbed,
@@ -564,11 +593,6 @@ object lake {
     private def readBase(snap: Snapshot, files: Seq[DataFile]): DataFrame =
       readStored(snap, files, Seq(StructField("_lsn", LongType, nullable = false)))
 
-    /** Read delta files: the feed's (lsn, op) change metadata ahead of the
-      * payload. */
-    private def readDeltas(snap: Snapshot, files: Seq[DataFile]): DataFrame =
-      readStored(snap, files, changefeed.feedMeta)
-
     /** `files` as `meta` columns followed by the payload, each (schemaVersion,
       * stored-meta) group conformed to the current schema. Delta files always
       * store their meta columns; a base file stores `_lsn` only when
@@ -588,31 +612,6 @@ object lake {
               .select((metaCols ++ SchemaRegistry.conformedColumns(snap.schema, fileSchema)): _*)
         }.reduce(_ unionByName _)
       }
-
-    /** The fused max-LSN resolution: input rows carry (lsn, op, payload...);
-      * per key the highest-LSN row wins, a winning delete drops the key.
-      * Used by both the CoW merge and the MoR read path. Output keeps the
-      * winner's LSN as `_lsn` so merge writes can persist it per row. With
-      * `tombstones` the winners keep their (lsn, op) ahead of the payload
-      * and winning deletes stay: the delta rows a MoR apply writes.
-      *
-      * Because base rows enter at their STORED row LSN (not -1), a stale
-      * redelivered event in a later epoch loses to the state it would have
-      * regressed — order-correct without relying on upstream dedup. The one
-      * boundary: a key already DELETED has no base row to outrank a stale
-      * pre-delete redelivery, so anti-resurrection of deleted keys still
-      * needs the cross-epoch dedup watermark (streaming.statefulDedup) or an
-      * in-order tail. */
-    private def mergeExpr(all: DataFrame, snap: Snapshot, tombstones: Boolean = false): DataFrame = {
-      val keys = snap.keyColumns
-      val nonKey = snap.schema.fieldNames.toSeq.filterNot(keys.contains)
-      val won = all.groupBy(keys.map(col): _*)
-        .agg(graft.functions.MaxByRow.maxByRow(
-          struct((Seq(col("lsn"), col("op")) ++ nonKey.map(col)): _*), col("lsn")).as("_e"))
-      val payload = keys.map(col) ++ nonKey.map(c => col(s"_e.$c").as(c))
-      if (tombstones) won.select((Seq(col("_e.lsn").as("lsn"), col("_e.op").as("op")) ++ payload): _*)
-      else won.filter(!(col("_e.op") <=> lit("D"))).select((payload :+ col("_e.lsn").as("_lsn")): _*)
-    }
 
     // ---- write path --------------------------------------------------------
 
@@ -729,7 +728,7 @@ object lake {
 
     /** The change-event protocol reserves `lsn` and `op` as metadata column
       * names; a payload column with either name would be irresolvably
-      * ambiguous inside the merge aggregation. Fail fast with the reason
+      * ambiguous beside the merge's change columns. Fail fast with the reason
       * instead of surfacing an AMBIGUOUS_REFERENCE from deep in the plan.
       * (Append/overwrite/read paths carry no metadata columns and accept any
       * names — e.g. the quarantine table legitimately stores an `lsn`.) */
@@ -919,16 +918,14 @@ object lake {
       *  1. the [[perBucketStats]] pre-pass: the buckets the batch touches,
       *     with their lsn ranges and change counts (an empty batch stops
       *     here, having written nothing);
-      *  2. the write: union(the touched buckets' rows @ their stored row
-      *     _lsn, batch events) -> hash-aggregate max_by_row(payload, lsn) per
-      *     key (custom TypedImperativeAggregate, graft.functions.MaxByRow —
-      *     the built-in max_by(struct, lsn) degrades to SortAggregate for
-      *     wide payloads) -> drop keys whose winner is a delete -> bucketed
-      *     write. Dedup, matched-update, not-matched-insert and delete
-      *     collapse into one aggregate over ONE explicit hash repartition on
-      *     the key columns ([[byKey]]); its width divides the bucket count,
-      *     so every bucket is whole in one task and the write needs no extra
-      *     repartition.
+      *  2. the write ([[foldBatch]]): the batch alone is hash-repartitioned
+      *     on the key columns ([[byKey]]), and each task folds its batch
+      *     events into the rows of its touched buckets, read in place at
+      *     their stored row `_lsn`, by the one max-LSN fold
+      *     ([[BucketFold]]) -> bucketed write. Dedup, matched-update,
+      *     not-matched-insert and delete collapse into that fold; the
+      *     repartition's width divides the bucket count, so every bucket is
+      *     whole in one task and the write needs no extra repartition.
       * Only the touched buckets are read and rewritten; the others carry
       * over by manifest reference (zero data movement). Epoch cost scales
       * with the batch's key spread, not with table size.
@@ -959,26 +956,26 @@ object lake {
       val (leg, stats) = batchStats(batch, cur, sums, check)
       if (stats.isEmpty) return CommitResult(committed = false, cur, Nil) // empty batch
       // fused dedup+merge: base rows join the race at their stored row _lsn,
-      // MoR delta rows at their own LSN, batch events at theirs — one
-      // aggregation resolves everything by true log position (a CoW merge
-      // also compacts any deltas of the buckets it rewrites). Only the
-      // touched buckets' manifests are read: an epoch never materializes
-      // the full file list driver-side.
+      // MoR delta rows at their own LSN, batch events at theirs — one fold
+      // resolves everything by true log position (a CoW merge also compacts
+      // any deltas of the buckets it rewrites). Only the touched buckets'
+      // manifests are read: an epoch never materializes the full file list
+      // driver-side.
       val olds = filesOfBuckets(cur, Some(stats.keySet))
-      val merged = mergeExpr(byKey(storedChanges(cur, olds).unionByName(leg), cur, stats.size), cur)
-      // byKey laid the aggregate out bucket-whole — no repartition before
-      // the bucketed write
+      val merged = foldBatch(leg, cur, olds, stats.size, BucketFold.RowsWithLsn)
+      // laid out bucket-whole — no repartition before the bucketed write
       val written = writeBucketed(merged, cur, cur.version + 1,
         repartitionByBucket = false, withRowLsn = true)
       commitApply(cur, epochId, stats, written, olds)
     }
 
-    /** The batch leg of an apply job (lsn, op, payload) and the batch's
-      * per-bucket stats from the [[perBucketStats]] pre-pass (empty for an
-      * empty batch). */
+    /** The batch leg of an apply job (lsn, op, payload at the table's
+      * types: the fold row) and the batch's per-bucket stats from the
+      * [[perBucketStats]] pre-pass (empty for an empty batch). */
     private def batchStats(batch: DataFrame, cur: Snapshot, sums: Seq[Column],
         check: Seq[Long] => Unit): (DataFrame, Map[Int, BucketStats]) =
-      (batch.select((Seq(col("lsn"), col("op")) ++ cur.schema.fieldNames.map(col)): _*),
+      (batch.select((Seq(col("lsn").cast(LongType).as("lsn"), col("op").cast(StringType).as("op")) ++
+        cur.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))): _*),
         perBucketStats(batch, cur, sums, check))
 
     /** Per-bucket batch stats, one aggregate job that scans only the key,
@@ -1034,7 +1031,8 @@ object lake {
 
     /** Merge-on-read apply: dedup the batch to per-key winners and append
       * them as bucketed DELTA files (deletes kept as tombstones) — no base
-      * rewrite. Readers apply deltas with the same fused max-LSN aggregation;
+      * rewrite. The winners come from the max-LSN fold with no stored files
+      * ([[foldBatch]]), and readers apply deltas with the same fold;
       * [[compactDeltas]] (or any CoW merge touching the bucket) folds them
       * into base files. The MoR trade: epoch apply cost ~ batch size instead
       * of ~ touched-bucket size; read cost grows with outstanding deltas.
@@ -1048,7 +1046,7 @@ object lake {
       val (leg, stats) = batchStats(batch, cur, sums, check)
       if (stats.isEmpty) return CommitResult(committed = false, cur, Nil) // empty batch
       // per-key winners incl. delete tombstones, keeping (lsn, op)
-      val winners = mergeExpr(byKey(leg, cur, stats.size), cur, tombstones = true)
+      val winners = foldBatch(leg, cur, Nil, stats.size, BucketFold.Changes)
       val written = writeBucketed(winners, cur, cur.version + 1,
         repartitionByBucket = false, kind = "delta")
       val res = commitApply(cur, epochId, stats, written, olds = Nil)
@@ -1147,7 +1145,7 @@ object lake {
         filters.forall(flt => skipping.mayMatch(stats, f.rows, feed, flt))
       }
       skipping.ScanStats.lastFeed.set(Some((kept.size, newDeltas.size)))
-      readDeltas(cur, kept)
+      readStored(cur, kept, changefeed.feedMeta) // (lsn, op) ahead of the payload
     }
 
     // ---- maintenance ------------------------------------------------------
@@ -1184,24 +1182,23 @@ object lake {
       * [[cluster]] and [[rebucket]]: every file of `buckets` is read and
       * written back as base files laid out under `to` (the current layout,
       * or a new bucket count), per-row `_lsn` kept, then committed unfenced
-      * (a logical no-op: the epoch fence is untouched). Delta-bearing
-      * buckets resolve through [[mergeExpr]], and ONE key repartition
-      * ([[byKey]] under `to`) serves both that aggregate and the bucketed
-      * write; delta-free buckets take the same repartition with no
-      * aggregate. Keyless tables (never delta-bearing) repartition on the
-      * bucket column instead. Each new file is stamped with its old
-      * bucket's [[lsnEnvelope]], or with the global one when `to` changes
-      * the bucket count: a bucket's rows scatter under the new hash, and a
-      * wider range costs pruning selectivity, never correctness. Returns
-      * the committed snapshot. */
+      * (a logical no-op: the epoch fence is untouched). Keyed buckets are
+      * read in place through the max-LSN fold ([[foldFiles]]), which
+      * resolves any deltas: under the current layout the write runs no
+      * exchange, and under a new bucket count the winners take one key
+      * repartition ([[byKey]] under `to`). Keyless tables (never
+      * delta-bearing) repartition on the bucket column instead. Each new
+      * file is stamped with its old bucket's [[lsnEnvelope]], or with the
+      * global one when `to` changes the bucket count: a bucket's rows
+      * scatter under the new hash, and a wider range costs pruning
+      * selectivity, never correctness. Returns the committed snapshot. */
     private def rewrite(cur: Snapshot, buckets: Set[Int])(to: Snapshot = cur,
         sortCols: Seq[String] = Nil, maxRowsPerFile: Option[Long] = None): Snapshot = {
       val olds = filesOfBuckets(cur, Some(buckets))
-      val touched = if (to.numBuckets == cur.numBuckets) buckets.size else to.numBuckets
       val data =
-        if (olds.exists(_.kind == "delta")) mergeExpr(byKey(storedChanges(cur, olds), to, touched), cur)
-        else if (cur.keyColumns.isEmpty) readBase(cur, olds)
-        else byKey(readBase(cur, olds), to, touched)
+        if (cur.keyColumns.isEmpty) readBase(cur, olds)
+        else if (to.numBuckets == cur.numBuckets) foldFiles(cur, olds, BucketFold.RowsWithLsn)
+        else byKey(foldFiles(cur, olds, BucketFold.RowsWithLsn), to, to.numBuckets)
       val written = writeBucketed(data, to, cur.version + 1, repartitionByBucket = cur.keyColumns.isEmpty,
         withRowLsn = true, sortCols = sortCols, maxRowsPerFile = maxRowsPerFile)
       val envelope: Int => (Long, Long) =
@@ -1249,11 +1246,11 @@ object lake {
       * create time. A growing table eventually outgrows its bucket count
       * (per-bucket rewrite amplification is table size / numBuckets), so
       * 32 → 256 must be a maintenance op, not a re-create. Logical no-op:
-      * one full CoW rewrite (ONE wide shuffle on the new bucket hash +
-      * bucket-aligned write — the same cost envelope as a dense merge
-      * epoch), epoch fence untouched, so in-flight CDC replay/streaming
+      * one full CoW rewrite (each old bucket folded in place, then ONE wide
+      * shuffle of the winners on the new bucket hash + bucket-aligned
+      * write), epoch fence untouched, so in-flight CDC replay/streaming
       * continues across it unchanged. Outstanding MoR deltas are absorbed
-      * by the rewrite (the fused read applies them), so their lsn range
+      * by the rewrite (the fold applies them), so their lsn range
       * folds into foldedLsnHigh exactly like compaction. Per-row `_lsn`
       * stamps survive the rewrite; the new files' lsn RANGES are the old
       * files' global envelope (see [[rewrite]]). Returns the new snapshot

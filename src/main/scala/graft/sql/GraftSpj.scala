@@ -1,28 +1,16 @@
 package graft.sql
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.TaskContext
-import org.apache.spark.memory.{MemoryConsumer, MemoryMode}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences, BoundReference, Descending, Expression, GenericInternalRow, InterpretedOrdering, Murmur3Hash, Pmod, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Murmur3Hash, Pmod}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.execution.UnsafeExternalRowSorter
-import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.functions.{coalesce, col, lit}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
+import graft.cdc.{BucketFold, FileShape}
 import graft.cdc.lake
 
 /** The one SQL table scan: the lake's hash-bucket layout REPORTED to
@@ -48,9 +36,9 @@ import graft.cdc.lake
   *
   * Files are read with Spark's own parquet reader (vectorized, row-group
   * filter pushdown — built once per file shape on the driver via
-  * [[Bridge.parquetReader]]), planned by [[lake.LakeTable.planScan]]. Every
+  * [[graft.cdc.BucketFold]]), planned by [[lake.LakeTable.planScan]]. Every
   * snapshot takes this scan: a bucket holding MoR deltas is folded inside
-  * its task ([[GraftBucketReaderFactory]]), and a file on an older schema
+  * its task by the engine's one max-LSN fold, and a file on an older schema
   * version is read with its own schema and conformed per row. The declared
   * partitioning is immutable per scan because the snapshot is pinned
   * (MVCC): a concurrent rebucket produces a NEW snapshot, never a
@@ -161,119 +149,20 @@ private[sql] class GraftBoundNamedBucket(numBuckets: Int, argTypes: Array[DataTy
 case class GraftBucketPartition(bucket: Int, files: Seq[lake.DataFile])
   extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](bucket))
-  /** Whether the bucket holds MoR deltas, which its reader folds. */
-  def folds: Boolean = files.exists(_.kind == "delta")
 }
 
-/** How one file is read: its schema version and whether its bucket folds,
-  * in which case it reads the system columns `lsn, op, _lsn`, those it
-  * lacks (a delta stores `lsn, op`, a row-LSN base file `_lsn`) as null. */
-private[sql] case class FileShape(schemaVersion: Int, folds: Boolean)
-
-/** A shape's parquet reader and the bound projection that conforms its
-  * rows; None when the reader's rows already are the scan's. */
-private[sql] case class ShapeReader(read: PartitionedFile => Iterator[InternalRow],
-    conform: Option[Seq[Expression]])
-
-/** Executor side: read each file with its shape's reader, unwrapping the
-  * vectorized reader's type-erased ColumnarBatch elements.
-  *
-  * A bucket with MoR deltas is folded by max LSN per key, the read-side form
-  * of the merge's MaxByRow, over rows laid out as `foldRow`: lsn, op, the
-  * scan's `width` columns, then the key columns it lacks. A base row survives
-  * unless a delta with a higher LSN names its key; a key's newest delta is
-  * emitted unless it is a tombstone or a base row of its key survived it.
-  * Equal LSNs carry identical payloads (the LSN-uniqueness contract), so a
-  * tie may go either way; two base rows of one key (an `append` of a present
-  * key) both survive. The newest deltas are hashed, their bytes acquired
-  * from the task's execution memory, and the base rows streamed past them;
-  * when the task cannot grant the bytes, Spark's spilling sort folds the
-  * bucket instead. */
-class GraftBucketReaderFactory(root: String, readers: Map[FileShape, ShapeReader],
-    foldRow: StructType, keys: Seq[String], width: Int) extends PartitionReaderFactory {
-  private val Delete = UTF8String.fromString("D")
-  private def ref(i: Int) = BoundReference(i, foldRow(i).dataType, nullable = true)
-  private val keyRefs = keys.map(k => ref(foldRow.fieldIndex(k)))
-
+/** Executor side: a bucket with MoR deltas is folded by max LSN per key,
+  * the rest read as stored, both through the snapshot's one
+  * [[graft.cdc.BucketFold]]. */
+class GraftBucketReaderFactory(fold: BucketFold) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftBucketPartition]
-    // one conform projection per shape and task, not per file
-    val conforms = scala.collection.mutable.HashMap.empty[FileShape, Option[UnsafeProjection]]
-    def read(f: lake.DataFile): Iterator[InternalRow] = {
-      val shape = FileShape(f.schemaVersion, p.folds)
-      val reader = readers(shape)
-      val rows = reader.read(Bridge.partitionedFile(s"$root/${f.path}", f.bytes)).flatMap { elem =>
-        (elem: Any) match {
-          case b: ColumnarBatch => b.rowIterator().asScala
-          case r: InternalRow => Iterator.single(r)
-        }
-      }
-      conforms.getOrElseUpdate(shape, reader.conform.map(UnsafeProjection.create)).fold(rows)(rows.map(_))
-    }
     new PartitionReader[InternalRow] {
-      private val rows = if (p.folds) fold(p.files, read) else p.files.iterator.flatMap(read)
+      private val rows = if (p.files.exists(_.kind == "delta")) fold(p.files) else fold.read(p.files)
       private var current: InternalRow = _
       override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
       override def get(): InternalRow = current
       override def close(): Unit = ()
-    }
-  }
-
-  private def fold(files: Seq[lake.DataFile], read: lake.DataFile => Iterator[InternalRow]): Iterator[InternalRow] = {
-    // a folding shape's rows come out of its conform projection
-    val rows = (fs: Seq[lake.DataFile]) => fs.iterator.flatMap(read).map(_.asInstanceOf[UnsafeRow])
-    val keyOf = UnsafeProjection.create(keyRefs)
-    val (deltas, bases) = files.partition(_.kind == "delta")
-    val folded = newestDeltas(rows(deltas), keyOf).fold(sortFold(rows(files), keyOf)) { newest =>
-      // a base row at or above its key's delta beats it: the delta's op is
-      // cleared, and its LSN still judges the key's other base rows
-      rows(bases).filter { r =>
-        val d = newest.get(keyOf(r))
-        d == null || d.getLong(0) <= r.getLong(0) && { d.setNullAt(1); true }
-      } ++ newest.values.iterator.asScala.filter(d => !d.isNullAt(1) && d.getUTF8String(1) != Delete)
-    }
-    folded.map(UnsafeProjection.create((2 until 2 + width).map(ref)))
-  }
-
-  /** Each key's newest delta, held in task execution memory until the task ends; None when not granted. */
-  private def newestDeltas(deltas: Iterator[UnsafeRow], keyOf: UnsafeProjection): Option[java.util.HashMap[UnsafeRow, UnsafeRow]] = {
-    val memory = new MemoryConsumer(Bridge.taskMemoryManager(), MemoryMode.ON_HEAP) {
-      override def spill(size: Long, trigger: MemoryConsumer): Long = 0L
-    }
-    TaskContext.get().addTaskCompletionListener[Unit](_ => memory.freeMemory(memory.getUsed))
-    val newest = new java.util.HashMap[UnsafeRow, UnsafeRow]()
-    var need = 0L
-    while (need <= memory.getUsed && deltas.hasNext) {
-      val r = deltas.next()
-      val k = keyOf(r)
-      val prev = newest.get(k)
-      if (prev == null || prev.getLong(0) < r.getLong(0)) {
-        // a new entry's row objects, array headers, node and slot: about 160 bytes
-        need += r.getSizeInBytes + (if (prev == null) k.getSizeInBytes + 160 else -prev.getSizeInBytes)
-        newest.put(k.copy(), r.copy())
-      }
-      if (need > memory.getUsed) memory.acquireMemory(need - memory.getUsed + (1L << 20))
-    }
-    if (need <= memory.getUsed) Some(newest) else { memory.freeMemory(memory.getUsed); None }
-  }
-
-  /** The fold over rows sorted by key, LSN descending and base rows (op
-    * null) first: of one key, the base rows ahead of its first delta survive,
-    * and so does that delta if no base row came first and it is no tombstone. */
-  private def sortFold(rows: Iterator[UnsafeRow], keyOf: UnsafeProjection): Iterator[InternalRow] = {
-    val order = keyRefs.map(SortOrder(_, Ascending)) ++ Seq(SortOrder(BoundReference(0, LongType, nullable = false),
-      Descending), SortOrder(BoundReference(1, StringType, nullable = true), Ascending))
-    val prefix = new UnsafeExternalRowSorter.PrefixComputer.Prefix // one for all rows: the ordering decides
-    val sorted = UnsafeExternalRowSorter.create(foldRow, new InterpretedOrdering(order), PrefixComparators.LONG,
-      (_: InternalRow) => prefix, Bridge.taskMemoryManager().pageSizeBytes(), false).sort(rows)
-    var key: UnsafeRow = null
-    var base, delta = false
-    sorted.filter { r =>
-      val k = keyOf(r)
-      if (k != key) { key = k.copy(); base = false; delta = false }
-      val keep = !delta && (r.isNullAt(1) || !base && r.getUTF8String(1) != Delete)
-      if (r.isNullAt(1)) base = true else delta = true
-      keep
     }
   }
 }
@@ -374,47 +263,10 @@ class GraftKeyedScan(table: lake.LakeTable, snap: lake.Snapshot,
     new BucketsTotalMetric, new FilesPlannedMetric, new FilesTotalMetric, new DeltaFilesFoldedMetric)
   override def reportDriverMetrics(): Array[CustomTaskMetric] = planMetrics
 
-  /** A folding bucket's columns: the scan's, then the keys it lacks. */
-  private val foldSchema = StructType(scanSchema.fields ++
-    snap.keyColumns.filterNot(scanSchema.fieldNames.contains).map(snap.schema(_)))
-
   override def createReaderFactory(): PartitionReaderFactory = {
     val folding = planned._1.filter(_.kind == "delta").map(_.bucket).toSet
-    val shapes = planned._1.map(f => FileShape(f.schemaVersion, folding(f.bucket))).distinct
-    new GraftBucketReaderFactory(table.root, shapes.map(s => s -> shapeReader(s)).toMap,
-      StructType(StructField("lsn", LongType) +: StructField("op", StringType) +: foldSchema.fields),
-      snap.keyColumns, scanSchema.length)
-  }
-
-  /** One reader per file shape. A file reads the target columns it has —
-    * at the scan's (possibly nested-pruned) type where the column's type
-    * never changed — and is conformed to the target by the rule of
-    * [[graft.cdc.SchemaRegistry.conformedColumns]]; a folding bucket's rows
-    * lead with their (lsn, op), a base row's LSN its stored `_lsn` or -1. */
-  private def shapeReader(s: FileShape): ShapeReader = {
-    val target = if (s.folds) foldSchema else scanSchema
-    val fileSchema = snap.schemaOf(s.schemaVersion)
-    val same = fileSchema.fields.filter(f =>
-      snap.schema.fieldNames.contains(f.name) && snap.schema(f.name).dataType == f.dataType).map(_.name).toSet
-    val read = StructType(target.fields.flatMap(t =>
-      fileSchema.find(_.name == t.name).map(f => if (same(f.name)) t else f)))
-    val meta = if (s.folds) Seq(StructField("lsn", LongType), StructField("op", StringType),
-      StructField("_lsn", LongType)) else Nil
-    val required = StructType(meta ++ read.fields)
-    val lsnOp = if (s.folds) Seq(coalesce(col("lsn"), col("_lsn"), lit(-1L)), col("op")) else Nil
-    val pushable = if (s.folds) snap.keyColumns.toSet else same
-    val fn = Bridge.parquetReader(table.spark, StructType(meta ++ fileSchema.fields), required,
-      scanFilters.filter(_.references.forall(pushable)))
-    if (!s.folds && s.schemaVersion == snap.schemaVersion) ShapeReader(fn, None)
-    else ShapeReader(fn, Some(bind(required, lsnOp ++ graft.cdc.SchemaRegistry.conformedColumns(target, read))))
-  }
-
-  /** `cols` over rows shaped `input`, resolved by the analyzer (names, cast
-    * time zones) and bound to ordinals. */
-  private def bind(input: StructType, cols: Seq[Column]): Seq[Expression] = {
-    val rel = LocalRelation(input)
-    Bridge.ofRows(table.spark, rel).select(cols: _*).queryExecution.analyzed.expressions
-      .map(e => BindReferences.bindReference(e, rel.output))
+    new GraftBucketReaderFactory(BucketFold(table.spark, table.root, snap,
+      planned._1.map(f => FileShape(f.schemaVersion, folding(f.bucket))), scanSchema, scanFilters))
   }
 
   /** Manifest-level statistics (broadcast planning). */

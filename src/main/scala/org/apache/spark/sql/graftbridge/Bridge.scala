@@ -6,15 +6,21 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal accessor for the Column <-> Expression conversions, which are
-  * private[sql] in Spark 4 — required to expose custom Catalyst expressions
-  * (e.g. graft.functions.MaxByRow) through the public Column API, plus the
-  * LogicalPlan -> DataFrame constructor the SQL MERGE command needs. */
+  * private[sql] in Spark 4 — the SQL MERGE command moves its conditions and
+  * assignments between the two — plus the LogicalPlan -> DataFrame and
+  * RDD -> DataFrame constructors. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `rows` as a DataFrame of `schema` (an RDD scan): the rows the engine's
+    * per-bucket fold computes inside its tasks. */
+  def rowsFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** Re-wrap a batch DataFrame as a STREAMING frame (`isStreaming = true`) —
     * the V1 `Source.getBatch` contract. Same private[sql]

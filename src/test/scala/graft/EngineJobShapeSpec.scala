@@ -1,9 +1,16 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -13,8 +20,9 @@ import graft.cdc.model._
 
 /** Engine write jobs carry their shape in their own plans: they leave the
   * session's confs alone, and they keep one file per touched bucket under
-  * whatever AQE and shuffle width the session runs with; a maintenance
-  * rewrite runs one shuffle. */
+  * whatever AQE and shuffle width the session runs with. A merge shuffles
+  * its batch and nothing else; a maintenance rewrite reads its buckets in
+  * place, so it runs no shuffle, and a rebucket one, of the winners. */
 class EngineJobShapeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val aqeKey = "spark.sql.adaptive.enabled"
@@ -38,22 +46,54 @@ class EngineJobShapeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       .toDF("lsn", "op", "repo", "path", "commit", "lang", "content")
   }
 
-  /** Run `op` and assert that the queries it runs plan exactly one shuffle
-    * exchange between them, AQE query stages included. */
-  private def oneShuffle[T](what: String)(op: => T): T = {
+  /** Run `op`: per query it runs, whether the query writes files and its
+    * shuffle exchanges, AQE query stages included; and the shuffle records
+    * the stages of its writes wrote, from the task metrics on the listener
+    * bus. */
+  private def shuffles[T](op: => T): (T, Seq[(Boolean, Int)], Long) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
+    val queries = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
         plans.add(qe.executedPlan); ()
       }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    val out = try { val o = op; awaitStable(plans.size); o }
-    finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val exchanges = plans.asScala.toSeq.map(p => collect(p) { case e: ShuffleExchangeExec => e }.size)
-    assert(exchanges.sum == 1, s"$what: shuffle exchanges per query $exchanges, want one in all")
+    val writes = ConcurrentHashMap.newKeySet[String]()
+    val executionOf = new ConcurrentHashMap[Int, String]()
+    val recordsOf = new ConcurrentHashMap[Int, Long]()
+    val stages = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes.add(s.executionId.toString); ()
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => j.stageIds.foreach(executionOf.put(_, id)))
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        recordsOf.put(s.stageInfo.stageId, s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
+      }
+    }
+    spark.listenerManager.register(queries)
+    spark.sparkContext.addSparkListener(stages)
+    val out = try { val o = op; awaitStable(plans.size + recordsOf.size); o }
+    finally {
+      spark.listenerManager.unregister(queries)
+      spark.sparkContext.removeSparkListener(stages)
+    }
+    val perQuery = plans.asScala.toSeq.map(p => (collect(p) { case w: DataWritingCommandExec => w }.nonEmpty,
+      collect(p) { case e: ShuffleExchangeExec => e }.size))
+    val records = recordsOf.asScala.collect {
+      case (stage, n) if Option(executionOf.get(stage)).exists(writes.contains) => n
+    }.sum
+    (out, perQuery, records)
+  }
+
+  /** Run `op` and assert that the queries it runs plan exactly `want`
+    * shuffle exchanges between them. */
+  private def exchanges[T](what: String, want: Int)(op: => T): T = {
+    val (out, perQuery, _) = shuffles(op)
+    assert(perQuery.map(_._2).sum == want, s"$what: shuffle exchanges per query ${perQuery.map(_._2)}, want $want in all")
     out
   }
 
@@ -117,9 +157,14 @@ class EngineJobShapeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         assert(everyBucket.size == nb, "the seed rows must cover every bucket")
         oneFilePerBucket("append", everyBucket)(assert(t.append(appended).committed))
 
+        // the merge's write shuffles the batch's 20 rows and no stored row
         val sparse = events(all.filter(_ % 19 == 0).take(20), 1000000)
-        oneFilePerBucket("sparse merge", bucketsOf(t, sparse))(
-          assert(t.merge(sparse, epochId = 1).committed))
+        oneFilePerBucket("sparse merge", bucketsOf(t, sparse)) {
+          val (r, perQuery, records) = shuffles(t.merge(sparse, epochId = 1))
+          assert(r.committed)
+          assert(perQuery.collect { case (true, n) => n } == Seq(1), s"sparse merge: (writes, exchanges) $perQuery")
+          assert(records == 20, s"sparse merge: its write shuffled $records records, want the batch's 20")
+        }
 
         val dense = events(all, 2000000)
         oneFilePerBucket("dense merge", everyBucket)(
@@ -136,18 +181,18 @@ class EngineJobShapeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
           buckets
         }
         val deltaBuckets = deltaAppend(all.filter(_ % 13 == 5).take(30), 3)
+        // the maintenance rewrites over delta-bearing buckets fold each
+        // bucket in place: no shuffle, and under a new bucket count one,
+        // of the winners
         oneFilePerBucket("compactDeltas", deltaBuckets)(
-          assert(oneShuffle("compactDeltas")(t.compactDeltas()) == deltaBuckets.size))
-
-        // the maintenance rewrites over delta-bearing buckets: one key
-        // shuffle serves both the delta-resolving aggregate and the write
+          assert(exchanges("compactDeltas", 0)(t.compactDeltas()) == deltaBuckets.size))
         val smallFiles = deltaAppend(all.filter(_ % 17 == 3).take(30), 4)
         oneFilePerBucket("compact", smallFiles)(
-          assert(oneShuffle("compact")(t.compact()) == smallFiles.size))
+          assert(exchanges("compact", 0)(t.compact()) == smallFiles.size))
         deltaAppend(all.filter(_ % 11 == 7).take(30), 5)
-        oneFilePerBucket("cluster", everyBucket)(oneShuffle("cluster")(t.cluster(Seq("content"))))
+        oneFilePerBucket("cluster", everyBucket)(exchanges("cluster", 0)(t.cluster(Seq("content"))))
         deltaAppend(all.filter(_ % 23 == 1).take(30), 6)
-        oneFilePerBucket("rebucket", bucketsOf(t, appended))(oneShuffle("rebucket")(t.rebucket(2 * nb)))
+        oneFilePerBucket("rebucket", bucketsOf(t, appended))(exchanges("rebucket", 1)(t.rebucket(2 * nb)))
         assert(t.snapshot.numBuckets == 2 * nb)
 
         // the layout checks say nothing if the rows are wrong

@@ -17,8 +17,9 @@ import graft.cdc.ingest._
 /** The one SQL table scan (graft.sql.GraftKeyedScan) over every snapshot:
   * MoR deltas folded per bucket, old-schema files conformed per file, and
   * the pruning reported as the scan's own plan metrics. Each answer is
-  * checked against `LakeTable.read()` (the DataFrame API's max-LSN read) or
-  * the generator's oracle. */
+  * checked against `LakeTable.read()` (the DataFrame API's read) or the
+  * generator's oracle; the engine's max-LSN fold behind both is also driven
+  * directly, with a merge's and a delta append's input. */
 class KeyedScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private def freshCatalog(tag: String): String = {
@@ -117,15 +118,24 @@ class KeyedScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='1')")
     spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 'a')")
     spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 'b'), (2, 'c')")
-    def vOf(k: Long) = spark.sql(s"SELECT v FROM $cat.db.t WHERE k = $k").collect().map(_.getString(0)).toSeq.sorted
-    assert(vOf(1) == Seq("a", "b"))
     val t = lakeOf(cat, "t")
+    // key k's values in SQL, once LakeTable.read gave the table SQL gives
+    def vOf(k: Long) = {
+      assert(rows(spark.sql(s"SELECT * FROM $cat.db.t")) == rows(t.read()))
+      spark.sql(s"SELECT v FROM $cat.db.t WHERE k = $k").collect().map(_.getString(0)).toSeq.sorted
+    }
+    assert(vOf(1) == Seq("a", "b"))
     import spark.implicits._
     // a delta for ANOTHER key makes the bucket fold: the duplicates stay
     assert(t.deltaAppend(Seq((2L, "d", 5L, "U")).toDF("k", "v", "lsn", "op"), epochId = 1).committed)
     assert(vOf(1) == Seq("a", "b") && vOf(2) == Seq("d"))
+    // and so they do through the compaction and a CoW merge of the other key
+    assert(t.compactDeltas() == 1)
+    assert(vOf(1) == Seq("a", "b") && vOf(2) == Seq("d"))
+    assert(t.merge(Seq((2L, "x", 6L, "U")).toDF("k", "v", "lsn", "op"), epochId = 2).committed)
+    assert(vOf(1) == Seq("a", "b") && vOf(2) == Seq("x"))
     // a newer delta for the key shadows both base rows
-    assert(t.deltaAppend(Seq((1L, "e", 6L, "U")).toDF("k", "v", "lsn", "op"), epochId = 2).committed)
+    assert(t.deltaAppend(Seq((1L, "e", 7L, "U")).toDF("k", "v", "lsn", "op"), epochId = 3).committed)
     assert(vOf(1) == Seq("e"))
   }
 
@@ -180,6 +190,30 @@ class KeyedScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(hashed.sorted == expected && held > 0, s"the task's execution memory must count the map: $held")
     val (sorted, _, sorterAsked) = KeyedScanSpec.readInTask(spark, factory, part, starve = true)
     assert(sorterAsked && sorted.sorted == expected)
+
+    // the merge's input: the stored rows plus batch rows, one of them stale
+    // (below key 50's stored _lsn 150); then a delta append's winners, with
+    // their tombstones. The hash path and the sort path fold them alike.
+    val snap = t.snapshot
+    val files = t.filesOf(snap)
+    def foldOf(output: BucketFold.Output) = BucketFold(spark, t.root, snap,
+      files.map(f => FileShape(f.schemaVersion, folds = true)), snap.schema, output = output)
+    def bothPaths(fold: BucketFold, files: Seq[DataFile], changes: Seq[(Long, String, String, String)]) = {
+      val (hashed, hashSorterAsked) = KeyedScanSpec.foldInTask(spark, fold, files, changes, starve = false)
+      val (sorted, sorterAsked) = KeyedScanSpec.foldInTask(spark, fold, files, changes, starve = true)
+      assert(!hashSorterAsked && sorterAsked)
+      assert(hashed.sorted == sorted.sorted)
+      hashed.toSet
+    }
+    val merged = bothPaths(foldOf(BucketFold.RowsWithLsn), files, Seq((60L, "U", key(50), "stale"),
+      (2000L, "U", key(60), "new60"), (2000L, "D", key(70), null), (1500L, "U", key(900), "older900"),
+      (2000L, "U", key(900), "n900"), (2000L, "D", key(901), null)))
+    assert(merged.size == expected.size)
+    assert(Set("150,k050,m50", "2000,k060,new60", "2000,k900,n900").subsetOf(merged))
+    assert(!merged.exists(r => r.contains(",k070,") || r.contains(",k901,")))
+    val appended = bothPaths(foldOf(BucketFold.Changes), Nil, Seq((5L, "U", "a", "1"), (7L, "U", "a", "2"),
+      (6L, "D", "a", null), (3L, "D", "b", null), (9L, "I", "c", "3"), (8L, "U", "c", "x")))
+    assert(appended == Set("7,U,a,2", "3,D,b,null", "9,I,c,3"))
   }
 
   test("a pushed LIMIT takes a prefix of delta-free buckets only") {
@@ -299,6 +333,8 @@ object KeyedScanSpec {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
   import org.apache.spark.sql.graftbridge.Bridge
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.unsafe.types.UTF8String
   import org.apache.spark.util.collection.unsafe.sort.UnsafeExternalSorter
 
   /** Holds all of its task's execution memory, and gives it up only when
@@ -315,6 +351,21 @@ object KeyedScanSpec {
     * its execution memory held by a [[Hog]] when `starve`: the rows, the
     * task's execution memory once the reader is built (besides the hog's),
     * and whether a sorter asked the hog for memory. */
+  /** Folds `files` and the `changes` (lsn, op, k, v) through `fold` in a
+    * task, its execution memory held by a [[Hog]] when `starve`: the output
+    * rows, comma-separated, and whether a sorter asked the hog for memory. */
+  def foldInTask(spark: SparkSession, fold: BucketFold, files: Seq[DataFile],
+      changes: Seq[(Long, String, String, String)], starve: Boolean): (Seq[String], Boolean) =
+    spark.sparkContext.parallelize(Seq(0), 1).map { _ =>
+      val hog = if (starve) Some(new Hog) else None
+      val in = changes.iterator.map { case (l, o, k, v) =>
+        InternalRow(l, UTF8String.fromString(o), UTF8String.fromString(k), UTF8String.fromString(v))
+      }
+      val out = fold(files, in).map(_.toSeq(fold.schema).mkString(",")).toList
+      hog.foreach(h => h.freeMemory(h.getUsed))
+      (out, hog.exists(_.sorterAsked))
+    }.collect().head
+
   def readInTask(spark: SparkSession, factory: PartitionReaderFactory, part: InputPartition,
       starve: Boolean): (Seq[String], Long, Boolean) =
     spark.sparkContext.parallelize(Seq(0), 1).map { _ =>

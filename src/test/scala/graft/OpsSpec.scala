@@ -158,26 +158,24 @@ class OpsSpec extends SparkSuite {
       "lsn range filter must reach the parquet scan:\n" + statsPlan.take(1200))
   }
 
-  test("ObjectHashAggregate sort-fallback (tiny threshold) still merges correctly") {
+  test("ReplayEngine leaves the session's confs alone") {
     import graft.cdc._, graft.cdc.lake._, graft.cdc.ingest._, graft.cdc.model._
-    val prev = spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-    try {
-      spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16")
-      val cfg = cdc.gen.GenConfig(n = 8000, nKeys = 1200, numPartitions = 4)
-      val t = LakeTable.createIfNotExists(spark, tmpDir("fb"), "t",
-        RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 4)
-      val eng = new ReplayEngine(t, SchemaRegistry.single(RepoRow.schemaV1))
-      // ReplayEngine only raises the threshold when it is at the 128 default;
-      // our explicit 16 must survive and force the fallback path
-      assert(spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "16")
-      val all = cdc.gen.changeEvents(spark, cfg)
-      (0 until 2).foreach(e => eng.applyEpoch(all.filter(col("lsn") >= e * 4000 && col("lsn") < (e + 1) * 4000), e))
-      val got = t.read().select(col("repo"), col("path"), sha2(col("content"), 256).as("h"))
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-      val exp = cdc.gen.oracleFinalState(cfg)
-      assert(got.size == exp.size)
-      exp.foreach { case (k, e) => assert(got.get(k).contains(cdc.gen.sha256Hex(e.content))) }
-    } finally spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", prev)
+    val threshold = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    assert(spark.conf.get(threshold) == "128", "precondition: the threshold at its default")
+    val before = spark.conf.getAll
+    val cfg = cdc.gen.GenConfig(n = 8000, nKeys = 1200, numPartitions = 4)
+    val t = LakeTable.createIfNotExists(spark, tmpDir("fb"), "t",
+      RepoRow.schemaV1, RepoRow.keyColumns, numBuckets = 4)
+    val eng = new ReplayEngine(t, SchemaRegistry.single(RepoRow.schemaV1))
+    val all = cdc.gen.changeEvents(spark, cfg)
+    (0 until 2).foreach(e => eng.applyEpoch(all.filter(col("lsn") >= e * 4000 && col("lsn") < (e + 1) * 4000), e))
+    assert(spark.conf.get(threshold) == "128")
+    assert(spark.conf.getAll == before)
+    val got = t.read().select(col("repo"), col("path"), sha2(col("content"), 256).as("h"))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+    val exp = cdc.gen.oracleFinalState(cfg)
+    assert(got.size == exp.size)
+    exp.foreach { case (k, e) => assert(got.get(k).contains(cdc.gen.sha256Hex(e.content))) }
   }
 
   test("lang-id covers all five classes on the sf0.01 corpus") {

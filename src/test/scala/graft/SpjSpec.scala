@@ -96,7 +96,7 @@ class SpjSpec extends SparkSuite {
     }
   }
 
-  test("eligibility fallback: MoR deltas and pre-evolution files read via the V1 path") {
+  test("MoR deltas and pre-evolution files read through the one keyed scan") {
     val cat = freshCatalog("el")
     spark.sql(s"CREATE TABLE $cat.db.m (k BIGINT, v STRING) TBLPROPERTIES ('primary_key'='k','buckets'='4')")
     spark.sql(s"INSERT INTO $cat.db.m SELECT id, concat('x', id) FROM range(0, 100)")
