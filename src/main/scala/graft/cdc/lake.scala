@@ -488,12 +488,12 @@ object lake {
       val f = BucketFold(spark, root, snap, files.map(d => FileShape(d.schemaVersion, folds = true)),
         snap.schema, output = output)
       val byTask = files.map(_.copy(stats = None)).groupBy(_.bucket % n)
-      val (in, out) = (batch.schema, f.schema)
+      // built here, under the session's conf (its external datetime types)
+      val (in, out) = (ExpressionEncoder(batch.schema), ExpressionEncoder(f.schema).resolveAndBind())
       byKey(batch, snap, touched).mapPartitions { (rows: Iterator[Row]) =>
-        val toInternal = ExpressionEncoder(in).createSerializer()
-        val toRow = ExpressionEncoder(out).resolveAndBind().createDeserializer()
+        val (toInternal, toRow) = (in.createSerializer(), out.createDeserializer())
         f(byTask.getOrElse(TaskContext.getPartitionId(), Nil), rows.map(toInternal)).map(toRow)
-      }(Encoders.row(out))
+      }(Encoders.row(f.schema))
     }
 
     /** Expose the current table state to Spark SQL as a temp view
@@ -970,11 +970,13 @@ object lake {
     }
 
     /** The batch leg of an apply job (lsn, op, payload at the table's
-      * types: the fold row) and the batch's per-bucket stats from the
+      * types: the fold row, where a null op would mark a stored base row,
+      * so it reads as an upsert) and the batch's per-bucket stats from the
       * [[perBucketStats]] pre-pass (empty for an empty batch). */
     private def batchStats(batch: DataFrame, cur: Snapshot, sums: Seq[Column],
         check: Seq[Long] => Unit): (DataFrame, Map[Int, BucketStats]) =
-      (batch.select((Seq(col("lsn").cast(LongType).as("lsn"), col("op").cast(StringType).as("op")) ++
+      (batch.select((Seq(col("lsn").cast(LongType).as("lsn"),
+        coalesce(col("op").cast(StringType), lit("U")).as("op")) ++
         cur.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name))): _*),
         perBucketStats(batch, cur, sums, check))
 

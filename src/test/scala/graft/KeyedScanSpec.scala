@@ -132,10 +132,11 @@ class KeyedScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     // and so they do through the compaction and a CoW merge of the other key
     assert(t.compactDeltas() == 1)
     assert(vOf(1) == Seq("a", "b") && vOf(2) == Seq("d"))
-    assert(t.merge(Seq((2L, "x", 6L, "U")).toDF("k", "v", "lsn", "op"), epochId = 2).committed)
-    assert(vOf(1) == Seq("a", "b") && vOf(2) == Seq("x"))
+    // (a batch row with a null op is an upsert)
+    assert(t.merge(Seq((2L, "x", 6L, "U"), (3L, "y", 7L, null)).toDF("k", "v", "lsn", "op"), epochId = 2).committed)
+    assert(vOf(1) == Seq("a", "b") && vOf(2) == Seq("x") && vOf(3) == Seq("y"))
     // a newer delta for the key shadows both base rows
-    assert(t.deltaAppend(Seq((1L, "e", 7L, "U")).toDF("k", "v", "lsn", "op"), epochId = 3).committed)
+    assert(t.deltaAppend(Seq((1L, "e", 8L, "U")).toDF("k", "v", "lsn", "op"), epochId = 3).committed)
     assert(vOf(1) == Seq("e"))
   }
 
